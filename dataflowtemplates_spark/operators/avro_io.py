@@ -1,12 +1,13 @@
-"""Pure-Python Avro Object Container File writer/reader (S5 / K2).
+"""Avro Object Container File writer/reader without the spark-avro
+jar (S5 / K2).
 
 The reference's Avro surface is first-class
 (transforms/sinks/AvroDynamicSink.java:33-49 — snappy container files;
 templates/AvroToSpanner.java:75-77 — container read). This sandbox has
 neither the spark-avro datasource jar nor a Python avro package, so
 the container format (public Avro 1.11 spec) is implemented directly —
-the same hand-rolled-codec pattern as the TFRecord writer
-(operators/tfrecord.py), which proves byte-level round-trips in tests.
+the same pattern as the TFRecord writer (operators/tfrecord.py), which
+proves byte-level round-trips in tests.
 
 Format notes:
 * OCF layout: magic ``Obj\\x01`` · file-metadata map (``avro.schema``
@@ -14,32 +15,35 @@ Format notes:
   (row-count, byte-size, payload, sync).
 * Codecs: ``null``, ``deflate`` (raw RFC-1951 via zlib — a REQUIRED
   spec codec), and ``snappy`` (the reference's pinned codec,
-  AvroDynamicSink.java:37): raw-Snappy blocks implemented from the
-  public format description plus the Avro-spec 4-byte big-endian CRC32
-  of the uncompressed data per block (``_snappy_factory``). No snappy
-  library ships in this container, so the codec is hand-rolled like
-  the OCF framing itself; files written this way are readable by any
-  stock Avro reader.
+  AvroDynamicSink.java:37): raw-Snappy blocks plus the Avro-spec
+  4-byte big-endian CRC32 of the uncompressed data per block. Blocks
+  are compressed by Arrow's native snappy codec; the reader
+  decompresses them with a pure-Python raw-Snappy decoder
+  (``_snappy_decompressor``) written from the public format
+  description. Files written this way are readable by any stock Avro
+  reader (the tests read them with Avro's Java implementation).
 * Schemas come from functions/avroschema.py (C13): every field a
   nullable union, decimal bytes, date as logical int days, timestamp
-  as logical timestamp-millis. Naive datetimes are treated as epoch
-  offsets symmetrically on encode and decode, so values round-trip
-  exactly under any session timezone.
+  as logical timestamp-millis. The writer encodes timestamps from the
+  UTC instants Spark holds and the reader returns naive UTC datetimes,
+  so values round-trip exactly whatever the session or process
+  timezone.
 
-Scale stance: encoding runs per-partition on executors (one container
-file per partition, grouped by ``split_field`` like the reference's
-dynamic destinations); only file PATHS return to the driver. Reads
-parallelize over the file list, one decode task per container file.
+Scale stance: the writer is one ``mapInArrow`` stage — each task
+encodes its Arrow record batches column by column and streams one
+container file per partition (per split key, like the reference's
+dynamic destinations); only file paths and row counts return to the
+driver. Reads parallelize over the file list, one decode task per
+container file.
 
 Executor self-containment: the encoder/decoder are built by factory
 functions and captured as CLOSURES (pickled by value), never as module
-attributes — same contract as operators/tfrecord.py's inline helpers.
+attributes — same contract as operators/tfrecord.py's kernels.
 """
 
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +52,7 @@ from dataflowtemplates_spark.operators.fsio import (
     list_files as _list_files,
     resolve_fs as _resolve_fs,
 )
+from dataflowtemplates_spark.operators.arrowkernels import arrow_kernels
 from dataflowtemplates_spark.functions.avroschema import (
     avro_schema_from_spark,
     spark_schema_from_avro,
@@ -69,12 +74,26 @@ class AvroWriteResult:
 
 
 def _encoder_factory():
-    """Returns build(schema_dict) -> (encode_row, zigzag). Self-contained."""
+    """Returns ``build(schema_dict) -> (encode_batch, zigzag)``, where
+    ``encode_batch(batch)`` is the Avro binary encoding of every row of
+    an Arrow record batch (extra columns such as a split key are
+    ignored). Self-contained: the closures pickle by value.
+
+    Encoding is columnar: each field converts its whole Arrow column
+    once (timestamps and dates through their integer storage, so values
+    are the UTC instants Spark holds, never shifted by a local
+    timezone), then rows are assembled by joining their fields' bytes.
+    Nested arrays, maps and records recurse on the child arrays. Null
+    slots encode as anything: the enclosing union drops them. No pandas
+    is loaded (operators/arrowkernels.py).
+    """
+
+    k = arrow_kernels()
 
     def build(schema):
-        import struct as _struct
-        from datetime import date as _date, datetime as _dt
-        from decimal import Decimal as _Dec
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         def zigzag(n):
             n = (n << 1) ^ (n >> 63)
@@ -88,93 +107,132 @@ def _encoder_factory():
                     out.append(b)
                     return bytes(out)
 
-        def enc_blob(b):
-            return zigzag(len(b)) + b
+        def zigzags(v):
+            """zigzag longs of an int64 numpy array, in one pass."""
+            return k.varints(((v << 1) ^ (v >> 63)).view(np.uint64))
 
-        def enc_str(v):
-            return enc_blob(v.encode("utf-8") if isinstance(v, str)
-                            else bytes(v))
+        def ints(arr):
+            return zigzags(k.numbers(arr.cast(pa.int64())))
+
+        def enc_blobs(arr):
+            arr = k.binary(arr)
+            return [b"" if v is None else n + v for n, v in
+                    zip(ints(pc.binary_length(arr)), arr.to_pylist())]
+
+        def fixed_width(arr, fmt):
+            raw = k.numbers(arr.cast(pa.float64())).astype(fmt).tobytes()
+            w = int(fmt[-1])
+            return [raw[i:i + w] for i in range(0, len(raw), w)]
+
+        def non_null(arr, what):
+            if arr.null_count:
+                raise ValueError(f"Avro {what} are not nullable; found "
+                                 f"{arr.null_count} null(s)")
+
+        def blocks(offsets, items):
+            """Avro array/map blocks: one count-prefixed block per slot
+            (``items`` holds the encoded children of all slots)."""
+            offs = (offsets - offsets[0]).tolist()
+            return [zigzag(e - s) + b"".join(items[s:e]) + b"\x00"
+                    if e > s else b"\x00"
+                    for s, e in zip(offs, offs[1:])]
 
         def make(t):
             if isinstance(t, list):  # union — avroschema emits [null, T]
                 null_at = t.index("null")
                 other = [x for x in t if x != "null"]
                 assert len(other) == 1, f"unsupported union {t}"
-                val_ix, val_enc = 1 - null_at, make(other[0])
+                inner = make(other[0])
+                pre_null, pre_val = zigzag(null_at), zigzag(1 - null_at)
 
-                def enc_union(v):
-                    if v is None:
-                        return zigzag(null_at)
-                    return zigzag(val_ix) + val_enc(v)
+                def enc_union(arr):
+                    vals = inner(arr)
+                    if not arr.null_count:
+                        return [pre_val + v for v in vals]
+                    return [pre_val + v if ok else pre_null
+                            for v, ok in zip(vals, arr.is_valid().to_pylist())]
                 return enc_union
             if isinstance(t, dict):
                 logical = t.get("logicalType")
                 base = t["type"]
                 if logical == "date":
-                    def enc_date(v):
-                        if isinstance(v, _dt):
-                            v = v.date()
-                        return zigzag((v - _date(1970, 1, 1)).days)
-                    return enc_date
+                    return lambda arr: ints(arr.cast(pa.int32()))
                 if logical in ("timestamp-millis", "timestamp-micros"):
-                    unit = 1000 if logical == "timestamp-millis" else 1000000
+                    per_unit = 1000 if logical == "timestamp-millis" else 1
 
-                    def enc_ts(v):
-                        delta = v.replace(tzinfo=None) - _dt(1970, 1, 1)
-                        micros = ((delta.days * 86400 + delta.seconds)
-                                  * 1000000 + delta.microseconds)
-                        return zigzag(micros * unit // 1000000)
+                    def enc_ts(arr):
+                        # the UTC instant Spark holds, floored to the unit
+                        if arr.type.unit != "us":
+                            arr = arr.cast(pa.timestamp("us", arr.type.tz))
+                        return zigzags(k.numbers(arr) // per_unit)
                     return enc_ts
                 if logical == "decimal":
                     scale = t.get("scale", 0)
 
-                    def enc_dec(v):
-                        unscaled = int(_Dec(v).scaleb(scale))
-                        nbytes = max(1, (unscaled.bit_length() + 8) // 8)
-                        return enc_blob(unscaled.to_bytes(nbytes, "big",
-                                                          signed=True))
+                    def enc_dec(arr):
+                        out = []
+                        for v in arr.to_pylist():
+                            if v is None:
+                                out.append(b"")
+                                continue
+                            unscaled = int(v.scaleb(scale))
+                            nbytes = max(1, (unscaled.bit_length() + 8) // 8)
+                            b = unscaled.to_bytes(nbytes, "big", signed=True)
+                            out.append(zigzag(nbytes) + b)
+                        return out
                     return enc_dec
                 if base == "array":
                     item = make(t["items"])
+                    nullable = isinstance(t["items"], list)
 
-                    def enc_arr(v):
-                        v = list(v)
-                        if not v:
-                            return zigzag(0)
-                        return (zigzag(len(v))
-                                + b"".join(item(x) for x in v) + zigzag(0))
+                    def enc_arr(arr):
+                        offsets = k.numbers(arr.offsets)
+                        vals = arr.values.slice(
+                            int(offsets[0]), int(offsets[-1] - offsets[0]))
+                        if not nullable:
+                            non_null(vals, "array items")
+                        return blocks(offsets, item(vals))
                     return enc_arr
                 if base == "map":
                     val = make(t["values"])
+                    nullable = isinstance(t["values"], list)
 
-                    def enc_map(v):
-                        items = dict(v)
-                        if not items:
-                            return zigzag(0)
-                        body = b"".join(enc_str(k) + val(x)
-                                        for k, x in items.items())
-                        return zigzag(len(items)) + body + zigzag(0)
+                    def enc_map(arr):
+                        offsets = k.numbers(arr.offsets)
+                        entries = arr.values.slice(
+                            int(offsets[0]), int(offsets[-1] - offsets[0]))
+                        keys = enc_blobs(entries.field(0).cast(pa.string()))
+                        vals = entries.field(1)
+                        if not nullable:
+                            non_null(vals, "map values")
+                        vals = val(vals)
+                        return blocks(offsets,
+                                      [k + v for k, v in zip(keys, vals)])
                     return enc_map
                 if base == "record":
                     fields = [(f["name"], make(f["type"]))
                               for f in t["fields"]]
 
-                    def enc_rec(v):
-                        return b"".join(e(v[n]) for n, e in fields)
+                    def enc_rec(arr):
+                        child = (arr.column if isinstance(arr, pa.RecordBatch)
+                                 else arr.field)
+                        cols = [enc(child(name)) for name, enc in fields]
+                        if not cols:
+                            return [b""] * len(arr)
+                        return [b"".join(r) for r in zip(*cols)]
                     return enc_rec
                 return make(base)  # {"type": "string", "sqlType": ...}
             if t == "boolean":
-                return lambda v: b"\x01" if v else b"\x00"
+                return lambda arr: [b"\x01" if v else b"\x00"
+                                    for v in arr.to_pylist()]
             if t in ("int", "long"):
-                return lambda v: zigzag(int(v))
+                return ints
             if t == "float":
-                return lambda v: _struct.pack("<f", v)
+                return lambda arr: fixed_width(arr, "<f4")
             if t == "double":
-                return lambda v: _struct.pack("<d", v)
-            if t == "string":
-                return enc_str
-            if t == "bytes":
-                return enc_str
+                return lambda arr: fixed_width(arr, "<f8")
+            if t in ("string", "bytes"):
+                return enc_blobs
             raise ValueError(f"no encoder for Avro type {t!r}")
 
         return make(schema), zigzag
@@ -182,86 +240,20 @@ def _encoder_factory():
     return build
 
 
-def _snappy_factory():
-    """Returns (compress, decompress) for RAW Snappy block format —
+def _snappy_decompressor():
+    """Returns ``decompress(block)`` for the RAW Snappy block format —
     implemented from the public format description
-    (google/snappy format_description.txt), self-contained closures
-    like the encoder/decoder factories.
+    (google/snappy format_description.txt), a self-contained closure
+    like the decoder factory.
 
     Avro's snappy codec (spec: Object Container Files / Required
     Codecs) is raw-Snappy per block followed by the 4-byte big-endian
     CRC32 of the UNCOMPRESSED data; the CRC handling lives at the call
-    sites, this factory is pure block codec. The compressor is a greedy
-    hash-of-4-bytes matcher emitting 2-byte-offset copies — modest
-    ratios at pure-Python speed, which is the correct trade for this
-    jar-less seam (production writes go through spark-avro + native
-    snappy; this path exists so `codec="snappy"` produces files any
-    Avro reader accepts, reference: AvroDynamicSink.java:37).
+    sites. Blocks are WRITTEN with Arrow's native snappy codec
+    (``pyarrow.Codec("snappy")``, which emits exactly this raw block
+    format); this pure-Python decompressor is the reader, and the
+    independent reference the writer's blocks are tested against.
     """
-
-    def _uvarint(n: int) -> bytes:
-        out = bytearray()
-        while n >= 0x80:
-            out.append((n & 0x7F) | 0x80)
-            n >>= 7
-        out.append(n)
-        return bytes(out)
-
-    def compress(data: bytes) -> bytes:
-        n = len(data)
-        out = bytearray(_uvarint(n))
-
-        def emit_literal(start: int, end: int) -> None:
-            ln = end - start - 1
-            if ln < 60:
-                out.append(ln << 2)
-            elif ln < (1 << 8):
-                out.append(60 << 2)
-                out.append(ln)
-            elif ln < (1 << 16):
-                out.append(61 << 2)
-                out.extend(ln.to_bytes(2, "little"))
-            elif ln < (1 << 24):
-                out.append(62 << 2)
-                out.extend(ln.to_bytes(3, "little"))
-            else:
-                out.append(63 << 2)
-                out.extend(ln.to_bytes(4, "little"))
-            out.extend(data[start:end])
-
-        table: dict[int, int] = {}
-        i = lit_start = 0
-        limit = n - 4
-        while i <= limit:
-            key = int.from_bytes(data[i:i + 4], "little")
-            cand = table.get(key)
-            table[key] = i
-            if cand is None or i - cand > 0xFFFF \
-                    or data[cand:cand + 4] != data[i:i + 4]:
-                i += 1
-                continue
-            # extend the match
-            m = i + 4
-            c = cand + 4
-            while m < n and data[m] == data[c]:
-                m += 1
-                c += 1
-            if lit_start < i:
-                emit_literal(lit_start, i)
-            off = i - cand
-            mlen = m - i
-            while mlen >= 4:
-                chunk = min(60, mlen)
-                if 0 < mlen - chunk < 4:
-                    chunk = mlen - 4
-                out.append(((chunk - 1) << 2) | 0b10)
-                out += off.to_bytes(2, "little")
-                mlen -= chunk
-            i = m - mlen  # mlen in 0..3 tail bytes rejoin the literal run
-            lit_start = i
-        if lit_start < n:
-            emit_literal(lit_start, n)
-        return bytes(out)
 
     def decompress(data: bytes) -> bytes:
         pos = 0
@@ -316,21 +308,24 @@ def _snappy_factory():
                 f"snappy: declared {n} bytes, got {len(out)}")
         return bytes(out)
 
-    return compress, decompress
+    return decompress
 
 
 def _decoder_factory():
-    """Returns decode(raw_bytes) -> (schema_dict, rows). Self-contained
-    (the snappy codec is built here and rides the closure by value)."""
+    """Returns decode(raw_bytes, utc=False) -> (schema_dict, rows).
+    Timestamps decode as naive UTC datetimes, or as UTC-aware ones with
+    ``utc=True`` (what ``createDataFrame`` needs to keep the instant
+    under any process timezone). Self-contained (the snappy decoder is
+    built here and rides the closure by value)."""
 
-    snappy_decompress = _snappy_factory()[1]
+    snappy_decompress = _snappy_decompressor()
 
-    def decode(raw):
+    def decode(raw, utc=False):
         import json as _json
         import struct as _struct
         import zlib as _zlib
         from datetime import date as _date, datetime as _dt, \
-            timedelta as _td
+            timedelta as _td, timezone as _tz
         from decimal import Decimal as _Dec
 
         class Cur:
@@ -383,7 +378,8 @@ def _decoder_factory():
                     return lambda c: _date(1970, 1, 1) + _td(days=c.zig())
                 if logical in ("timestamp-millis", "timestamp-micros"):
                     unit = 1000 if logical == "timestamp-millis" else 1
-                    return lambda c: (_dt(1970, 1, 1)
+                    epoch = _dt(1970, 1, 1, tzinfo=_tz.utc if utc else None)
+                    return lambda c: (epoch
                                       + _td(microseconds=c.zig() * unit))
                 if logical == "decimal":
                     scale = t.get("scale", 0)
@@ -472,12 +468,21 @@ def write_avro(df: DataFrame, path: str, split_field: str | None = None,
     """Write ``df`` as Avro container files, one per partition (grouped
     into per-key subdirectories when ``split_field`` is set, matching
     the reference's dynamic destinations). Returns written paths plus
-    the row count (tallied during the single encode pass — callers
+    the row count (tallied during the single write pass — callers
     never need a separate count job).
 
+    One ``mapInArrow`` stage does all the work: each task encodes its
+    Arrow record batches column by column, cuts blocks of
+    ``rows_per_block`` rows per file, and streams
+    ``{prefix}-{partition:05d}.avro`` through ``pyarrow.fs``; only
+    (file, rows) pairs come back. Without ``split_field`` the input
+    partitions are written as they are (one file per non-empty
+    partition); with it, rows are first shuffled by split key
+    (``repartition`` on the key, sized by AQE).
+
     ``codec="snappy"`` produces real snappy blocks (reference parity:
-    AvroDynamicSink.java:37) via the pure-Python raw-Snappy codec plus
-    the Avro-spec 4-byte big-endian CRC32 of the uncompressed block.
+    AvroDynamicSink.java:37) via Arrow's native snappy codec plus the
+    Avro-spec 4-byte big-endian CRC32 of the uncompressed block.
     """
     codec_name = (codec or "null").lower()
     if codec_name in ("none", "uncompressed"):
@@ -487,32 +492,26 @@ def write_avro(df: DataFrame, path: str, split_field: str | None = None,
     fs0, base0 = _resolve_fs(path)
     fs0.create_dir(base0, recursive=True)
 
-    if split_field is not None:
-        data_cols = list(df.columns)
-        work = (df.withColumn(
+    schema_json = json.dumps(avro_schema_from_spark(df.schema))
+    has_split = split_field is not None
+    if has_split:
+        df = (df.withColumn(
             "_split",
             F.coalesce(F.col(split_field).cast("string"), F.lit("")))
             .repartition(F.col("_split")))
-        avro = avro_schema_from_spark(df.select(*data_cols).schema)
-    else:
-        work = df
-        avro = avro_schema_from_spark(df.schema)
-    schema_json = json.dumps(avro)
     build_encoder = _encoder_factory()
-    # built on the driver, captured by value in the per_part closure —
-    # same executor self-containment contract as build_encoder
-    sn_compress = (_snappy_factory()[0] if codec_name == "snappy" else None)
+    k = arrow_kernels()
     magic = MAGIC
-    has_split = split_field is not None
 
-    def per_part(idx, rows):
-        import io as _io
+    def write_task(batches):
         import json as _json
         import os as _os
         import posixpath as _pp
         import zlib as _zlib
 
+        import pyarrow as pa
         import pyarrow.fs as _pafs
+        from pyspark import TaskContext
 
         # executor-side scheme resolution: file://, hdfs://, s3://,
         # gs:// all stream from the task (same stance as the K3 writer)
@@ -528,59 +527,81 @@ def write_avro(df: DataFrame, path: str, split_field: str | None = None,
                 c = _zlib.compressobj(9, _zlib.DEFLATED, -15)
                 return c.compress(b) + c.flush()
         elif codec_name == "snappy":
+            snappy = pa.Codec("snappy")
+
             def compress(b):
                 # Avro spec: snappy block + big-endian CRC32 of the
                 # UNCOMPRESSED data
-                return (sn_compress(b)
+                return (snappy.compress(b, asbytes=True)
                         + (_zlib.crc32(b) & 0xFFFFFFFF).to_bytes(4, "big"))
         else:
             def compress(b):
                 return b
 
-        enc_row, zigzag = build_encoder(_json.loads(schema_json))
-        sync = _os.urandom(16)
+        encode, zigzag = build_encoder(_json.loads(schema_json))
         sj = schema_json.encode()
         cd = codec_name.encode()
-        header = (magic + zigzag(2)
-                  + zigzag(11) + b"avro.schema" + zigzag(len(sj)) + sj
-                  + zigzag(10) + b"avro.codec" + zigzag(len(cd)) + cd
-                  + zigzag(0) + sync)
+        name = f"{prefix}-{TaskContext.get().partitionId():05d}.avro"
+        open_files = {}  # split key -> open container file
 
-        def flush(fh, buf, count):
-            payload = compress(buf.getvalue())
-            fh.write(zigzag(count) + zigzag(len(payload)) + payload + sync)
+        def sink(key):
+            st = open_files.get(key)
+            if st is None:
+                subdir = base if key == "" else _pp.join(base, key)
+                if key != "":
+                    fs.create_dir(subdir, recursive=True)
+                target = _pp.join(subdir, name)
+                fh = fs.open_output_stream(target, compression=None)
+                sync = _os.urandom(16)
+                fh.write(magic + zigzag(2)
+                         + zigzag(11) + b"avro.schema" + zigzag(len(sj)) + sj
+                         + zigzag(10) + b"avro.codec" + zigzag(len(cd)) + cd
+                         + zigzag(0) + sync)
+                st = open_files[key] = {"fh": fh, "sync": sync,
+                                        "pending": [], "target": target,
+                                        "rows": 0}
+            return st
 
-        by_key: dict[str, list] = {}
-        for r in rows:
-            key = r["_split"] if has_split else ""
-            by_key.setdefault(key, []).append(r)
-        written = []
-        for key, krows in by_key.items():
-            subdir = base if key == "" else _pp.join(base, key)
-            if key != "":
-                fs.create_dir(subdir, recursive=True)
-            target = _pp.join(subdir, f"{prefix}-{idx:05d}.avro")
-            total = 0
-            with fs.open_output_stream(target, compression=None) as fh:
-                fh.write(header)
-                buf, count = _io.BytesIO(), 0
-                for r in krows:
-                    d = r.asDict(recursive=True)
-                    d.pop("_split", None)
-                    buf.write(enc_row(d))
-                    count += 1
-                    total += 1
-                    if count >= rows_per_block:
-                        flush(fh, buf, count)
-                        buf, count = _io.BytesIO(), 0
-                if count:
-                    flush(fh, buf, count)
-            written.append((spfx + target, total))
-        return iter(written)
+        def flush(st, count):
+            payload = compress(b"".join(st["pending"][:count]))
+            st["fh"].write(zigzag(count) + zigzag(len(payload)) + payload
+                           + st["sync"])
+            del st["pending"][:count]
 
-    stats = work.rdd.mapPartitionsWithIndex(per_part).collect()
-    return AvroWriteResult(files=sorted(p for p, _n in stats),
-                           row_count=sum(n for _p, n in stats))
+        try:
+            for batch in batches:
+                if not batch.num_rows:
+                    continue
+                rows = encode(batch)
+                if has_split:
+                    groups = {}
+                    for row, key in zip(
+                            rows, batch.column("_split").to_pylist()):
+                        groups.setdefault(key, []).append(row)
+                else:
+                    groups = {"": rows}
+                for key, chunk in groups.items():
+                    st = sink(key)
+                    st["pending"].extend(chunk)
+                    st["rows"] += len(chunk)
+                    while len(st["pending"]) >= rows_per_block:
+                        flush(st, rows_per_block)
+            for st in open_files.values():
+                if st["pending"]:
+                    flush(st, len(st["pending"]))
+        finally:
+            for st in open_files.values():
+                st["fh"].close()
+        written = sorted((spfx + st["target"], st["rows"])
+                         for st in open_files.values())
+        yield pa.RecordBatch.from_arrays(
+            [k.array([f for f, _ in written], pa.string()),
+             k.array([n for _, n in written], pa.int64())],
+            names=["file", "rows"])
+
+    stats = df.mapInArrow(write_task, "file string, rows long").collect()
+    return AvroWriteResult(files=sorted(r.file for r in stats),
+                           row_count=sum(r.rows for r in stats))
 
 
 _decode = _decoder_factory()
@@ -727,7 +748,7 @@ def read_avro(spark: SparkSession, path: str,
         else:
             fs, lp = _pafs.LocalFileSystem(), p
         with fs.open_input_stream(lp) as fh:
-            wschema, rows = decode(fh.read())
+            wschema, rows = decode(fh.read(), utc=True)
         if build_resolver is not None:
             adapt = build_resolver(wschema, _json.loads(reader_json))
             rows = [adapt(r) for r in rows]

@@ -26,23 +26,25 @@ Reference type lowering reproduced (RecordToTFRecordConverter.java):
   `:165`; the evident intent, elements of the array, is implemented
   here. Divergence documented per SURVEY §7.3.)
 
-Execution shape: `mapInPandas` — Arrow-batched, one encoded-bytes
-column out; each partition writes its own .tfrecord(.gz) file, so the
-write parallelizes like any file sink (no driver collect).
+Execution shape: the sink is ONE ``mapInArrow`` stage. Each task
+encodes Examples straight from its Arrow record batches (one column
+conversion per batch, exact 64-bit ints), frames them with a batched
+numpy CRC32C, and streams its own .tfrecord(.gz) file(s) through
+``pyarrow.fs`` — no pandas, no driver collect of data. The module-level
+protobuf helpers (``_example`` and friends) are the byte-level
+reference the kernel is tested against.
 """
 
 from __future__ import annotations
 
 import gzip
-import os
 import struct
-import zlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from dataflowtemplates_spark.functions.convert import flatten_for_tfrecord
 from dataflowtemplates_spark.operators.fsio import resolve_fs as _resolve_fs
+from dataflowtemplates_spark.operators.arrowkernels import arrow_kernels
 
 # ---------------------------------------------------------------------------
 # Minimal protobuf writers (wire format is public and stable)
@@ -59,10 +61,6 @@ def _varint(n: int) -> bytes:
         else:
             out.append(b)
             return bytes(out)
-
-
-def _zigzag64(n: int) -> int:
-    return (n << 1) ^ (n >> 63)
 
 
 def _tag(field_no: int, wire_type: int) -> bytes:
@@ -112,34 +110,98 @@ def _example(features: dict[str, tuple[str, bytes]]) -> bytes:
 # ---------------------------------------------------------------------------
 
 _CRC_MASK = 0xA282EAD8
-_CRC32C_TABLE: list[int] | None = None
+
+#: below this many records still being hashed, the batched CRC32C
+#: kernel finishes the remaining (longest) records one byte at a time
+#: in Python: a numpy step costs a few microseconds whatever its width
+_CRC_MIN_LANES = 64
 
 
-def _crc32c_table() -> list[int]:
-    global _CRC32C_TABLE
-    if _CRC32C_TABLE is None:
-        poly = 0x82F63B78  # Castagnoli, reflected
-        table = []
-        for i in range(256):
-            crc = i
-            for _ in range(8):
-                crc = (crc >> 1) ^ poly if crc & 1 else crc >> 1
-            table.append(crc)
-        _CRC32C_TABLE = table
-    return _CRC32C_TABLE
+def _crc32c_factory():
+    """Returns ``masked_crcs(records) -> numpy uint32 array``: the
+    masked CRC32C (Castagnoli, TFRecord's ``masked_crc32c``) of every
+    record in one call.
+
+    Records are hashed side by side, one byte position per numpy step
+    across all records still longer than that position (records sorted
+    longest first, so the live ones are always a prefix). When fewer
+    than ``_CRC_MIN_LANES`` remain, the tail finishes in a scalar
+    Python loop. Self-contained like the encoder factories: the closure
+    pickles by value and needs only numpy on the executor.
+    """
+    import numpy as np
+
+    poly = 0x82F63B78  # Castagnoli, reflected
+    table = np.arange(256, dtype=np.uint32)
+    for _ in range(8):
+        table = np.where(table & 1, (table >> 1) ^ np.uint32(poly),
+                         table >> 1).astype(np.uint32)
+    py_table = table.tolist()
+    mask = np.uint32(_CRC_MASK)
+    min_lanes = _CRC_MIN_LANES
+
+    def masked_crcs(records):
+        n = len(records)
+        lens = np.fromiter(map(len, records), np.int64, n)
+        blob = b"".join(records)
+        buf = np.frombuffer(blob, np.uint8)
+        starts = np.zeros(n, np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        order = np.argsort(-lens, kind="stable")
+        neg_lens = -lens[order]  # ascending
+        starts = starts[order]
+        crc = np.full(n, 0xFFFFFFFF, np.uint32)
+        j = 0
+        while True:
+            # records longer than j: a prefix of the longest-first order
+            live = int(np.searchsorted(neg_lens, -j, side="left"))
+            if live < min_lanes:
+                break
+            c = crc[:live]
+            crc[:live] = table[(c ^ buf[starts[:live] + j]) & 0xFF] ^ (c >> 8)
+            j += 1
+        for r in range(live):
+            c = int(crc[r])
+            for b in blob[starts[r] + j:starts[r] - neg_lens[r]]:
+                c = py_table[(c ^ b) & 0xFF] ^ (c >> 8)
+            crc[r] = c
+        crc ^= np.uint32(0xFFFFFFFF)
+        out = np.empty(n, np.uint32)
+        out[order] = ((crc >> 15) | (crc << 17)) + mask
+        return out
+
+    return masked_crcs
 
 
-def _crc32c(data: bytes) -> int:
-    table = _crc32c_table()
-    crc = 0xFFFFFFFF
-    for b in data:
-        crc = table[(crc ^ b) & 0xFF] ^ (crc >> 8)
-    return crc ^ 0xFFFFFFFF
+_masked_crcs = _crc32c_factory()
 
 
 def _masked_crc(data: bytes) -> int:
-    crc = _crc32c(data)
-    return ((crc >> 15) | (crc << 17)) + _CRC_MASK & 0xFFFFFFFF
+    return int(_masked_crcs([data])[0])
+
+
+def _framer_factory():
+    """Returns ``frame_all(payloads) -> list[bytes]``: every payload
+    framed as a TFRecord, with all header and payload CRCs of the call
+    computed in one batched CRC32C pass. Self-contained."""
+    masked_crcs = _crc32c_factory()
+
+    def frame_all(payloads):
+        import numpy as np
+
+        n = len(payloads)
+        if not n:
+            return []
+        lens = np.fromiter(map(len, payloads), np.uint64, n)
+        hdr = lens.astype("<u8").tobytes()
+        headers = [hdr[i:i + 8] for i in range(0, 8 * n, 8)]
+        crcs = masked_crcs(headers + list(payloads)).astype("<u4").tobytes()
+        hcrc = [crcs[i:i + 4] for i in range(0, 4 * n, 4)]
+        pcrc = [crcs[i:i + 4] for i in range(4 * n, 8 * n, 4)]
+        return [h + hc + p + pc
+                for h, hc, p, pc in zip(headers, hcrc, payloads, pcrc)]
+
+    return frame_all
 
 
 def frame_record(payload: bytes) -> bytes:
@@ -167,67 +229,69 @@ def read_tfrecords(path: str) -> list[bytes]:
 
 
 # ---------------------------------------------------------------------------
-# Column lowering + the sink
+# Column lowering + the Example kernel
 # ---------------------------------------------------------------------------
 
 
-def _lowering(dt: T.DataType):
-    """-> (kind, python encoder for one scalar)."""
-    if isinstance(dt, T.StringType):
-        return "bytes", lambda v: v.encode()
-    if isinstance(dt, T.BinaryType):
-        return "bytes", lambda v: bytes(v)
+def _lowering(dt: T.DataType) -> tuple[str, str]:
+    """-> (feature kind, value conversion the kernel applies)."""
+    if isinstance(dt, T.StringType | T.BinaryType):
+        return "bytes", "bytes"
     if isinstance(dt, T.BooleanType):
-        return "int64", lambda v: 1 if v else 0  # reference :89-90
+        return "int64", "bool"  # reference :89-90
     if isinstance(dt, T.LongType | T.IntegerType | T.ShortType | T.ByteType):
-        return "int64", int
+        return "int64", "int"
     if isinstance(dt, T.FloatType | T.DoubleType):
-        return "float", float
+        return "float", "float"
     if isinstance(dt, T.DecimalType):
-        return "float", float  # reference :75-79
+        return "float", "decimal"  # reference :75-79
     if isinstance(dt, T.DateType):
-        return "bytes", lambda v: v.isoformat().encode()
+        return "bytes", "date"
     if isinstance(dt, T.TimestampType | T.TimestampNTZType):
-        return "int64", lambda v: int(v.timestamp())
+        return "int64", "ts"
     raise ValueError(f"no TFRecord lowering for {dt}")
 
 
-def encode_examples(df: DataFrame,
-                    passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """DataFrame -> one `example` binary column of serialized TF Examples
-    (+ any ``passthrough`` columns carried alongside, e.g. a split key).
-
-    Nested structs are flattened `a_b`-style first; encoding runs in
-    Arrow-batched mapInPandas so the per-row Python cost is amortized
-    per batch and fully distributed.
-    """
+def _feature_source(df: DataFrame, passthrough: tuple[str, ...] = ()):
+    """-> (frame of ``passthrough`` columns then the flattened feature
+    columns, the Example kernel for that frame's Arrow batches)."""
     from pyspark.sql import functions as F
 
     from dataflowtemplates_spark.functions.convert import flatten_columns
 
-    feature_cols = flatten_columns(df, skip=passthrough)
-    source = df.select(*[F.col(c) for c in passthrough], *feature_cols)
-
+    source = df.select(*[F.col(c) for c in passthrough],
+                       *flatten_columns(df, skip=passthrough))
     plans = []
     for f in source.schema.fields[len(passthrough):]:
-        if isinstance(f.dataType, T.ArrayType):
-            kind, enc = _lowering(f.dataType.elementType)
-            plans.append((f.name, kind, enc, True))
-        else:
-            kind, enc = _lowering(f.dataType)
-            plans.append((f.name, kind, enc, False))
+        is_arr = isinstance(f.dataType, T.ArrayType)
+        kind, conv = _lowering(f.dataType.elementType if is_arr
+                               else f.dataType)
+        plans.append((f.name, kind, conv, is_arr))
+    return source, _example_kernel_factory()(plans, len(passthrough))
 
-    n_pass = len(passthrough)
 
-    # NOTE executor self-containment: every function the closure touches
-    # is defined inside it. Module-level helpers would be pickled BY
-    # REFERENCE, requiring this package on each Python worker's
-    # PYTHONPATH — nested defs are pickled by value and just work,
-    # whether or not the package was shipped with --py-files.
-    def encode_batches(batches):
-        import struct
+def _example_kernel_factory():
+    """Returns ``build(plans, first) -> encode(batch) -> list[bytes]``:
+    the serialized Example of every row of an Arrow record batch whose
+    feature columns start at index ``first``.
 
-        import pandas as pd
+    Byte-identical to the module-level reference ``_example`` over the
+    same values: features in name order; null features skipped, and
+    NaN float features too; null (and NaN) array elements dropped;
+    bool -> int64 0/1, decimal -> float32, date -> ISO bytes, timestamp
+    -> whole epoch seconds truncated toward zero. Each column converts
+    once per batch from Arrow (ints stay exact 64-bit values whatever
+    the nulls around them; varints and float32s are computed for the
+    whole column in numpy, without loading pandas — see
+    operators/arrowkernels.py); per value, only a cached
+    length-dependent prefix is prepended. Self-contained: the closures
+    pickle by value.
+    """
+    k = arrow_kernels()
+
+    def build(plans, first):
+        import numpy as np
+        import pyarrow as pa
 
         def varint(n):
             out = bytearray()
@@ -240,82 +304,181 @@ def encode_examples(df: DataFrame,
                     out.append(b)
                     return bytes(out)
 
-        def tag(field_no, wire_type):
-            return varint((field_no << 3) | wire_type)
-
         def ld(field_no, payload):
-            return tag(field_no, 2) + varint(len(payload)) + payload
+            return varint((field_no << 3) | 2) + varint(len(payload)) + payload
 
-        builders = {
-            "bytes": lambda vs: b"".join(ld(1, v) for v in vs),
-            "float": lambda vs: ld(1, struct.pack(f"<{len(vs)}f", *vs)),
-            "int64": lambda vs: ld(1, b"".join(
-                varint(v & 0xFFFFFFFFFFFFFFFF) for v in vs)),
-        }
+        class Prefixes(dict):
+            """Length of what follows -> the bytes before it (all
+            protobuf framing around a value depends only on lengths)."""
+
+            def __init__(self, wrap):
+                super().__init__()
+                self.wrap = wrap
+
+            def __missing__(self, n):
+                pre = self[n] = self.wrap(bytes(n))[:-n or None]
+                return pre
+
+        def elements(arr, conv):
+            """Arrow array -> per-slot wire value (packed varint, float32
+            or raw bytes), None where the slot is skipped (null, or NaN
+            for floats)."""
+            if conv == "bytes":
+                return k.binary(arr).to_pylist()
+            if conv == "date":
+                return [None if d is None else d.isoformat().encode()
+                        for d in arr.to_pylist()]
+            if conv in ("float", "decimal"):
+                if conv == "decimal":
+                    f64 = np.array([np.nan if d is None else float(d)
+                                    for d in arr.to_pylist()], np.float64)
+                else:
+                    f64 = k.numbers(arr.cast(pa.float64())).copy()
+                    f64[~np.array(arr.is_valid().to_pylist(), bool)] = np.nan
+                f32 = f64.astype(np.float32)
+                if np.any(np.isinf(f32) & np.isfinite(f64)):
+                    raise OverflowError(
+                        "float too large to pack with f format")
+                raw = f32.astype("<f4").tobytes()
+                keep = (~np.isnan(f64)).tolist()
+                return [raw[4 * i:4 * i + 4] if k else None
+                        for i, k in enumerate(keep)]
+            if conv == "ts":
+                if arr.type.unit != "us":
+                    arr = arr.cast(pa.timestamp("us", arr.type.tz))
+                us = k.numbers(arr)
+                ints = np.abs(us) // 1000000 * np.where(us < 0, -1, 1)
+            else:  # int, bool
+                ints = k.numbers(arr.cast(pa.int64()))
+            return [v if ok else None for v, ok in zip(
+                k.varints(ints.view(np.uint64)), arr.is_valid().to_pylist())]
+
         kind_no = {"bytes": 1, "float": 2, "int64": 3}
+        # one plan per feature name, in name order (the last column of
+        # a duplicated name wins, as in a dict of features)
+        by_name = {}
+        for col, (name, kind, conv, is_arr) in enumerate(plans):
+            by_name[name] = (first + col, kind, conv, is_arr)
+        features = []
+        for name, (col, kind, conv, is_arr) in sorted(by_name.items()):
+            key = ld(1, name.encode())
+            feature_no = kind_no[kind]
 
-        def example(feats):
-            entries = b"".join(
-                ld(1, ld(1, name.encode()) + ld(2, ld(kind_no[kind], body)))
-                for name, (kind, body) in sorted(feats.items()))
-            return ld(1, entries)
+            def entry(body, key=key, feature_no=feature_no):
+                return ld(1, key + ld(2, ld(feature_no, body)))
+            # scalar entry = prefix + wire value (body is ld(1, value))
+            scalar = Prefixes(lambda x, entry=entry: entry(ld(1, x)))
+            features.append((col, kind, conv, is_arr, Prefixes(entry),
+                             scalar))
 
-        for pdf in batches:
-            encoded = []
-            for row in pdf.itertuples(index=False):
-                feats = {}
-                for (name, kind, enc, is_arr), value in zip(plans, row[n_pass:]):
-                    # pd.isna covers None, NaN and NaT (Arrow renders
-                    # null timestamps as NaT, which `is None` misses)
-                    if value is None or (not is_arr and pd.isna(value)):
-                        continue
-                    if is_arr:
-                        # null elements are skipped, matching the
-                        # skip-null-features contract for scalars
-                        vals = [enc(v) for v in value if not pd.isna(v)]
-                    else:
-                        vals = [enc(value)]
-                    feats[name] = (kind, builders[kind](vals))
-                encoded.append(example(feats))
-            out = {passthrough[i]: pdf.iloc[:, i] for i in range(n_pass)}
-            out["example"] = encoded
-            yield pd.DataFrame(out)
+        def entries(arr, kind, conv, is_arr, prefix, scalar):
+            if not is_arr:
+                return [b"" if x is None else scalar[len(x)] + x
+                        for x in elements(arr, conv)]
+            offsets = k.numbers(arr.offsets)
+            base = int(offsets[0])
+            flat = elements(arr.values.slice(base, int(offsets[-1]) - base),
+                            conv)
+            starts = (offsets - base).tolist()
+            out = []
+            for ok, s, e in zip(arr.is_valid().to_pylist(), starts,
+                                starts[1:]):
+                if not ok:
+                    out.append(b"")
+                    continue
+                vals = [x for x in flat[s:e] if x is not None]
+                body = (b"".join(ld(1, x) for x in vals) if kind == "bytes"
+                        else ld(1, b"".join(vals)))
+                out.append(prefix[len(body)] + body)
+            return out
+
+        def encode(batch):
+            cols = [entries(batch.column(col), *rest)
+                    for col, *rest in features]
+            if not cols:
+                return [ld(1, b"")] * batch.num_rows
+            return [ld(1, row) for row in map(b"".join, zip(*cols))]
+
+        return encode
+
+    return build
+
+
+def encode_examples(df: DataFrame,
+                    passthrough: tuple[str, ...] = ()) -> DataFrame:
+    """DataFrame -> one `example` binary column of serialized TF Examples
+    (+ any ``passthrough`` columns carried alongside, e.g. a split key).
+
+    Nested structs are flattened `a_b`-style first; encoding runs in one
+    ``mapInArrow`` stage over the same Arrow kernel ``write_tfrecords``
+    uses, so the per-row Python cost is amortized per batch and fully
+    distributed.
+    """
+    source, encode = _feature_source(df, passthrough)
+    n_pass = len(passthrough)
+    k = arrow_kernels()
+
+    def encode_batches(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns[:n_pass],
+                 k.array(encode(batch), pa.binary())],
+                names=[*passthrough, "example"])
 
     # passthrough columns keep their REAL types (a hardcoded `string`
     # would mistype any non-string passthrough at the Arrow boundary)
-    pass_schema = "".join(
-        f"{f.name} {f.dataType.simpleString()}, "
-        for f in source.schema.fields[:n_pass])
-    return source.mapInPandas(encode_batches, f"{pass_schema}example binary")
+    out_schema = T.StructType(
+        [*source.schema.fields[:n_pass],
+         T.StructField("example", T.BinaryType())])
+    return source.mapInArrow(encode_batches, out_schema)
 
 
 def write_tfrecords(df: DataFrame, path: str, split_field: str | None = None,
                     prefix: str = "output", compress: bool = True) -> list[str]:
     """K3: write serialized Examples as .tfrecord(.gz) files.
 
-    Each partition writes one file (the reference shards per key group;
-    `split_field` routes rows to per-key subdirectories first). Paths
-    are returned driver-side (small), the data never leaves executors.
+    One ``mapInArrow`` stage encodes, frames and writes: each task turns
+    its Arrow batches into Examples, frames them with one batched
+    CRC32C pass per batch, and streams them to
+    ``{prefix}-{partition:05d}.tfrecord(.gz)``; only (file, rows) pairs
+    come back to the driver. Without ``split_field`` the input
+    partitions are written as they are, one file per non-empty
+    partition. With it, rows are first shuffled by split key
+    (``repartition`` on the key, sized by AQE) and each task writes one
+    file per key it holds under ``path/<key>/`` (a null key writes at
+    the root, like the reference's empty-prefix naming).
 
     All file I/O goes through ``pyarrow.fs`` resolved from the path's
     scheme, ON THE EXECUTOR — so ``file://``, ``hdfs://``, ``s3://``
     and ``gs://`` destinations all stream directly from the task that
-    produced the bytes (the JVM-side Hadoop FS wrapper is driver-only;
-    Arrow's C++ filesystems are the Python-side equivalent and ship in
-    the pyarrow every executor already has for pandas UDFs).
+    produced the bytes.
     """
+    from pyspark.sql import functions as F
+
     fs0, base0 = _resolve_fs(path)
     fs0.create_dir(base0, recursive=True)
     suffix = ".tfrecord.gz" if compress else ".tfrecord"
 
-    # Self-contained for executors (see encode_batches note): framing +
-    # crc32c defined inside so nothing references this module by name.
-    def write_partition(split_value: str | None, idx: int, payloads) -> list[str]:
+    has_split = split_field is not None
+    if has_split:
+        keyed = df.withColumn(
+            "_split", F.coalesce(F.col(split_field).cast("string"), F.lit("")))
+        source, encode = _feature_source(keyed, passthrough=("_split",))
+        source = source.repartition(F.col("_split"))
+    else:
+        source, encode = _feature_source(df)
+    frame_all = _framer_factory()
+    k = arrow_kernels()
+
+    def write_task(batches):
         import gzip as _gzip
         import posixpath as _pp
-        import struct as _struct
 
+        import pyarrow as pa
         import pyarrow.fs as _pafs
+        from pyspark import TaskContext
 
         if "://" in path:
             fs, base = _pafs.FileSystem.from_uri(path)
@@ -323,76 +486,55 @@ def write_tfrecords(df: DataFrame, path: str, split_field: str | None = None,
         else:
             fs, base = _pafs.LocalFileSystem(), path
             spfx = ""
+        name = f"{prefix}-{TaskContext.get().partitionId():05d}{suffix}"
+        open_files = {}  # split key -> open .tfrecord(.gz) file
 
-        poly = 0x82F63B78
-        table = []
-        for i in range(256):
-            crc = i
-            for _ in range(8):
-                crc = (crc >> 1) ^ poly if crc & 1 else crc >> 1
-            table.append(crc)
+        def sink(key):
+            st = open_files.get(key)
+            if st is None:
+                subdir = base if key == "" else _pp.join(base, key)
+                if key != "":
+                    fs.create_dir(subdir, recursive=True)
+                target = _pp.join(subdir, name)
+                # compression=None: no extension sniffing — the .gz
+                # framing (gzip around the record stream) is ours
+                raw = fs.open_output_stream(target, compression=None)
+                fh = _gzip.GzipFile(fileobj=raw, mode="wb") \
+                    if compress else raw
+                st = open_files[key] = {"raw": raw, "fh": fh,
+                                        "target": target, "rows": 0}
+            return st
 
-        def crc32c(data):
-            crc = 0xFFFFFFFF
-            for b in data:
-                crc = table[(crc ^ b) & 0xFF] ^ (crc >> 8)
-            return crc ^ 0xFFFFFFFF
-
-        def masked(data):
-            c = crc32c(data)
-            return ((c >> 15) | (c << 17)) + 0xA282EAD8 & 0xFFFFFFFF
-
-        def frame(payload):
-            header = _struct.pack("<Q", len(payload))
-            return (header + _struct.pack("<I", masked(header))
-                    + payload + _struct.pack("<I", masked(payload)))
-
-        subdir = base if split_value is None else _pp.join(base, split_value)
-        if split_value is not None:
-            fs.create_dir(subdir, recursive=True)
-        target = _pp.join(subdir, f"{prefix}-{idx:05d}{suffix}")
-        # compression=None: disable arrow's extension sniffing — the
-        # .gz framing is ours (gzip around the record stream), applied
-        # explicitly below
-        raw = fs.open_output_stream(target, compression=None)
-        fh = _gzip.GzipFile(fileobj=raw, mode="wb") if compress else raw
-        wrote = False
         try:
-            for p in payloads:
-                fh.write(frame(p))
-                wrote = True
+            for batch in batches:
+                if not batch.num_rows:
+                    continue
+                frames = frame_all(encode(batch))
+                if has_split:
+                    groups = {}
+                    for frame, key in zip(frames,
+                                          batch.column(0).to_pylist()):
+                        groups.setdefault(key, []).append(frame)
+                else:
+                    groups = {"": frames}
+                for key, chunk in groups.items():
+                    st = sink(key)
+                    st["fh"].write(b"".join(chunk))
+                    st["rows"] += len(chunk)
         finally:
-            fh.close()
-            if fh is not raw:
-                raw.close()
-        if not wrote:
-            fs.delete_file(target)
-            return []
-        return [spfx + target]
+            for st in open_files.values():
+                st["fh"].close()
+                if st["fh"] is not st["raw"]:
+                    st["raw"].close()
+        written = sorted((spfx + st["target"], st["rows"])
+                         for st in open_files.values())
+        yield pa.RecordBatch.from_arrays(
+            [k.array([f for f, _ in written], pa.string()),
+             k.array([n for _, n in written], pa.int64())],
+            names=["file", "rows"])
 
-    if split_field is None:
-        encoded = encode_examples(df)
-
-        def per_part(idx, rows):
-            return iter(write_partition(None, idx, (r.example for r in rows)))
-        files = encoded.rdd.mapPartitionsWithIndex(per_part).collect()
-    else:
-        from pyspark.sql import functions as F
-        keyed = df.withColumn(
-            "_split", F.coalesce(F.col(split_field).cast("string"), F.lit("")))
-        encoded = (encode_examples(keyed, passthrough=("_split",))
-                   .repartition(F.col("_split")))
-
-        def per_part_kv(idx, rows):
-            by_key: dict[str, list[bytes]] = {}
-            for r in rows:
-                by_key.setdefault(r._split, []).append(r.example)
-            out = []
-            for k, payloads in by_key.items():
-                out += write_partition(k or None, idx, payloads)
-            return iter(out)
-        files = encoded.rdd.mapPartitionsWithIndex(per_part_kv).collect()
-    return sorted(files)
+    rows = source.mapInArrow(write_task, "file string, rows long").collect()
+    return sorted(r.file for r in rows)
 
 
 # ---------------------------------------------------------------------------
@@ -430,13 +572,14 @@ def read_tfrecord_df(spark, path: str,
     than silently dropping values.
 
     Scale shape: files are listed by Spark's binaryFile source and
-    parsed in an Arrow-batched ``mapInPandas`` — one task per file
-    group, no driver involvement, CRC32C verified per record exactly
-    like the writer produces it. TFRecord shards are single-file
-    atomic, so parallelism = file count (the K3 writer emits one file
-    per partition, preserving it round-trip).
+    parsed in a ``mapInArrow`` stage — one task per file group, no
+    driver involvement, every record's CRC32C verified in one batched
+    pass per file, and each file's rows built as an Arrow batch against
+    the declared schema (int64 values stay exact; no pandas). TFRecord
+    shards are single-file atomic, so parallelism = file count (the K3
+    writer emits one file per partition, preserving it round-trip).
     """
-    import pandas as pd  # noqa: F401  (executor import check)
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     fields = [
         T.StructField(
@@ -446,62 +589,66 @@ def read_tfrecord_df(spark, path: str,
         for name, kind in features.items()
     ]
     out_schema = T.StructType(fields)
+    arrow_schema = to_arrow_schema(out_schema)
     spec = dict(features)
     lsts = set(list_fields)
+    masked_crcs = _crc32c_factory()
+    k = arrow_kernels()
 
-    # Self-contained on executors (same stance as write_partition).
+    # Self-contained on executors (same stance as the write kernels).
     def parse_files(batches):
         import gzip as _gz
         import struct as _st
 
-        import pandas as _pd
-
-        poly = 0x82F63B78
-        table = []
-        for i in range(256):
-            crc = i
-            for _ in range(8):
-                crc = (crc >> 1) ^ poly if crc & 1 else crc >> 1
-            table.append(crc)
-
-        def crc32c(data):
-            crc = 0xFFFFFFFF
-            for b in data:
-                crc = table[(crc ^ b) & 0xFF] ^ (crc >> 8)
-            return crc ^ 0xFFFFFFFF
-
-        def masked(data):
-            c = crc32c(data)
-            return ((c >> 15) | (c << 17)) + 0xA282EAD8 & 0xFFFFFFFF
+        import numpy as np
+        import pyarrow as pa
 
         def frames(raw, fpath):
-            # the header CRC covers the length bytes, so a corrupt
-            # length reports as a header CRC mismatch; the explicit
-            # bounds checks distinguish TRUNCATION (killed writer,
-            # partial upload) from corruption, with file + offset
-            i, n = 0, len(raw)
+            # Walk the length headers first, then check every CRC of
+            # the file in one batched pass. The error raised is the
+            # one a record-by-record reader meets first: by record,
+            # and within a record header CRC, then truncation, then
+            # payload CRC (the header CRC covers the length bytes, so
+            # a corrupt length reports as a header mismatch, while the
+            # bounds checks tell TRUNCATION — killed writer, partial
+            # upload — from corruption, with file + offset).
+            offs, lens, i, n = [], [], 0, len(raw)
+            truncated = None
             while i < n:
                 if n - i < 12:
-                    raise ValueError(
-                        f"truncated TFRecord header at offset {i} of {fpath}")
+                    truncated = (len(offs), 1, "truncated TFRecord "
+                                 f"header at offset {i} of {fpath}")
+                    break
                 (ln,) = _st.unpack_from("<Q", raw, i)
-                (hcrc,) = _st.unpack_from("<I", raw, i + 8)
-                if hcrc != masked(raw[i:i + 8]):
-                    raise ValueError(
-                        f"TFRecord header CRC mismatch at offset {i} "
-                        f"of {fpath}")
+                offs.append(i)
                 if n - i - 12 < ln + 4:
-                    raise ValueError(
-                        f"truncated TFRecord payload (need {ln} bytes) "
-                        f"at offset {i} of {fpath}")
-                payload = raw[i + 12:i + 12 + ln]
-                (pcrc,) = _st.unpack_from("<I", raw, i + 12 + ln)
-                if pcrc != masked(payload):
-                    raise ValueError(
-                        f"TFRecord payload CRC mismatch at offset {i} "
-                        f"of {fpath}")
-                yield payload
+                    truncated = (len(offs) - 1, 1, "truncated TFRecord "
+                                 f"payload (need {ln} bytes) at offset "
+                                 f"{i} of {fpath}")
+                    break
+                lens.append(ln)
                 i += 16 + ln
+            payloads = [raw[o + 12:o + 12 + ln] for o, ln in zip(offs, lens)]
+            got = masked_crcs([raw[o:o + 8] for o in offs] + payloads)
+            want = np.array(
+                [_st.unpack_from("<I", raw, o + 8)[0] for o in offs]
+                + [_st.unpack_from("<I", raw, o + 12 + ln)[0]
+                   for o, ln in zip(offs, lens)], np.uint32)
+            bad = np.flatnonzero(got != want)
+            errors = [truncated] if truncated else []
+            heads = bad[bad < len(offs)]
+            if heads.size:
+                k = int(heads[0])
+                errors.append((k, 0, "TFRecord header CRC mismatch at "
+                               f"offset {offs[k]} of {fpath}"))
+            pays = bad[bad >= len(offs)] - len(offs)
+            if pays.size:
+                k = int(pays[0])
+                errors.append((k, 2, "TFRecord payload CRC mismatch at "
+                               f"offset {offs[k]} of {fpath}"))
+            if errors:
+                raise ValueError(min(errors)[2])
+            return payloads
 
         def varint(b, i):
             n = shift = 0
@@ -599,15 +746,14 @@ def read_tfrecord_df(spark, path: str,
                         out[name] = vals
             return out
 
-        for pdf in batches:
-            rows = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                raw = bytes(content)
+        for batch in batches:
+            for fpath, content in zip(batch.column("path").to_pylist(),
+                                      batch.column("content").to_pylist()):
                 if str(fpath).endswith(".gz"):
-                    raw = _gz.decompress(raw)
-                for payload in frames(raw, fpath):
+                    content = _gz.decompress(content)
+                cols = {name: [] for name in spec}
+                for payload in frames(content, fpath):
                     ex = decode(payload)
-                    row = {}
                     for name, kind in spec.items():
                         vals = ex.get(name)
                         if vals is not None and kind == "string":
@@ -615,14 +761,15 @@ def read_tfrecord_df(spark, path: str,
                                     if isinstance(v, bytes) else v
                                     for v in vals]
                         if name in lsts:
-                            row[name] = vals
+                            cols[name].append(vals)
                         else:
-                            row[name] = vals[0] if vals else None
-                    rows.append(row)
-            yield _pd.DataFrame(rows, columns=list(spec))
+                            cols[name].append(vals[0] if vals else None)
+                yield pa.RecordBatch.from_arrays(
+                    [k.array(cols[f.name], f.type) for f in arrow_schema],
+                    schema=arrow_schema)
 
     src = spark.read.format("binaryFile") \
         .option("pathGlobFilter", "*.tfrecord*") \
         .option("recursiveFileLookup", "true") \
         .load(path)
-    return src.select("path", "content").mapInPandas(parse_files, out_schema)
+    return src.select("path", "content").mapInArrow(parse_files, out_schema)

@@ -197,7 +197,7 @@ def q149_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     real data, not just on the writer's own unit fixtures.
 
     Scale shape: packing is q48's one window + one aggregate; encoding
-    and parsing are Arrow-batched mapInPandas, one task per shard, no
+    and parsing are each one mapInArrow stage, one task per shard, no
     driver data movement (paths only). Reference: K3/C12 composition
     (StructToTFRecord + sharded sink), SURVEY §2.8.
     """

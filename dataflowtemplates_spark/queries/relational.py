@@ -666,13 +666,15 @@ def q16_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_tables(spark, sf_dir)
     ev = spark.table("events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    # NTZ-safe epoch seconds: parquet `timestamp[us]` arrives as
-    # TIMESTAMP_NTZ under Spark 4, which cannot cast straight to long;
-    # the hop through TIMESTAMP uses the session tz (pinned UTC), so it
-    # agrees with DuckDB's epoch(ts) on the same naive values.
-    ts_s = F.col("ts").cast("timestamp").cast("long")
+    # The gap test runs on exact epoch MICROseconds, like DuckDB's
+    # epoch(ts) in the oracle, which keeps the sub-second part (a cast
+    # to long would truncate to whole seconds and merge a 1800.05 s
+    # gap). NTZ-safe: parquet `timestamp[us]` arrives as TIMESTAMP_NTZ
+    # under Spark 4, which unix_micros rejects; the hop through
+    # TIMESTAMP uses the session tz (pinned UTC).
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     gap = F.when(
-        ts_s - F.lag(ts_s, 1, 0).over(w) > 1800,
+        ts_us - F.lag(ts_us, 1, 0).over(w) > 1_800_000_000,
         1).otherwise(0)
     sess = (ev.withColumn("new_sess", gap)
             .withColumn("session_id",

@@ -296,15 +296,15 @@ def write_columnar_dynamic(df: DataFrame, path: str,
     reference (transforms/sinks/AvroDynamicSink.java:33-49).
 
     `fmt="avro"` always produces real .avro container files: the
-    spark-avro datasource when the jar is present, else the pure-Python
-    container writer (operators/avro_io.py — including a hand-rolled
-    snappy codec, so the reference's pinned snappy+CRC block format is
-    honored even jar-less). The pure-Python fallback streams from
-    executor tasks through ``pyarrow.fs`` (operators/fsio.py), so
-    `file://`/`hdfs://`/`s3://`/`gs://` destinations all work; the
-    pre-write cleanup goes through the Hadoop FS like every other
-    finalization step. Other formats go through the native datasource
-    with a parquet fallback.
+    spark-avro datasource when the jar is present, else the jar-less
+    container writer (operators/avro_io.py — one Arrow-batched
+    ``mapInArrow`` stage with Arrow's native snappy, so the reference's
+    pinned snappy+CRC block format is honored even jar-less). That
+    fallback streams from executor tasks through ``pyarrow.fs``
+    (operators/fsio.py), so `file://`/`hdfs://`/`s3://`/`gs://`
+    destinations all work; the pre-write cleanup goes through the
+    Hadoop FS like every other finalization step. Other formats go
+    through the native datasource with a parquet fallback.
     (Schema handling needs none of the reference's per-key sampling:
     `df.schema` is static.)
     """

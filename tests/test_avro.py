@@ -90,11 +90,19 @@ def test_snappy_crc_detects_corruption(spark, tmp_path):
         read_avro_rows(path)
 
 
+def _arrow_snappy():
+    import pyarrow as pa
+    codec = pa.Codec("snappy")
+    return lambda data: codec.compress(data, asbytes=True)
+
+
 def test_snappy_codec_raw_blocks():
-    """Pure codec: round-trip + the format's edge shapes (incompressible
-    bytes, overlapping copies from short periods, long runs, empty)."""
-    from dataflowtemplates_spark.operators.avro_io import _snappy_factory
-    compress, decompress = _snappy_factory()
+    """The writer's raw snappy blocks (Arrow's native codec) decode
+    through the independent pure-Python decompressor, across the
+    format's edge shapes (incompressible bytes, overlapping copies from
+    short periods, long runs, empty)."""
+    from dataflowtemplates_spark.operators.avro_io import _snappy_decompressor
+    compress, decompress = _arrow_snappy(), _snappy_decompressor()
     cases = [
         b"",
         b"a",
@@ -153,8 +161,8 @@ def test_block_splitting(spark, tmp_path):
 def test_snappy_property_roundtrip():
     from hypothesis import given, settings, strategies as st
 
-    from dataflowtemplates_spark.operators.avro_io import _snappy_factory
-    compress, decompress = _snappy_factory()
+    from dataflowtemplates_spark.operators.avro_io import _snappy_decompressor
+    compress, decompress = _arrow_snappy(), _snappy_decompressor()
 
     @given(st.binary(max_size=4096))
     @settings(max_examples=300, deadline=None)
@@ -322,3 +330,42 @@ def test_avro_java_container_readable_by_python(spark, tmp_path):
     _schema, rows = read_avro_rows(out)
     assert [(r["id"], r["name"], r["score"]) for r in rows] == \
         [(i, f"n{i}", i * 1.5) for i in range(50)]
+
+
+_TZ_SCRIPT = r"""
+import sys
+from datetime import datetime
+
+sys.path.insert(0, sys.argv[1])
+from dataflowtemplates_spark.operators.avro_io import (
+    read_avro, read_avro_rows, write_avro)
+from dataflowtemplates_spark.session import build_session
+
+spark = build_session("avro-tz", master="local[1]", shuffle_partitions=1)
+df = spark.sql("SELECT TIMESTAMP'2021-06-01 12:00:00' AS ts")
+res = write_avro(df.coalesce(1), sys.argv[2])
+want = datetime(2021, 6, 1, 12, 0)
+assert read_avro_rows(res.files[0])[1] == [{"ts": want}], \
+    read_avro_rows(res.files[0])[1]
+back = read_avro(spark, sys.argv[2]).selectExpr("CAST(ts AS STRING) AS s")
+assert back.collect()[0].s == "2021-06-01 12:00:00", back.collect()
+spark.stop()
+print("TZ-OK")
+"""
+
+
+def test_timestamps_independent_of_process_timezone(tmp_path):
+    """A UTC session in a process whose local timezone is not UTC: the
+    timestamp must not shift on write or on the distributed read."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TZ": "America/New_York",
+           "PYTHONPATH": os.pathsep.join(
+               p for p in (root, os.environ.get("PYTHONPATH")) if p)}
+    proc = subprocess.run(
+        [sys.executable, "-c", _TZ_SCRIPT, root, str(tmp_path / "tz")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert "TZ-OK" in proc.stdout, proc.stderr[-3000:]

@@ -5,7 +5,7 @@ a hash-compare can silently get lucky on: inclusive tie handling, rows
 with no prior match, and per-key isolation.
 """
 
-from datetime import datetime
+from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
@@ -68,3 +68,42 @@ def test_asof_plan_has_single_shuffle(spark):
     # union + window: exactly one exchange (by user_id), no join operator
     assert plan.count("Exchange") == 1
     assert "Join" not in plan
+
+
+def test_q16_sub_second_gap_matches_oracle(spark, tmp_path):
+    """q16 splits sessions on the exact gap: 1800.05 s is over the
+    30-minute threshold even though the whole-second gap is 1800."""
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dataflowtemplates_spark.queries.relational import (
+        _Q16_ORACLE, q16_sessionize)
+
+    t0 = datetime(2024, 1, 1)
+    events = [  # (user, offset of the event from t0 in microseconds)
+        (1, 0), (1, 1_800_050_000),               # 1800.05 s: new session
+        (2, 900_000), (2, 1_800_850_000),         # 1799.95 s: same session
+        (3, 0), (3, 1_800_000_000),               # exactly 1800 s: same
+        (3, 3_600_000_001),                       # 1800.000001 s: new
+    ]
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(events)), pa.int64()),
+        "ts": pa.array([t0 + timedelta(microseconds=us) for _, us in events],
+                       pa.timestamp("us")),
+        "user_id": pa.array([u for u, _ in events], pa.int64()),
+        "event_type": pa.array(["view"] * len(events)),
+        "value": pa.array([1.0] * len(events)),
+        "props": pa.array(["{}"] * len(events)),
+    }), os.path.join(sf_dir, "events.parquet"))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{sf_dir}/events.parquet')")
+    want = [tuple(r) for r in con.execute(_Q16_ORACLE).fetchall()]
+    assert want == [(1, 2, 1), (2, 1, 2), (3, 2, 2)]
+    got = [tuple(r) for r in q16_sessionize(spark, sf_dir).collect()]
+    assert got == want

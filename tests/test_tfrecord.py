@@ -8,6 +8,7 @@ from pyspark.sql import types as T
 
 from dataflowtemplates_spark.operators.tfrecord import (
     _example,
+    _int64_list,
     _masked_crc,
     encode_examples,
     frame_record,
@@ -78,6 +79,35 @@ def test_frame_roundtrip(tmp_path):
 def test_masked_crc_known_value():
     # crc32c("") = 0; masked = rot-right-15(0) + MASK = 0xA282EAD8
     assert _masked_crc(b"") == 0xA282EAD8
+
+
+def _masked_crc32c_loop(data: bytes) -> int:
+    """Bitwise CRC32C (Castagnoli) + TFRecord masking: the reference
+    the batched numpy kernel must equal."""
+    crc = 0xFFFFFFFF
+    for b in data:
+        crc ^= b
+        for _ in range(8):
+            crc = (crc >> 1) ^ 0x82F63B78 if crc & 1 else crc >> 1
+    crc ^= 0xFFFFFFFF
+    return ((crc >> 15) | (crc << 17)) + 0xA282EAD8 & 0xFFFFFFFF
+
+
+def test_batched_crc32c_matches_bitwise_reference():
+    """One call over records of mixed lengths covers both phases of the
+    kernel: numpy steps while many records are live, then the scalar
+    tail of the few longest."""
+    import random
+
+    from dataflowtemplates_spark.operators.tfrecord import _masked_crcs
+
+    crc = _masked_crc32c_loop(b"123456789") - 0xA282EAD8 & 0xFFFFFFFF
+    assert ((crc << 15) | (crc >> 17)) & 0xFFFFFFFF == 0xE3069283
+    rng = random.Random(7)
+    records = [rng.randbytes(rng.choice([0, 1, 7, 8, 100, 257, 2000]))
+               for _ in range(300)] + [rng.randbytes(5000)]
+    assert _masked_crcs(records).tolist() == \
+        [_masked_crc32c_loop(r) for r in records]
 
 
 def test_encode_type_lowering(spark):
@@ -280,3 +310,182 @@ def test_write_tfrecords_file_uri_scheme(spark, tmp_path):
     from dataflowtemplates_spark.operators.tfrecord import read_tfrecord_df
     back = read_tfrecord_df(spark, out, {"s": "string", "i": "int64"})
     assert {(r.s, r.i) for r in back.collect()} == {("x", 1), ("y", 2)}
+
+
+def _reference_payload(row: dict, kinds: dict) -> bytes:
+    """The module-level reference encoding (``_example``) of one row of
+    already-flattened values, applying the documented lowering by hand:
+    null features (and NaN floats) skipped, null and NaN array elements
+    dropped."""
+    import math
+    from datetime import date, datetime, timedelta, timezone
+
+    from dataflowtemplates_spark.operators.tfrecord import (
+        _bytes_list, _float_list, _int64_list)
+
+    def lower(v):
+        if isinstance(v, str):
+            return v.encode()
+        if isinstance(v, bool):
+            return int(v)
+        if isinstance(v, datetime):  # whole seconds, toward zero
+            if v.tzinfo is None:  # TIMESTAMP_NTZ: wall clock as UTC
+                v = v.replace(tzinfo=timezone.utc)
+            us = (v - datetime(1970, 1, 1, tzinfo=timezone.utc)) \
+                // timedelta(microseconds=1)
+            return abs(us) // 10**6 * (1 if us >= 0 else -1)
+        if isinstance(v, date):
+            return v.isoformat().encode()
+        return v
+
+    def skip(v):
+        return v is None or (isinstance(v, float) and math.isnan(v))
+
+    lists = {"bytes": _bytes_list, "float": lambda vs: _float_list(
+        [float(v) for v in vs]), "int64": _int64_list}
+    feats = {}
+    for name, value in row.items():
+        if skip(value):
+            continue
+        vals = ([lower(v) for v in value if not skip(v)]
+                if isinstance(value, list) else [lower(value)])
+        feats[name] = (kinds[name], lists[kinds[name]](vals))
+    return _example(feats)
+
+
+def test_write_tfrecords_payloads_match_reference_encoding(spark, tmp_path):
+    """Byte parity: every payload the sink writes equals the reference
+    ``_example`` encoding of the same row — all scalar kinds, nulls,
+    NaN, arrays (with null/NaN elements, empty, null) and nested
+    structs — with and without a split field."""
+    from datetime import date, datetime, timezone
+    from decimal import Decimal
+
+    nan = float("nan")
+    schema = (
+        "s string, raw binary, flag boolean, b tinyint, sh smallint,"
+        " i int, l long, f float, d double, num decimal(12,3), day date,"
+        " ts timestamp, ntz timestamp_ntz, ls array<string>,"
+        " ll array<long>, ld array<double>,"
+        " nest struct<x: string, y: struct<z: long>>, grp string")
+    rows = [
+        ("héllo", b"\x00\x01", True, -7, 300, -70000, -(1 << 40), 1.25,
+         -2.5e-3, Decimal("12.345"), date(2020, 2, 29),
+         datetime(2021, 6, 1, 12, 0, 0, 250000, tzinfo=timezone.utc),
+         datetime(2021, 6, 1, 12, 0, 0, 900000),
+         ["a", None, ""], [1, None, -3], [0.5, nan, None, -1.0],
+         {"x": "deep", "y": {"z": 9}}, "a"),
+        (None, None, None, None, None, None, None, None, None, None, None,
+         None, None, None, None, None, None, None),
+        ("", b"", False, 0, 0, 0, 0, 0.0, nan, Decimal("-0.001"),
+         date(1969, 12, 31),
+         datetime(1969, 12, 31, 23, 59, 58, 500000, tzinfo=timezone.utc),
+         datetime(1970, 1, 1), [], [], [], {"x": None, "y": None}, "b"),
+        ("z" * 300, bytes(range(200)), True, 127, -32768, 2**31 - 1,
+         2**53, 3.4e38, 1e30, Decimal("123456789.999"),
+         date(9999, 12, 31), datetime(2038, 1, 19, 3, 14, 8,
+                                      tzinfo=timezone.utc),
+         datetime(2000, 1, 1, 0, 0, 1), ["x"] * 50, list(range(-5, 60)),
+         [1e-3] * 20, {"x": "n", "y": {"z": None}}, None),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    kinds = {"s": "bytes", "raw": "bytes", "flag": "int64", "b": "int64",
+             "sh": "int64", "i": "int64", "l": "int64", "f": "float",
+             "d": "float", "num": "float", "day": "bytes", "ts": "int64",
+             "ntz": "int64", "ls": "bytes", "ll": "int64", "ld": "float",
+             "nest_x": "bytes", "nest_y_z": "int64", "grp": "bytes"}
+    want = []
+    for r in df.collect():
+        flat = r.asDict(recursive=True)
+        nest = flat.pop("nest") or {}
+        flat["nest_x"] = nest.get("x")
+        flat["nest_y_z"] = (nest.get("y") or {}).get("z")
+        want.append(_reference_payload(flat, kinds))
+
+    for split in (None, "grp"):
+        out = str(tmp_path / f"parity_{split}")
+        got = []
+        for f in write_tfrecords(df.repartition(2), out, split_field=split):
+            got += read_tfrecords(f)
+        assert sorted(got) == sorted(want), split
+    encoded = [bytes(r.example) for r in encode_examples(df).collect()]
+    assert sorted(encoded) == sorted(want)
+
+
+def test_int64_above_2_53_exact_next_to_nulls(spark, tmp_path):
+    """A null in the same batch must not push an int64 column through
+    float64: 2^60+1 is written and read back exactly."""
+    from dataflowtemplates_spark.operators.tfrecord import read_tfrecord_df
+
+    big = (1 << 60) + 1
+    df = spark.createDataFrame([(big,), (None,), (-big,)], "v long")
+    out = str(tmp_path / "big")
+    files = write_tfrecords(df.coalesce(1), out)
+    payloads = [p for f in files for p in read_tfrecords(f)]
+    assert sorted(_decode_example(p).get("v", [None])[0] or 0
+                  for p in payloads) == [-big, 0, big]
+    back = read_tfrecord_df(spark, out, {"v": "int64"}).collect()
+    assert sorted(r.v for r in back if r.v is not None) == [-big, big]
+    # the reader on its own: reference-encoded records, one lacking the
+    # feature, still read back as exact int64 next to the null
+    src = tmp_path / "ref"
+    src.mkdir()
+    (src / "part.tfrecord").write_bytes(
+        frame_record(_example({"v": ("int64", _int64_list([big]))}))
+        + frame_record(_example({})))
+    back = read_tfrecord_df(spark, str(src), {"v": "int64"}).collect()
+    assert sorted(back, key=lambda r: r.v is None)[0].v == big
+
+
+_PANDAS_FREE_SCRIPT = r"""
+import sys
+
+sys.path.insert(0, sys.argv[1])
+from dataflowtemplates_spark.operators.avro_io import write_avro
+from dataflowtemplates_spark.operators.tfrecord import (
+    read_tfrecord_df, write_tfrecords)
+from dataflowtemplates_spark.session import build_session
+
+spark = build_session("pandas-free", master="local[1]", shuffle_partitions=1)
+df = spark.sql(
+    "SELECT id, CAST(id AS STRING) s, id * 1.5 d, CAST(id AS DECIMAL(10,2)) m,"
+    " TIMESTAMP'2021-06-01 12:00:00' ts, DATE'2021-06-01' dt,"
+    " array(id, id + 1) a, IF(id % 3 = 0, NULL, id) n, id % 2 = 0 b"
+    " FROM range(100)")
+out = sys.argv[2]
+write_tfrecords(df, out + "/tf", split_field="b")
+write_avro(df, out + "/avro", split_field="b", codec="snappy")
+assert read_tfrecord_df(spark, out + "/tf", {"id": "int64"}).count() == 100
+
+
+def probe(batches, flag=out + "/probe"):
+    import sys
+    for _ in batches:
+        pass
+    with open(flag, "w") as fh:
+        fh.write(str("pandas" in sys.modules))
+    yield from ()
+
+
+spark.range(1).coalesce(1).mapInArrow(probe, "id long").collect()
+spark.stop()
+print("PANDAS-LOADED=" + open(out + "/probe").read())
+"""
+
+
+def test_sinks_keep_python_workers_free_of_pandas(tmp_path):
+    """The Avro and TFRecord sinks and the TFRecord source never make
+    pyarrow import pandas in the (reused) Python worker: it would cost
+    every worker ~40 MB of resident memory."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p)}
+    proc = subprocess.run(
+        [sys.executable, "-c", _PANDAS_FREE_SCRIPT, root, str(tmp_path)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert "PANDAS-LOADED=False" in proc.stdout, \
+        proc.stdout[-500:] + proc.stderr[-3000:]
