@@ -29,12 +29,12 @@ Format notes:
   so values round-trip exactly whatever the session or process
   timezone.
 
-Scale stance: the writer is one ``mapInArrow`` stage — each task
-encodes its Arrow record batches column by column and streams one
-container file per partition (per split key, like the reference's
-dynamic destinations); only file paths and row counts return to the
-driver. Reads parallelize over the file list, one decode task per
-container file.
+Scale stance: the writer is the container file writer of the one sink
+stage (sources/writers.write_sink) — each task encodes its Arrow
+record batches column by column and streams one container file per
+partition and split key (like the reference's dynamic destinations);
+only file paths and row counts return to the driver. Reads
+parallelize over the file list, one decode task per container file.
 
 Executor self-containment: the encoder/decoder are built by factory
 functions and captured as CLOSURES (pickled by value), never as module
@@ -46,7 +46,6 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dataflowtemplates_spark.operators.fsio import (
     list_files as _list_files,
@@ -57,20 +56,11 @@ from dataflowtemplates_spark.functions.avroschema import (
     avro_schema_from_spark,
     spark_schema_from_avro,
 )
+from dataflowtemplates_spark.sources.writers import WriteResult, write_sink
 
-__all__ = ["write_avro", "read_avro_rows", "read_avro", "MAGIC",
-           "AvroWriteResult"]
+__all__ = ["write_avro", "read_avro_rows", "read_avro", "MAGIC"]
 
 MAGIC = b"Obj\x01"
-
-
-from dataclasses import dataclass, field
-
-
-@dataclass
-class AvroWriteResult:
-    files: list[str] = field(default_factory=list)
-    row_count: int = 0
 
 
 def _encoder_factory():
@@ -464,63 +454,47 @@ def _decoder_factory():
 
 def write_avro(df: DataFrame, path: str, split_field: str | None = None,
                codec: str = "deflate", prefix: str = "output",
-               rows_per_block: int = 4096) -> AvroWriteResult:
-    """Write ``df`` as Avro container files, one per partition (grouped
-    into per-key subdirectories when ``split_field`` is set, matching
-    the reference's dynamic destinations). Returns written paths plus
-    the row count (tallied during the single write pass — callers
-    never need a separate count job).
+               rows_per_block: int = 4096) -> WriteResult:
+    """Write ``df`` as Avro container files
+    ``{prefix}-{partition:05d}.avro``, one per partition and split key
+    (per-key subdirectories when ``split_field`` is set, matching the
+    reference's dynamic destinations), through the one sink stage
+    (sources/writers.write_sink). Returns the written paths plus the
+    row count, tallied during the single write pass.
 
-    One ``mapInArrow`` stage does all the work: each task encodes its
-    Arrow record batches column by column, cuts blocks of
-    ``rows_per_block`` rows per file, and streams
-    ``{prefix}-{partition:05d}.avro`` through ``pyarrow.fs``; only
-    (file, rows) pairs come back. Without ``split_field`` the input
-    partitions are written as they are (one file per non-empty
-    partition); with it, rows are first shuffled by split key
-    (``repartition`` on the key, sized by AQE).
-
-    ``codec="snappy"`` produces real snappy blocks (reference parity:
-    AvroDynamicSink.java:37) via Arrow's native snappy codec plus the
-    Avro-spec 4-byte big-endian CRC32 of the uncompressed block.
+    Each file gets the container header, then blocks of
+    ``rows_per_block`` rows encoded column by column from the Arrow
+    batches. ``codec="snappy"`` produces real snappy blocks (reference
+    parity: AvroDynamicSink.java:37) via Arrow's native snappy codec
+    plus the Avro-spec 4-byte big-endian CRC32 of the uncompressed
+    block.
     """
     codec_name = (codec or "null").lower()
     if codec_name in ("none", "uncompressed"):
         codec_name = "null"
     if codec_name not in ("null", "deflate", "snappy"):
         raise ValueError(f"unsupported Avro codec {codec!r}")
-    fs0, base0 = _resolve_fs(path)
-    fs0.create_dir(base0, recursive=True)
-
     schema_json = json.dumps(avro_schema_from_spark(df.schema))
-    has_split = split_field is not None
-    if has_split:
-        df = (df.withColumn(
-            "_split",
-            F.coalesce(F.col(split_field).cast("string"), F.lit("")))
-            .repartition(F.col("_split")))
-    build_encoder = _encoder_factory()
-    k = arrow_kernels()
-    magic = MAGIC
+    return write_sink(df, path,
+                      _container_writer(schema_json, codec_name,
+                                        rows_per_block),
+                      ".avro", "avro", split_field=split_field, prefix=prefix)
 
-    def write_task(batches):
+
+def _container_writer(schema_json: str, codec_name: str,
+                      rows_per_block: int):
+    """File writer for write_sink: the container header, then the
+    encoded rows in blocks of ``rows_per_block``. Self-contained."""
+    build_encoder = _encoder_factory()
+    magic = MAGIC
+    encoder = []  # built once per task, on its first file
+
+    def start(out, schema):
         import json as _json
         import os as _os
-        import posixpath as _pp
         import zlib as _zlib
 
         import pyarrow as pa
-        import pyarrow.fs as _pafs
-        from pyspark import TaskContext
-
-        # executor-side scheme resolution: file://, hdfs://, s3://,
-        # gs:// all stream from the task (same stance as the K3 writer)
-        if "://" in path:
-            fs, base = _pafs.FileSystem.from_uri(path)
-            spfx = path.split("://", 1)[0] + "://"
-        else:
-            fs, base = _pafs.LocalFileSystem(), path
-            spfx = ""
 
         if codec_name == "deflate":
             def compress(b):
@@ -538,70 +512,35 @@ def write_avro(df: DataFrame, path: str, split_field: str | None = None,
             def compress(b):
                 return b
 
-        encode, zigzag = build_encoder(_json.loads(schema_json))
+        if not encoder:
+            encoder.append(build_encoder(_json.loads(schema_json)))
+        encode, zigzag = encoder[0]
         sj = schema_json.encode()
         cd = codec_name.encode()
-        name = f"{prefix}-{TaskContext.get().partitionId():05d}.avro"
-        open_files = {}  # split key -> open container file
+        sync = _os.urandom(16)
+        out.write(magic + zigzag(2)
+                  + zigzag(11) + b"avro.schema" + zigzag(len(sj)) + sj
+                  + zigzag(10) + b"avro.codec" + zigzag(len(cd)) + cd
+                  + zigzag(0) + sync)
+        pending = []
 
-        def sink(key):
-            st = open_files.get(key)
-            if st is None:
-                subdir = base if key == "" else _pp.join(base, key)
-                if key != "":
-                    fs.create_dir(subdir, recursive=True)
-                target = _pp.join(subdir, name)
-                fh = fs.open_output_stream(target, compression=None)
-                sync = _os.urandom(16)
-                fh.write(magic + zigzag(2)
-                         + zigzag(11) + b"avro.schema" + zigzag(len(sj)) + sj
-                         + zigzag(10) + b"avro.codec" + zigzag(len(cd)) + cd
-                         + zigzag(0) + sync)
-                st = open_files[key] = {"fh": fh, "sync": sync,
-                                        "pending": [], "target": target,
-                                        "rows": 0}
-            return st
+        def flush(count):
+            payload = compress(b"".join(pending[:count]))
+            out.write(zigzag(count) + zigzag(len(payload)) + payload + sync)
+            del pending[:count]
 
-        def flush(st, count):
-            payload = compress(b"".join(st["pending"][:count]))
-            st["fh"].write(zigzag(count) + zigzag(len(payload)) + payload
-                           + st["sync"])
-            del st["pending"][:count]
+        def write(batch):
+            pending.extend(encode(batch))
+            while len(pending) >= rows_per_block:
+                flush(rows_per_block)
 
-        try:
-            for batch in batches:
-                if not batch.num_rows:
-                    continue
-                rows = encode(batch)
-                if has_split:
-                    groups = {}
-                    for row, key in zip(
-                            rows, batch.column("_split").to_pylist()):
-                        groups.setdefault(key, []).append(row)
-                else:
-                    groups = {"": rows}
-                for key, chunk in groups.items():
-                    st = sink(key)
-                    st["pending"].extend(chunk)
-                    st["rows"] += len(chunk)
-                    while len(st["pending"]) >= rows_per_block:
-                        flush(st, rows_per_block)
-            for st in open_files.values():
-                if st["pending"]:
-                    flush(st, len(st["pending"]))
-        finally:
-            for st in open_files.values():
-                st["fh"].close()
-        written = sorted((spfx + st["target"], st["rows"])
-                         for st in open_files.values())
-        yield pa.RecordBatch.from_arrays(
-            [k.array([f for f, _ in written], pa.string()),
-             k.array([n for _, n in written], pa.int64())],
-            names=["file", "rows"])
+        def close():
+            if pending:
+                flush(len(pending))
 
-    stats = df.mapInArrow(write_task, "file string, rows long").collect()
-    return AvroWriteResult(files=sorted(r.file for r in stats),
-                           row_count=sum(r.rows for r in stats))
+        return write, close
+
+    return start
 
 
 _decode = _decoder_factory()

@@ -1,14 +1,14 @@
 """Python-side filesystem resolution for the pure-Python sinks/sources.
 
-The repo's JVM-side ``_HadoopFS`` wrapper (sources/writers.py) covers
-driver-side finalization (rename/list/delete) for everything written
-through Spark datasources. The pure-Python writers (TFRecord K3,
-avro-py K2 fallback) instead stream bytes from EXECUTOR tasks, where
-py4j access to the JVM Hadoop FileSystem does not exist — so they
-resolve the destination through ``pyarrow.fs``, Arrow's C++ filesystem
-layer, which handles ``file://``, ``hdfs://`` (libhdfs), ``s3://`` and
+Every file sink (sources/writers.write_sink: JSON/CSV, Avro, TFRecord,
+Parquet, ORC) streams bytes from EXECUTOR tasks, where py4j access to
+the JVM Hadoop FileSystem does not exist — so they resolve the
+destination through ``pyarrow.fs``, Arrow's C++ filesystem layer,
+which handles ``file://``, ``hdfs://`` (libhdfs), ``s3://`` and
 ``gs://`` natively from Python and ships in the pyarrow build every
-executor already carries for pandas UDFs.
+executor already carries for Arrow UDFs. The driver-side steps around
+a sink (clearing the target, the manifest, the empty-output file) go
+through this module's functions.
 
 Driver-side code imports :func:`resolve_fs` from here; executor
 closures inline the same three lines (a closure that referenced this

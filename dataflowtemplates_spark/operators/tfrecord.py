@@ -26,11 +26,12 @@ Reference type lowering reproduced (RecordToTFRecordConverter.java):
   `:165`; the evident intent, elements of the array, is implemented
   here. Divergence documented per SURVEY §7.3.)
 
-Execution shape: the sink is ONE ``mapInArrow`` stage. Each task
-encodes Examples straight from its Arrow record batches (one column
-conversion per batch, exact 64-bit ints), frames them with a batched
-numpy CRC32C, and streams its own .tfrecord(.gz) file(s) through
-``pyarrow.fs`` — no pandas, no driver collect of data. The module-level
+Execution shape: the sink is the record file writer of the one sink
+stage (sources/writers.write_sink). Each task encodes Examples
+straight from its Arrow record batches (one column conversion per
+batch, exact 64-bit ints), frames them with a batched numpy CRC32C,
+and streams its own .tfrecord(.gz) file(s) through ``pyarrow.fs`` —
+no pandas, no driver collect of data. The module-level
 protobuf helpers (``_example`` and friends) are the byte-level
 reference the kernel is tested against.
 """
@@ -43,8 +44,8 @@ import struct
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from dataflowtemplates_spark.operators.fsio import resolve_fs as _resolve_fs
 from dataflowtemplates_spark.operators.arrowkernels import arrow_kernels
+from dataflowtemplates_spark.sources.writers import write_sink
 
 # ---------------------------------------------------------------------------
 # Minimal protobuf writers (wire format is public and stable)
@@ -253,21 +254,22 @@ def _lowering(dt: T.DataType) -> tuple[str, str]:
 
 
 def _feature_source(df: DataFrame, passthrough: tuple[str, ...] = ()):
-    """-> (frame of ``passthrough`` columns then the flattened feature
-    columns, the Example kernel for that frame's Arrow batches)."""
+    """-> (the ``passthrough`` columns then the flattened feature
+    columns, as expressions over ``df``; the Example kernel for Arrow
+    batches of those columns)."""
     from pyspark.sql import functions as F
 
     from dataflowtemplates_spark.functions.convert import flatten_columns
 
-    source = df.select(*[F.col(c) for c in passthrough],
-                       *flatten_columns(df, skip=passthrough))
+    columns = [*[F.col(c) for c in passthrough],
+               *flatten_columns(df, skip=passthrough)]
     plans = []
-    for f in source.schema.fields[len(passthrough):]:
+    for f in df.select(*columns).schema.fields[len(passthrough):]:
         is_arr = isinstance(f.dataType, T.ArrayType)
         kind, conv = _lowering(f.dataType.elementType if is_arr
                                else f.dataType)
         plans.append((f.name, kind, conv, is_arr))
-    return source, _example_kernel_factory()(plans, len(passthrough))
+    return columns, _example_kernel_factory()(plans, len(passthrough))
 
 
 def _example_kernel_factory():
@@ -414,7 +416,8 @@ def encode_examples(df: DataFrame,
     uses, so the per-row Python cost is amortized per batch and fully
     distributed.
     """
-    source, encode = _feature_source(df, passthrough)
+    columns, encode = _feature_source(df, passthrough)
+    source = df.select(*columns)
     n_pass = len(passthrough)
     k = arrow_kernels()
 
@@ -437,104 +440,44 @@ def encode_examples(df: DataFrame,
 
 def write_tfrecords(df: DataFrame, path: str, split_field: str | None = None,
                     prefix: str = "output", compress: bool = True) -> list[str]:
-    """K3: write serialized Examples as .tfrecord(.gz) files.
-
-    One ``mapInArrow`` stage encodes, frames and writes: each task turns
-    its Arrow batches into Examples, frames them with one batched
-    CRC32C pass per batch, and streams them to
-    ``{prefix}-{partition:05d}.tfrecord(.gz)``; only (file, rows) pairs
-    come back to the driver. Without ``split_field`` the input
-    partitions are written as they are, one file per non-empty
-    partition. With it, rows are first shuffled by split key
-    (``repartition`` on the key, sized by AQE) and each task writes one
-    file per key it holds under ``path/<key>/`` (a null key writes at
-    the root, like the reference's empty-prefix naming).
-
-    All file I/O goes through ``pyarrow.fs`` resolved from the path's
-    scheme, ON THE EXECUTOR — so ``file://``, ``hdfs://``, ``s3://``
-    and ``gs://`` destinations all stream directly from the task that
-    produced the bytes.
+    """K3: write serialized Examples as .tfrecord(.gz) files through the
+    one sink stage (sources/writers.write_sink): one
+    ``{prefix}-{partition:05d}.tfrecord(.gz)`` per partition and split
+    key, under ``path/<key>/`` (a null key writes at the root, like the
+    reference's empty-prefix naming). Each task turns its Arrow batches
+    into Examples and frames them with one batched CRC32C pass per
+    batch; the file is gzipped whole when ``compress``. Returns the
+    written paths.
     """
-    from pyspark.sql import functions as F
-
-    fs0, base0 = _resolve_fs(path)
-    fs0.create_dir(base0, recursive=True)
+    columns, encode = _feature_source(df)
     suffix = ".tfrecord.gz" if compress else ".tfrecord"
+    return write_sink(df, path, _record_writer(encode, compress), suffix,
+                      "tfrecord", split_field=split_field, columns=columns,
+                      prefix=prefix).files
 
-    has_split = split_field is not None
-    if has_split:
-        keyed = df.withColumn(
-            "_split", F.coalesce(F.col(split_field).cast("string"), F.lit("")))
-        source, encode = _feature_source(keyed, passthrough=("_split",))
-        source = source.repartition(F.col("_split"))
-    else:
-        source, encode = _feature_source(df)
+
+def _record_writer(encode, compress: bool):
+    """File writer for write_sink: framed Examples, gzipped whole when
+    ``compress``. Self-contained."""
     frame_all = _framer_factory()
-    k = arrow_kernels()
 
-    def write_task(batches):
+    def start(out, schema):
         import gzip as _gzip
-        import posixpath as _pp
 
-        import pyarrow as pa
-        import pyarrow.fs as _pafs
-        from pyspark import TaskContext
+        # the .gz framing (gzip around the record stream) is ours: the
+        # sink opens the stream with no compression of its own
+        fh = _gzip.GzipFile(fileobj=out, mode="wb") if compress else out
 
-        if "://" in path:
-            fs, base = _pafs.FileSystem.from_uri(path)
-            spfx = path.split("://", 1)[0] + "://"
-        else:
-            fs, base = _pafs.LocalFileSystem(), path
-            spfx = ""
-        name = f"{prefix}-{TaskContext.get().partitionId():05d}{suffix}"
-        open_files = {}  # split key -> open .tfrecord(.gz) file
+        def write(batch):
+            fh.write(b"".join(frame_all(encode(batch))))
 
-        def sink(key):
-            st = open_files.get(key)
-            if st is None:
-                subdir = base if key == "" else _pp.join(base, key)
-                if key != "":
-                    fs.create_dir(subdir, recursive=True)
-                target = _pp.join(subdir, name)
-                # compression=None: no extension sniffing — the .gz
-                # framing (gzip around the record stream) is ours
-                raw = fs.open_output_stream(target, compression=None)
-                fh = _gzip.GzipFile(fileobj=raw, mode="wb") \
-                    if compress else raw
-                st = open_files[key] = {"raw": raw, "fh": fh,
-                                        "target": target, "rows": 0}
-            return st
+        def close():
+            if fh is not out:
+                fh.close()
 
-        try:
-            for batch in batches:
-                if not batch.num_rows:
-                    continue
-                frames = frame_all(encode(batch))
-                if has_split:
-                    groups = {}
-                    for frame, key in zip(frames,
-                                          batch.column(0).to_pylist()):
-                        groups.setdefault(key, []).append(frame)
-                else:
-                    groups = {"": frames}
-                for key, chunk in groups.items():
-                    st = sink(key)
-                    st["fh"].write(b"".join(chunk))
-                    st["rows"] += len(chunk)
-        finally:
-            for st in open_files.values():
-                st["fh"].close()
-                if st["fh"] is not st["raw"]:
-                    st["raw"].close()
-        written = sorted((spfx + st["target"], st["rows"])
-                         for st in open_files.values())
-        yield pa.RecordBatch.from_arrays(
-            [k.array([f for f, _ in written], pa.string()),
-             k.array([n for _, n in written], pa.int64())],
-            names=["file", "rows"])
+        return write, close
 
-    rows = source.mapInArrow(write_task, "file string, rows long").collect()
-    return sorted(r.file for r in rows)
+    return start
 
 
 # ---------------------------------------------------------------------------

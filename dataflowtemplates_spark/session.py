@@ -31,9 +31,9 @@ _BASE_CONFS: dict[str, str] = {
     # File-committer economics: nothing in this engine derives
     # atomicity from the Hadoop committer — the KeyedTable publishes
     # via a conditional-put log object against an immutable private
-    # staging dir, and the file writers publish via their own manifest
-    # (sources/writers.py) — so the v1 double-rename and the _SUCCESS
-    # marker buy nothing. Algorithm v2 commits task output directly
+    # staging dir, and the export file sinks write their final files
+    # from Python tasks without a committer (sources/writers.py) — so
+    # the v1 double-rename and the _SUCCESS marker buy nothing. Algorithm v2 commits task output directly
     # (one rename per file instead of two) and skips the marker write;
     # measured ~25% off the per-write constant on local FS. On a real
     # object store you'd swap in the cloud-native committer

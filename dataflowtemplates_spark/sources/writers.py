@@ -1,16 +1,26 @@
-"""Dynamic-destination file writers + finish transform (reference K1, K2, K9).
+"""Dynamic-destination file writers + finish transform (reference K1,
+K2, K3, K9).
+
+Every file sink of the engine is ONE destination-writing stage,
+:func:`write_sink`; the formats differ only in the small file writer
+they hand it.
 
 Reference semantics reproduced:
 
 * **Dynamic destinations** (templates/SpannerToText.java:118-130;
   transforms/sinks/TextDynamicSink.java:36-54): each row routes to a
   file group named after the value of `split_field`; a null split
-  value routes to the `""` group (StructToAvroTransform.java:84). In
-  Spark this is one `partitionBy` pass — no per-key re-scan.
-* **Header line** (TextDynamicSink.java:41-43) for CSV.
+  value routes to the `""` group, i.e. the output root
+  (StructToAvroTransform.java:84). Here the rows are shuffled by split
+  key and sorted within each partition, so every task meets each of
+  its keys as one contiguous run and writes it to
+  `<root>/<key>/{prefix}-{partition:05d}{suffix}` — no per-key
+  re-scan, no rename afterwards. A key that would resolve outside the
+  output root is refused before its file opens.
+* **Header line** (TextDynamicSink.java:41-43) for CSV, first in every
+  file.
 * **withoutSharding** (util/FixedFileNaming.java:27-34): exactly one
-  shard with a fixed filename `prefix + suffix` — `coalesce(1)` plus a
-  post-commit rename.
+  shard with a fixed filename `prefix + suffix` (`coalesce(1)`).
 * **Finish transform** (transforms/WriteFilesFinishTransform.java:39-61):
   - `output_notify`: one manifest file listing every written file path
     (newline-joined, the reference's Combine.globally string concat);
@@ -18,123 +28,28 @@ Reference semantics reproduced:
     output file containing `empty_text` so downstream consumers see a
     file (WriteFilesFinishTransform.java:48-52).
 
-Scale note: everything is a single `df.write` pass; the only
-deliberately non-scalable path is `without_sharding` (`coalesce(1)`),
-which exists for byte-parity with the reference's fixed-filename mode
-and should only be used for small exports — exactly the reference's
-own caveat for `withoutSharding`.
+Shards are numbered by the Spark partition that wrote them, so the
+numbers within one directory need not be consecutive.
+
+Scale note: every write is one Spark job over the input (plus the split
+shuffle); only (file, rows) pairs return to the driver. The deliberately
+non-scalable path is `without_sharding` (`coalesce(1)`), which exists
+for byte-parity with the reference's fixed-filename mode and should
+only be used for small exports — the reference's own caveat.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from dataclasses import dataclass, field
-from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataflowtemplates_spark.functions.convert import text_line
+from dataflowtemplates_spark.operators import fsio
+from dataflowtemplates_spark.operators.arrowkernels import arrow_kernels
 
-#: Spark's null-partition directory name, remapped to the reference's "".
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _SPLIT_COL = "_split"
-_LINE_COL = "_line"
-
-
-class _HadoopFS:
-    """Thin wrapper over the Hadoop FileSystem API so every post-write
-    finalization step (rename/list/delete) works on any Hadoop-visible
-    store (file://, hdfs://, gs://, s3a://) — the reference's naming
-    layer is FS-abstracted the same way (util/StorageUtil.java:31-49,
-    util/FixedFileNaming.java:27-34). Driver-side `os.walk`/`os.replace`
-    would be wrong everywhere except the local FS.
-
-    Paths whose scheme has a REGISTERED fsio object-store backend do
-    not come here at all — :func:`_fs_for` routes them to
-    :class:`_FsioFS`, so object-store finalization shares the exact
-    client (and conditional-put discipline) the KeyedTable commit
-    protocol uses instead of a second, parallel FS layer.
-    """
-
-    def __init__(self, df: DataFrame, root: str):
-        sc = df.sparkSession.sparkContext
-        self._jPath = sc._jvm.org.apache.hadoop.fs.Path
-        self._fs = self._jPath(root).getFileSystem(
-            sc._jsc.hadoopConfiguration())
-
-    def _p(self, path: str):
-        return self._jPath(path)
-
-    @staticmethod
-    def plain(jpath) -> str:
-        """file:///x -> /x (keeps full URIs for remote schemes)."""
-        uri = jpath.toUri()
-        scheme = uri.getScheme()
-        return uri.getPath() if scheme in (None, "file") else str(jpath)
-
-    def listdir(self, path: str) -> list[tuple[str, bool]]:
-        return [(st.getPath().getName(), st.isDirectory())
-                for st in self._fs.listStatus(self._p(path))]
-
-    def walk_files(self, root: str) -> list[str]:
-        out = []
-        it = self._fs.listFiles(self._p(root), True)
-        while it.hasNext():
-            out.append(self.plain(it.next().getPath()))
-        return sorted(out)
-
-    def rename(self, src: str, dst: str) -> None:
-        parent = self._p(dst).getParent()
-        if parent is not None and not self._fs.exists(parent):
-            self._fs.mkdirs(parent)
-        if not self._fs.rename(self._p(src), self._p(dst)):
-            raise IOError(f"rename failed: {src} -> {dst}")
-
-    def delete(self, path: str, recursive: bool = False) -> None:
-        self._fs.delete(self._p(path), recursive)
-
-
-class _FsioFS:
-    """The same finalization interface over operators/fsio.py, used
-    when the root's scheme has a registered object-store backend:
-    list/rename/delete then go through the one seam the commit
-    protocol already trusts (renames are copy+delete there — these
-    writers' finalization renames are single-writer by contract, so
-    they need no atomicity, only the shared client)."""
-
-    def __init__(self, root: str):
-        from dataflowtemplates_spark.operators import fsio
-        self._fsio = fsio
-
-    def listdir(self, path: str) -> list[tuple[str, bool]]:
-        # one typed listing, not an is_dir round trip per child
-        return self._fsio.list_dir_typed(path)
-
-    def walk_files(self, root: str) -> list[str]:
-        try:
-            return sorted(self._fsio.list_files(root))
-        except FileNotFoundError:
-            return []
-
-    def rename(self, src: str, dst: str) -> None:
-        self._fsio.move(src, dst)
-
-    def delete(self, path: str, recursive: bool = False) -> None:
-        if self._fsio.is_dir(path):
-            self._fsio.delete_dir(path)
-        elif self._fsio.exists(path):
-            self._fsio.delete_file(path)
-
-
-def _fs_for(df: DataFrame, root: str):
-    """Finalization FS for ``root``: the fsio seam when its scheme has
-    a registered object-store backend, the JVM Hadoop FS otherwise."""
-    from dataflowtemplates_spark.operators import fsio
-    if fsio._backend_for(root) is not None:
-        return _FsioFS(root)
-    return _HadoopFS(df, root)
 
 
 @dataclass
@@ -149,50 +64,178 @@ class WriteResult:
         return self.row_count == 0
 
 
-def _list_data_files(fs: _HadoopFS, root: str,
-                     suffix: str | None = None) -> list[str]:
-    out = []
-    for path in fs.walk_files(root):
-        fn = path.rsplit("/", 1)[-1]
-        if fn.startswith(("_", ".")):
-            continue
-        if suffix and not fn.endswith(suffix):
-            continue
-        out.append(path)
-    return sorted(out)
+def write_sink(df: DataFrame, path: str, start, suffix: str, fmt: str,
+               split_field: str | None = None,
+               columns: list[Column] | None = None,
+               prefix: str = "output",
+               without_sharding: bool = False) -> WriteResult:
+    """The one destination-writing stage every file sink runs.
 
+    Clears ``path``, then runs one ``mapInArrow`` stage over the
+    payload ``columns`` (expressions over ``df``; all of its columns by
+    default). With ``split_field`` the rows are first shuffled by the
+    key (``repartition`` on it, sized by AQE) and sorted within each
+    partition; without it the input partitions are written as they
+    are, or as one partition for ``without_sharding``. Each task slices
+    its Arrow batches into runs of one key, refuses a key that would
+    resolve outside the output root, and opens
+    ``{prefix}-{partition:05d}{suffix}`` (``{prefix}{suffix}`` for
+    ``without_sharding``) under ``<root>/<key>/`` through ``pyarrow.fs``
+    resolved from the path's scheme on the executor.
 
-def _split_value(entry: str, root: str) -> str:
-    """Decode Spark's partition-path escaping (%XX, the inverse of
-    escapePathName) back to the raw split value, and refuse values
-    whose decoded form would escape the output root."""
-    value = unquote(entry[len(_SPLIT_COL) + 1:])
-    resolved = os.path.normpath(os.path.join(root, value))
-    if not resolved.startswith(os.path.normpath(root) + os.sep):
-        raise ValueError(f"split value {value!r} escapes output root")
-    return value
+    ``start(stream, schema) -> (write, close)`` is the format's file
+    writer (a self-contained closure — it is pickled by value):
+    ``write(batch)`` gets Arrow batches of the payload columns holding
+    one key each, ``close()`` finishes the file before the stream is
+    closed. Only (file, rows) pairs return to the driver.
+    """
+    _clear(path)
+    payload = list(columns) if columns is not None else ["*"]
+    keyed = split_field is not None
+    if keyed:
+        key = F.coalesce(F.col(split_field).cast("string"), F.lit(""))
+        frame = (df.select(key.alias(_SPLIT_COL), *payload)
+                 .repartition(F.col(_SPLIT_COL))
+                 .sortWithinPartitions(_SPLIT_COL))
+    else:
+        frame = df.select(*payload)
+        if without_sharding:
+            frame = frame.coalesce(1)
+    k = arrow_kernels()
 
+    def task(batches):
+        import posixpath
 
-def _finalize_partition_dirs(fs: _HadoopFS, root: str) -> None:
-    """Rename `_split=value/` partition dirs to plain `value/` (value
-    percent-DECODED — Spark escapes ':', '/', '%', ... in partition
-    paths; the reference names by the raw key). The Hive null dir maps
-    to the reference's empty-string group: its files move to the ROOT
-    (the reference names outputs `prefix + key`, so an empty key means
-    no subpath — StructToAvroTransform.java:84). A leading-underscore
-    dir name would also be invisible to Hadoop-style readers, so root
-    placement is doubly right."""
-    for entry, is_dir in sorted(fs.listdir(root)):
-        if not (is_dir and entry.startswith(f"{_SPLIT_COL}=")):
-            continue
-        full = f"{root}/{entry}"
-        raw = entry[len(_SPLIT_COL) + 1:]
-        if raw == _HIVE_NULL:
-            for fn, _ in fs.listdir(full):
-                fs.rename(f"{full}/{fn}", f"{root}/{fn}")
-            fs.delete(full)
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.fs as pafs
+        from pyspark import TaskContext
+
+        if "://" in path:
+            fs, base = pafs.FileSystem.from_uri(path)
+            scheme = path.split("://", 1)[0] + "://"
         else:
-            fs.rename(full, f"{root}/{_split_value(entry, root)}")
+            fs, base = pafs.LocalFileSystem(), path
+            scheme = ""
+        root = posixpath.normpath(base)
+        name = (f"{prefix}{suffix}" if without_sharding else
+                f"{prefix}-{TaskContext.get().partitionId():05d}{suffix}")
+        written = []  # (file, rows) per finished file
+        done = set()  # keys whose file is open or finished
+        cur = None  # the open file: its key, stream, writer and row count
+
+        def open_file(key, schema):
+            if key in done:
+                raise RuntimeError(f"split key {key!r} is not contiguous")
+            done.add(key)
+            where = root
+            if key:
+                where = posixpath.normpath(posixpath.join(root, key))
+                if not where.startswith(root.rstrip("/") + "/"):
+                    raise ValueError(
+                        f"split value {key!r} escapes output root {path!r}")
+                fs.create_dir(where, recursive=True)
+            target = posixpath.join(where, name)
+            stream = fs.open_output_stream(target, compression=None)
+            write, close = start(stream, schema)
+            return {"key": key, "stream": stream, "write": write,
+                    "close": close, "file": scheme + target, "rows": 0}
+
+        def finish(f):
+            f["close"]()
+            f["stream"].close()
+            written.append((f["file"], f["rows"]))
+
+        try:
+            for batch in batches:
+                if not batch.num_rows:
+                    continue
+                if keyed:
+                    runs = pc.run_end_encode(batch.column(0))
+                    ends = runs.run_ends.to_pylist()
+                    keys = runs.values.to_pylist()
+                    batch = batch.select(list(range(1, batch.num_columns)))
+                else:
+                    ends, keys = [batch.num_rows], [""]
+                begin = 0
+                for key, end in zip(keys, ends):
+                    piece = batch.slice(begin, end - begin)
+                    begin = end
+                    if cur is None or cur["key"] != key:
+                        if cur is not None:
+                            finish(cur)
+                            cur = None  # finished: nothing left to close
+                        cur = open_file(key, piece.schema)
+                    cur["write"](piece)
+                    cur["rows"] += piece.num_rows
+            if cur is not None:
+                finish(cur)
+                cur = None
+        finally:
+            if cur is not None:
+                cur["stream"].close()
+        yield pa.RecordBatch.from_arrays(
+            [k.array([f for f, _ in written], pa.string()),
+             k.array([n for _, n in written], pa.int64())],
+            names=["file", "rows"])
+
+    stats = frame.mapInArrow(task, "file string, rows long").collect()
+    return WriteResult(files=sorted(r.file for r in stats),
+                       row_count=sum(r.rows for r in stats), format=fmt)
+
+
+def _clear(path: str) -> None:
+    """Remove whatever ``path`` holds and leave it an empty directory."""
+    if fsio.is_dir(path):
+        fsio.delete_dir(path)
+    elif fsio.exists(path):
+        fsio.delete_file(path)
+    fsio.mkdirs(path)
+
+
+def _text_writer(header: str | None):
+    """File writer for pre-rendered lines: each payload batch is one
+    string column whose values end in a newline; its value buffer is
+    written as is, after the header line if there is one."""
+    head = b"" if header is None else (header + "\n").encode()
+
+    def start(out, schema):
+        import numpy as np
+        import pyarrow as pa
+
+        if head:
+            out.write(head)
+
+        def write(batch):
+            lines = batch.column(0)
+            dtype = np.dtype(np.int64 if pa.types.is_large_string(lines.type)
+                             else np.int32)
+            lo, hi = np.frombuffer(lines.buffers()[1], dtype, len(lines) + 1,
+                                   lines.offset * dtype.itemsize)[[0, -1]]
+            out.write(lines.buffers()[2].slice(int(lo), int(hi - lo)))
+
+        return write, lambda: None
+
+    return start
+
+
+def _columnar_writer(fmt: str, compression: str):
+    """File writer for Parquet or ORC through pyarrow's writers."""
+
+    def start(out, schema):
+        import pyarrow as pa
+
+        if fmt == "parquet":
+            import pyarrow.parquet as pq
+
+            w = pq.ParquetWriter(out, schema, compression=compression)
+            return w.write_batch, w.close
+        import pyarrow.orc as orc
+
+        w = orc.ORCWriter(out, compression=compression)
+        return lambda batch: w.write(pa.Table.from_batches([batch])), w.close
+
+    return start
 
 
 def write_text_dynamic(df: DataFrame, path: str, fmt: str = "json",
@@ -205,84 +248,26 @@ def write_text_dynamic(df: DataFrame, path: str, fmt: str = "json",
                        output_notify: str | None = None) -> WriteResult:
     """K1: dynamic-destination CSV/JSON writer.
 
-    Rows are rendered to single-line strings by the conversion layer
-    (C1/C2 semantics: base64 bytes, Zulu timestamps, Java-style nested
-    rendering for CSV) and routed by ``split_field``.
+    Rows are rendered to single-line strings in the JVM by the
+    conversion layer (C1/C2 semantics: base64 bytes, Zulu timestamps,
+    Java-style nested rendering for CSV) and routed by ``split_field``
+    through :func:`write_sink`, which writes the rendered lines as they
+    are. With ``header`` a CSV file starts with the column names.
     """
     fmt = fmt.lower()
+    if fmt not in ("json", "csv"):
+        raise ValueError(f"unsupported text format {fmt!r}: json or csv")
     suffix = f".{fmt}"
-    rendered = df.withColumn(_LINE_COL, text_line(df, fmt))
-    if header and fmt == "csv":
-        head_line = ",".join(df.columns)
-    else:
-        head_line = None
-
-    # Row count rides on the write job itself (Observation metrics) —
-    # no separate pre-count scan of the input.
-    obs = Observation()
-    rendered = rendered.observe(obs, F.count(F.lit(1)).alias("n"))
-    fs = _fs_for(df, path)
-
-    def _emit(out: DataFrame, target: str) -> None:
-        """One pass. The CSV header is emitted BY THE EXECUTORS: the
-        line column is aliased to the header text and written through
-        the csv datasource with quoting/escaping disabled, so every
-        part file (including each per-split file under partitionBy)
-        starts with the header — no driver-side file rewriting
-        (the reference's TextDynamicSink.java:41-43 header contract).
-        """
-        writer = out.write.mode("overwrite")
-        if split_field is not None:
-            writer = writer.partitionBy(_SPLIT_COL)
-        if head_line is not None:
-            # single pre-rendered line column; delimiter/quote are
-            # control chars that never occur in the data, so the writer
-            # never quotes — lines and header land verbatim
-            writer.option("header", True).option("delimiter", "\x01") \
-                .option("quote", "\x02").option("emptyValue", "") \
-                .csv(target)
-        else:
-            writer.text(target)
-
-    if split_field is not None:
-        out = rendered.select(
-            F.col(split_field).cast("string").alias(_SPLIT_COL),
-            F.col(_LINE_COL).alias(head_line if head_line is not None
-                                   else "value"))
-        _emit(out, path)
-        n = int(obs.get["n"])
-        _finalize_partition_dirs(fs, path)
-        files = _rename_with_suffix(fs, path, prefix, suffix)
-    else:
-        out = rendered.select(
-            F.col(_LINE_COL).alias(head_line if head_line is not None
-                                   else "value"))
-        if without_sharding:
-            out = out.coalesce(1)
-        _emit(out, path)
-        n = int(obs.get["n"])
-        if without_sharding and n > 0:
-            files = _collapse_to_fixed_name(fs, path, f"{prefix}{suffix}")
-        else:
-            files = _rename_with_suffix(fs, path, prefix, suffix)
-
-    if n == 0:
-        for f_ in files:  # e.g. stray header-only shards
-            fs.delete(f_)
-        result = WriteResult(files=[], row_count=0, format=fmt)
-        if output_empty:
-            os.makedirs(path, exist_ok=True)
-            target = os.path.join(path, f"{prefix}{suffix}")
-            with open(target, "w") as fh:
-                if head_line is not None:
-                    fh.write(head_line + "\n")
-                if empty_text:
-                    fh.write(empty_text)
-            result.files.append(target)
-        _write_notify(result, output_notify)
-        return result
-
-    result = WriteResult(files=files, row_count=n, format=fmt)
+    head_line = ",".join(df.columns) if header and fmt == "csv" else None
+    line = F.concat(text_line(df, fmt), F.lit("\n")).alias("_line")
+    result = write_sink(df, path, _text_writer(head_line), suffix, fmt,
+                        split_field=split_field, columns=[line],
+                        prefix=prefix, without_sharding=without_sharding)
+    if result.empty and output_empty:
+        target = f"{path.rstrip('/')}/{prefix}{suffix}"
+        head = "" if head_line is None else head_line + "\n"
+        fsio.write_bytes(target, (head + empty_text).encode())
+        result.files.append(target)
     _write_notify(result, output_notify)
     return result
 
@@ -295,100 +280,27 @@ def write_columnar_dynamic(df: DataFrame, path: str,
     """K2: dynamic-destination columnar writer, Avro+snappy per the
     reference (transforms/sinks/AvroDynamicSink.java:33-49).
 
-    `fmt="avro"` always produces real .avro container files: the
-    spark-avro datasource when the jar is present, else the jar-less
-    container writer (operators/avro_io.py — one Arrow-batched
-    ``mapInArrow`` stage with Arrow's native snappy, so the reference's
-    pinned snappy+CRC block format is honored even jar-less). That
-    fallback streams from executor tasks through ``pyarrow.fs``
-    (operators/fsio.py), so `file://`/`hdfs://`/`s3://`/`gs://`
-    destinations all work; the pre-write cleanup goes through the
-    Hadoop FS like every other finalization step. Other formats go
-    through the native datasource with a parquet fallback.
-    (Schema handling needs none of the reference's per-key sampling:
-    `df.schema` is static.)
+    `fmt="avro"` produces real .avro container files through the
+    container writer in operators/avro_io.py (Arrow's native snappy, so
+    the reference's pinned snappy+CRC block format is honored without
+    the spark-avro jar); `"parquet"` and `"orc"` go through pyarrow's
+    writers. All three run in :func:`write_sink`. (Schema handling
+    needs none of the reference's per-key sampling: `df.schema` is
+    static.)
     """
-    actual = fmt
-    try:
-        _probe_format(df, fmt)
-    except Exception:
-        actual = "parquet" if fmt != "avro" else "avro-py"
-    if actual == "avro-py":
+    fmt = fmt.lower()
+    if fmt == "avro":
         from dataflowtemplates_spark.operators.avro_io import write_avro
-        _fs_for(df, path).delete(path, recursive=True)
-        r = write_avro(df, path, split_field=split_field, codec=compression)
-        result = WriteResult(files=r.files, row_count=r.row_count,
-                             format="avro")
-        _write_notify(result, output_notify)
-        return result
-    obs = Observation()
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    writer = (observed.withColumn(_SPLIT_COL,
-                                  F.coalesce(F.col(split_field).cast("string"),
-                                             F.lit("")))
-              .write.mode("overwrite").partitionBy(_SPLIT_COL)
-              if split_field is not None
-              else observed.write.mode("overwrite"))
-    writer.format(actual).option("compression", compression).save(path)
-    fs = _fs_for(df, path)
-    if split_field is not None:
-        _finalize_partition_dirs(fs, path)
-    result = WriteResult(files=_list_data_files(fs, path),
-                         row_count=int(obs.get["n"]), format=actual)
+        result = write_avro(df, path, split_field=split_field,
+                            codec=compression)
+    elif fmt in ("parquet", "orc"):
+        result = write_sink(df, path, _columnar_writer(fmt, compression),
+                            f".{fmt}", fmt, split_field=split_field)
+    else:
+        raise ValueError(
+            f"unsupported columnar format {fmt!r}: avro, parquet or orc")
     _write_notify(result, output_notify)
     return result
-
-
-_FORMAT_OK: dict[str, bool] = {}
-
-
-def _probe_format(df: DataFrame, fmt: str) -> None:
-    """Raise if the session cannot write ``fmt`` (checked once)."""
-    if fmt in ("parquet", "json", "csv", "text", "orc"):
-        return
-    if _FORMAT_OK.get(fmt):
-        return
-    import tempfile
-    probe_dir = tempfile.mkdtemp(prefix="fmt_probe_")
-    try:
-        df.limit(0).write.mode("overwrite").format(fmt).save(
-            os.path.join(probe_dir, "probe"))
-        _FORMAT_OK[fmt] = True
-    finally:
-        shutil.rmtree(probe_dir, ignore_errors=True)
-
-
-def _rename_with_suffix(fs: _HadoopFS, root: str, prefix: str,
-                        suffix: str) -> list[str]:
-    """part-00000-... -> {prefix}-{i:05d}{suffix}, per directory —
-    the reference's defaultNaming(prefix+key, suffix). All renames go
-    through the Hadoop FS, so this works on object stores too."""
-    by_dir: dict[str, list[str]] = {}
-    for p in fs.walk_files(root):
-        dirpath, fn = p.rsplit("/", 1)
-        if fn.startswith(("_", ".")) or not fn.startswith("part-"):
-            continue
-        by_dir.setdefault(dirpath, []).append(fn)
-    out = []
-    for dirpath, fns in by_dir.items():
-        for shard, fn in enumerate(sorted(fns)):
-            target = f"{dirpath}/{prefix}-{shard:05d}{suffix}"
-            fs.rename(f"{dirpath}/{fn}", target)
-            out.append(target)
-    return sorted(out)
-
-
-def _collapse_to_fixed_name(fs: _HadoopFS, root: str,
-                            filename: str) -> list[str]:
-    """withoutSharding: the single shard gets the exact fixed filename
-    (reference: util/FixedFileNaming.java:27-34)."""
-    parts = [fn for fn, is_dir in fs.listdir(root)
-             if not is_dir and fn.startswith("part-")
-             and not fn.endswith(".crc")]
-    assert len(parts) == 1, f"expected 1 shard, found {parts}"
-    target = f"{root}/{filename}"
-    fs.rename(f"{root}/{parts[0]}", target)
-    return [target]
 
 
 def _write_notify(result: WriteResult, notify_path: str | None) -> None:
@@ -399,7 +311,6 @@ def _write_notify(result: WriteResult, notify_path: str | None) -> None:
     of a driver-local ``open``."""
     if not notify_path:
         return
-    from dataflowtemplates_spark.operators import fsio
     parent = notify_path.rsplit("/", 1)[0] if "/" in notify_path else ""
     if parent:
         fsio.mkdirs(parent)

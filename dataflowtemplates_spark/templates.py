@@ -49,6 +49,7 @@ from dataflowtemplates_spark.sources.generator import (
 )
 from dataflowtemplates_spark.sources.writers import (
     WriteResult,
+    _write_notify,
     write_columnar_dynamic,
     write_text_dynamic,
 )
@@ -220,11 +221,7 @@ def query_to_tfrecord(spark: SparkSession, query: str, output: str,
     65-114): query -> TF Examples -> gzip .tfrecord, keyed by split."""
     df = run_query(spark, query)
     files = write_tfrecords(df, output, split_field=split_field, prefix=prefix)
-    if output_notify:
-        import os
-        os.makedirs(os.path.dirname(output_notify) or ".", exist_ok=True)
-        with open(output_notify, "w") as fh:
-            fh.write("\n".join(files))
+    _write_notify(WriteResult(files=files), output_notify)
     return files
 
 

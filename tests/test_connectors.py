@@ -92,13 +92,11 @@ def _spark_avro_jar_present() -> bool:
 
 def test_avro_datasource_dispatch_and_interchange(spark, tmp_path):
     """S5/K2 datasource seam, exercised in BOTH environments (never
-    skipped). Jar present: the dynamic columnar writer must select the
-    native spark-avro datasource and its files must round-trip through
-    it. Jar absent (this sandbox cannot fetch it): the writer must fall
-    back to the pure-Python container codec — and the fallback's output
-    is held to the same interchange bar by decoding it under the
-    REFERENCE Avro Java implementation Spark bundles (avro-1.12.1.jar),
-    the proven yardstick from test_avro.py. Either way the contract
+    skipped). The dynamic columnar writer always uses the container
+    writer (operators/avro_io.py). Jar present: its files must
+    round-trip through the native spark-avro datasource. Jar absent:
+    they are decoded under the REFERENCE Avro Java implementation Spark
+    bundles (avro-1.12.1.jar), the proven yardstick from test_avro.py. Either way the contract
     'fmt="avro" produces real snappy OCF files another engine can read'
     is asserted, not assumed."""
     import glob
