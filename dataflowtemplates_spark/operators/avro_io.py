@@ -33,8 +33,8 @@ Scale stance: the writer is the container file writer of the one sink
 stage (sources/writers.write_sink) — each task encodes its Arrow
 record batches column by column and streams one container file per
 partition and split key (like the reference's dynamic destinations);
-only file paths and row counts return to the driver. Reads
-parallelize over the file list, one decode task per container file.
+only file paths and row counts return to the driver. Reads decode
+one container file per task through the same executor file seam.
 
 Executor self-containment: the encoder/decoder are built by factory
 functions and captured as CLOSURES (pickled by value), never as module
@@ -47,10 +47,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dataflowtemplates_spark.operators.fsio import (
-    list_files as _list_files,
-    resolve_fs as _resolve_fs,
-)
+from dataflowtemplates_spark.operators import fsio
+from dataflowtemplates_spark.operators.objstore_plane import scan_files
 from dataflowtemplates_spark.operators.arrowkernels import arrow_kernels
 from dataflowtemplates_spark.functions.avroschema import (
     avro_schema_from_spark,
@@ -302,20 +300,18 @@ def _snappy_decompressor():
 
 
 def _decoder_factory():
-    """Returns decode(raw_bytes, utc=False) -> (schema_dict, rows).
-    Timestamps decode as naive UTC datetimes, or as UTC-aware ones with
-    ``utc=True`` (what ``createDataFrame`` needs to keep the instant
-    under any process timezone). Self-contained (the snappy decoder is
-    built here and rides the closure by value)."""
+    """Returns decode(raw_bytes) -> (schema_dict, rows). Timestamps
+    decode as naive UTC datetimes. Self-contained (the snappy decoder
+    is built here and rides the closure by value)."""
 
     snappy_decompress = _snappy_decompressor()
 
-    def decode(raw, utc=False):
+    def decode(raw):
         import json as _json
         import struct as _struct
         import zlib as _zlib
         from datetime import date as _date, datetime as _dt, \
-            timedelta as _td, timezone as _tz
+            timedelta as _td
         from decimal import Decimal as _Dec
 
         class Cur:
@@ -368,7 +364,7 @@ def _decoder_factory():
                     return lambda c: _date(1970, 1, 1) + _td(days=c.zig())
                 if logical in ("timestamp-millis", "timestamp-micros"):
                     unit = 1000 if logical == "timestamp-millis" else 1
-                    epoch = _dt(1970, 1, 1, tzinfo=_tz.utc if utc else None)
+                    epoch = _dt(1970, 1, 1)
                     return lambda c: (epoch
                                       + _td(microseconds=c.zig() * unit))
                 if logical == "decimal":
@@ -640,17 +636,15 @@ _build_resolver = _resolver_factory()
 
 def read_avro_rows(path: str):
     """Driver-side decode of one .avro file -> (schema_dict, rows)."""
-    fs, base = _resolve_fs(path)
-    with fs.open_input_stream(base) as fh:
-        return _decode(fh.read())
+    return _decode(fsio.read_bytes(path))
 
 
 def read_avro(spark: SparkSession, path: str,
               reader_schema: dict | None = None) -> DataFrame:
-    """Distributed read: one decode task per container file (S5).
-
-    Listing and the per-file open both resolve through ``pyarrow.fs``,
-    so any scheme the writer can target reads back the same way.
+    """Distributed read (S5): one ``mapInArrow`` stage, one decode task
+    per container file (objstore_plane.scan_files). Files are listed
+    through fsio and opened through the executor file seam
+    (fsio.task_files), so any target the sink writes to reads back.
 
     With ``reader_schema`` (an Avro record schema dict) each file is
     decoded under ITS OWN embedded writer schema and then resolved to
@@ -658,40 +652,37 @@ def read_avro(spark: SparkSession, path: str,
     for reader-only fields, numeric/string promotions, writer-only
     fields dropped) — so a directory whose files were written across a
     schema migration reads back as ONE uniform frame. Without it, the
-    first file's schema is the frame schema (homogeneous directories,
-    the reference's behavior — AvroToSpanner reads the embedded schema
-    only)."""
-    try:
-        files = _list_files(path, suffix=".avro")
-    except FileNotFoundError:
-        files = []
-    if not files:
+    first file's schema is the frame schema and every file must carry
+    it (homogeneous directories, the reference's behavior —
+    AvroToSpanner reads the embedded schema only); one that does not
+    raises.
+
+    Each file becomes one Arrow batch built from Python objects, which
+    makes pyarrow import pandas in a worker that reads Avro (the sinks
+    and the TFRecord reader stay pandas-free)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    files = fsio.task_files(path)
+    listed = fsio.list_files(path, suffix=".avro")
+    if not listed:
         raise FileNotFoundError(f"no .avro files under {path}")
-    if reader_schema is None:
-        target_avro, _ = read_avro_rows(files[0])
-    else:
-        target_avro = reader_schema
+    target_avro = (read_avro_rows(listed[0])[0] if reader_schema is None
+                   else reader_schema)
     spark_schema = spark_schema_from_avro(target_avro)
-    names = [f.name for f in spark_schema.fields]
+    arrow_schema = to_arrow_schema(spark_schema)
     decode = _decode
     build_resolver = _build_resolver if reader_schema is not None else None
-    reader_json = json.dumps(target_avro) if reader_schema is not None \
-        else None
 
     def load(p):
-        import json as _json
+        import pyarrow as pa
 
-        import pyarrow.fs as _pafs
-        if "://" in p:
-            fs, lp = _pafs.FileSystem.from_uri(p)
-        else:
-            fs, lp = _pafs.LocalFileSystem(), p
-        with fs.open_input_stream(lp) as fh:
-            wschema, rows = decode(fh.read(), utc=True)
+        wschema, rows = decode(files.read_bytes(p))
         if build_resolver is not None:
-            adapt = build_resolver(wschema, _json.loads(reader_json))
+            adapt = build_resolver(wschema, reader_schema)
             rows = [adapt(r) for r in rows]
-        return [tuple(r[n] for n in names) for r in rows]
+        elif wschema != target_avro:
+            raise ValueError(f"{p}: writer schema differs from the first "
+                             "file's; pass reader_schema to resolve it")
+        yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-    rdd = spark.sparkContext.parallelize(files, len(files)).flatMap(load)
-    return spark.createDataFrame(rdd, schema=spark_schema)
+    return scan_files(spark, [(f, None) for f in listed], spark_schema, load)

@@ -1,19 +1,11 @@
-"""Python-side filesystem resolution for the pure-Python sinks/sources.
+"""Python-side filesystem resolution for the engine's own file I/O.
 
-Every file sink (sources/writers.write_sink: JSON/CSV, Avro, TFRecord,
-Parquet, ORC) streams bytes from EXECUTOR tasks, where py4j access to
-the JVM Hadoop FileSystem does not exist — so they resolve the
-destination through ``pyarrow.fs``, Arrow's C++ filesystem layer,
-which handles ``file://``, ``hdfs://`` (libhdfs), ``s3://`` and
-``gs://`` natively from Python and ships in the pyarrow build every
-executor already carries for Arrow UDFs. The driver-side steps around
-a sink (clearing the target, the manifest, the empty-output file) go
-through this module's functions.
-
-Driver-side code imports :func:`resolve_fs` from here; executor
-closures inline the same three lines (a closure that referenced this
-module by name would require the package on the worker's import path,
-which the self-containment contract of those closures avoids).
+Driver-side steps (a sink's clearing, manifest and empty-output file,
+the KeyedTable commit log, a reader's listing) call this module's
+functions. Executor tasks, which have no py4j access to the JVM Hadoop
+FileSystem, reach every file the engine encodes or decodes through one
+seam, :func:`task_files`: a registered distributed backend (the S3/GCS
+HTTP clients) or else ``pyarrow.fs``.
 
 OBJECT-STORE BACKENDS. The KeyedTable commit protocol
 (operators/mutations.py) needs one primitive rename-based filesystems
@@ -245,21 +237,66 @@ def resolve_fs(path: str):
     return pafs.LocalFileSystem(), path
 
 
+def task_files(path: str):
+    """How executor tasks reach the files at and under ``path``,
+    resolved on the driver before the caller touches anything. A
+    registered distributed backend (S3/GCS HTTP) is pickled to the
+    tasks; its ``open_write`` streams parts of at least 8 MB, so a task
+    holds one part per open file. A registered backend tasks cannot
+    reach (a :class:`MemoryObjectStore` lives in driver memory) raises
+    ``ValueError``. Any other path gets its ``pyarrow.fs`` filesystem
+    here, so an unknown scheme raises on the driver.
+
+    Returns ``scheme``, ``root`` (``path`` without it) and closures
+    over full paths, as :func:`list_files` returns them:
+    ``open_write(p)``, ``read_bytes(p)`` and ``abandon(stream)``, which
+    drops a stream after a task error — aborting an object-store
+    upload, since closing it would publish a partial object."""
+    from types import SimpleNamespace
+
+    scheme = path.split("://", 1)[0] + "://" if "://" in path else ""
+    backend = _backend_for(path)
+    if backend is not None:
+        if not getattr(backend, "distributed", False):
+            raise ValueError(f"executor tasks cannot reach scheme "
+                             f"{scheme[:-3]!r}'s {type(backend).__name__}")
+        open_write, read_bytes = backend.open_write, backend.read_bytes
+    else:
+        fs, _ = resolve_fs(path)
+
+        def open_write(p):
+            import posixpath
+
+            local = p[len(scheme):]
+            fs.create_dir(posixpath.dirname(local), recursive=True)
+            return fs.open_output_stream(local, compression=None)
+
+        def read_bytes(p):
+            with fs.open_input_stream(p[len(scheme):],
+                                      compression=None) as fh:
+                return fh.read()
+
+    def abandon(stream):
+        getattr(stream, "abandon", stream.close)()
+
+    return SimpleNamespace(scheme=scheme, root=path[len(scheme):],
+                           open_write=open_write, abandon=abandon,
+                           read_bytes=read_bytes)
+
+
 def read_bytes(path: str) -> bytes:
     """Whole-file read through pyarrow.fs (scheme-general)."""
     b = _backend_for(path)
     if b is not None:
         return b.read_bytes(path)
     fs, base = resolve_fs(path)
-    with fs.open_input_stream(base) as fh:
+    with fs.open_input_stream(base, compression=None) as fh:
         return fh.read()
 
 
 def write_bytes(path: str, data: bytes) -> None:
     """Whole-file write through pyarrow.fs. NOT atomic on its own —
-    callers needing atomic metadata swaps write a temp name and
-    :func:`move` over (rename-capable filesystems), per their own
-    single-writer contract."""
+    callers needing an atomic publish use :func:`create_exclusive`."""
     b = _backend_for(path)
     if b is not None:
         return b.write_bytes(path, data)
@@ -341,25 +378,6 @@ def mkdirs(path: str) -> None:
         return b.mkdirs(path)
     fs, base = resolve_fs(path)
     fs.create_dir(base, recursive=True)
-
-
-def move(src: str, dst: str) -> None:
-    """Rename src -> dst (file or directory), replacing a same-type
-    dst where the underlying FS allows it. A metadata-only rename on
-    local/HDFS; object stores emulate directory moves per object —
-    commit protocols must not rely on this (the KeyedTable's
-    log-structured commit uses create_exclusive on immutable objects
-    instead)."""
-    b = _backend_for(src)
-    if b is not None:
-        return b.move(src, dst)
-    fs, sbase = resolve_fs(src)
-    _fs2, dbase = resolve_fs(dst)
-    import pyarrow.fs as pafs
-    info = fs.get_file_info(dbase)
-    if info.type == pafs.FileType.File:
-        fs.delete_file(dbase)
-    fs.move(sbase, dbase)
 
 
 def delete_dir(path: str) -> None:

@@ -41,10 +41,11 @@ plane, not a driver shim:
 * **Read** (:func:`read_parquet`): the driver lists the snapshot's
   leaf directories through the backend (bucket pruning happened
   upstream in the ``_owners`` fold — the file list IS the pruned
-  scan), then ``mapInArrow`` over a one-file-per-partition path frame
-  fetches and decodes each object executor-side, conforming to the
-  table schema (missing columns null-fill: the engine's
-  schema-evolution rule, same as parquet's missing-column semantics).
+  scan), then one ``mapInArrow`` task per packed bin of objects
+  (:func:`scan_files`) fetches and decodes each object executor-side,
+  conforming to the table schema (missing columns null-fill: the
+  engine's schema-evolution rule, same as parquet's missing-column
+  semantics).
 
 Scale notes: both directions are map-only (no shuffle, no
 driver-side data movement; the driver handles O(files) strings).
@@ -244,6 +245,31 @@ def _pack_files(sized_files: list, target_bytes: int,
     return [sorted(b) for b in bins if b]
 
 
+def scan_files(spark: SparkSession, sized_files: list, schema,
+               per_file) -> DataFrame:
+    """The executor fan-out of the engine file readers (parquet, Avro,
+    TFRecord) and the distributed snapshot listing: ``(path, size)``
+    pairs packed into bins of ~``_PACK_TARGET_BYTES`` by
+    :func:`_pack_files` (amortizing per-task worker cost over small
+    files; unknown sizes get a bin each), one ``mapInArrow`` task per
+    bin, ``per_file(path)`` yielding the file's Arrow batches in
+    ``schema``. Tasks are a JVM range of bin indexes, the bins riding in
+    the task closure: no Python stage or shuffle runs before the scan."""
+    if not sized_files:
+        return spark.createDataFrame([], schema)
+    bins = _pack_files(sized_files, _PACK_TARGET_BYTES,
+                       spark.sparkContext.defaultParallelism)
+
+    def task(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                for path in bins[i]:
+                    yield from per_file(path)
+
+    return spark.range(len(bins), numPartitions=len(bins)) \
+        .mapInArrow(task, schema)
+
+
 def _group_leaf_dirs(leaf_dirs: list[str]) -> dict[str, set[str]]:
     """Leaves group under their commit directory
     (``.../data/vNNNNN-x/kb=B``) -> {commit_dir: {leaf names}}."""
@@ -294,31 +320,22 @@ def _list_leaf_files(leaf_dirs: list[str], backend,
 def _list_leaf_files_distributed(spark: SparkSession,
                                  by_parent: dict[str, set[str]],
                                  backend) -> list[tuple]:
-    """One executor task per commit dir issues that dir's paginated
-    LIST through the pickled backend; the collected result is the
-    same O(files) ``(path, size)`` manifest the driver path
-    produces."""
-    def task(batches):
+    """One executor task per commit dir (:func:`scan_files`) issues that
+    dir's paginated LIST through the pickled backend; the collected
+    result is the same O(files) ``(path, size)`` manifest the driver
+    path produces."""
+    def list_dir(parent):
         import pyarrow as pa
 
-        for batch in batches:
-            out: list[tuple] = []
-            for parent, leaves in zip(
-                    batch.column("parent").to_pylist(),
-                    batch.column("leaves").to_pylist()):
-                out.extend(_list_commit_dir(backend, parent,
-                                            set(leaves)))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([f for f, _ in out], pa.string()),
-                 pa.array([(-1 if s is None else s) for _, s in out],
-                          pa.int64())],
-                names=["file", "size"])
+        out = _list_commit_dir(backend, parent, by_parent[parent])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([f for f, _ in out], pa.string()),
+             pa.array([(-1 if s is None else s) for _, s in out],
+                      pa.int64())],
+            names=["file", "size"])
 
-    items = sorted((p, sorted(ls)) for p, ls in by_parent.items())
-    frame = spark.createDataFrame(
-        items, "parent string, leaves array<string>")
-    rows = (frame.repartition(len(items))
-            .mapInArrow(task, "file string, size long").collect())
+    rows = scan_files(spark, [(p, None) for p in by_parent],
+                      "file string, size long", list_dir).collect()
     return [(r["file"], (None if r["size"] < 0 else int(r["size"])))
             for r in rows]
 
@@ -381,15 +398,13 @@ def read_parquet(spark: SparkSession, leaf_dirs: list[str],
                  for f in backend.list_files(d, suffix=".parquet")]
     final_schema = (T.StructType([schema[c] for c in out_names])
                     if out_names is not None else schema)
-    if not sized:
-        return spark.createDataFrame([], final_schema)
     arrow_schema = _arrow_schema(schema)
     ranged = (columns is not None and hasattr(backend, "read_tail")
               and hasattr(backend, "read_range"))
     names = list(schema.names)
     final_names = list(final_schema.names)
 
-    def task(batches):
+    def read_file(path):
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -397,50 +412,33 @@ def read_parquet(spark: SparkSession, leaf_dirs: list[str],
         if ranged:
             from dataflowtemplates_spark.operators import rangedparquet
 
-        cmp_fn = {"==": pc.equal, "<=": pc.less_equal,
-                  ">=": pc.greater_equal, "<": pc.less,
-                  ">": pc.greater}
-        for batch in batches:
-            flat = (p for bin_paths in batch.column("paths").to_pylist()
-                    for p in bin_paths)
-            for path in flat:
-                if ranged:
-                    tbl = rangedparquet.fetch_table(
-                        backend, path, names, predicate=predicate)
-                else:
-                    raw = backend.read_bytes(path)
-                    tbl = pq.read_table(pa.BufferReader(raw))
-                cols = []
-                for field in arrow_schema:
-                    if field.name in tbl.column_names:
-                        cols.append(tbl.column(field.name)
-                                    .cast(field.type))
-                    else:
-                        cols.append(pa.nulls(tbl.num_rows, field.type))
-                out = pa.table(dict(zip(arrow_schema.names, cols)),
-                               schema=arrow_schema)
-                if predicate:
-                    # the EXACT residual filter: statistics pruned
-                    # groups, not rows (and the non-ranged path never
-                    # pruned at all) — three-valued null semantics
-                    mask = None
-                    for pname, op, val in predicate:
-                        c = cmp_fn[op](out.column(pname),
-                                       pa.scalar(val))
-                        mask = (c if mask is None
-                                else pc.and_kleene(mask, c))
-                    out = out.filter(
-                        pc.fill_null(mask, False))
-                if final_names != list(out.column_names):
-                    out = out.select(final_names)
-                yield from out.to_batches()
+            tbl = rangedparquet.fetch_table(
+                backend, path, names, predicate=predicate)
+        else:
+            raw = backend.read_bytes(path)
+            tbl = pq.read_table(pa.BufferReader(raw))
+        cols = []
+        for field in arrow_schema:
+            if field.name in tbl.column_names:
+                cols.append(tbl.column(field.name).cast(field.type))
+            else:
+                cols.append(pa.nulls(tbl.num_rows, field.type))
+        out = pa.table(dict(zip(arrow_schema.names, cols)),
+                       schema=arrow_schema)
+        if predicate:
+            # the EXACT residual filter: statistics pruned groups, not
+            # rows (and the non-ranged path never pruned at all) —
+            # three-valued null semantics
+            cmp_fn = {"==": pc.equal, "<=": pc.less_equal,
+                      ">=": pc.greater_equal, "<": pc.less,
+                      ">": pc.greater}
+            mask = None
+            for pname, op, val in predicate:
+                c = cmp_fn[op](out.column(pname), pa.scalar(val))
+                mask = c if mask is None else pc.and_kleene(mask, c)
+            out = out.filter(pc.fill_null(mask, False))
+        if final_names != list(out.column_names):
+            out = out.select(final_names)
+        yield from out.to_batches()
 
-    # bins of ~_PACK_TARGET_BYTES per task (floored at the cluster's
-    # parallelism): one tiny object per task would pay Python-worker
-    # and scheduling overhead per object; large objects still get a
-    # task each, matching the native source's split granularity
-    bins = _pack_files(sized, _PACK_TARGET_BYTES,
-                       spark.sparkContext.defaultParallelism)
-    paths = spark.createDataFrame([(b,) for b in bins],
-                                  "paths array<string>")
-    return paths.repartition(len(bins)).mapInArrow(task, final_schema)
+    return scan_files(spark, sized, final_schema, read_file)

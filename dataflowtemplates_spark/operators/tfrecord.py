@@ -30,10 +30,10 @@ Execution shape: the sink is the record file writer of the one sink
 stage (sources/writers.write_sink). Each task encodes Examples
 straight from its Arrow record batches (one column conversion per
 batch, exact 64-bit ints), frames them with a batched numpy CRC32C,
-and streams its own .tfrecord(.gz) file(s) through ``pyarrow.fs`` —
-no pandas, no driver collect of data. The module-level
-protobuf helpers (``_example`` and friends) are the byte-level
-reference the kernel is tested against.
+and streams its own .tfrecord(.gz) file(s) through the executor file
+seam (fsio.task_files) — no pandas, no driver collect of data. The
+module-level protobuf helpers (``_example`` and friends) are the
+byte-level reference the kernel is tested against.
 """
 
 from __future__ import annotations
@@ -44,7 +44,9 @@ import struct
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from dataflowtemplates_spark.operators import fsio
 from dataflowtemplates_spark.operators.arrowkernels import arrow_kernels
+from dataflowtemplates_spark.operators.objstore_plane import scan_files
 from dataflowtemplates_spark.sources.writers import write_sink
 
 # ---------------------------------------------------------------------------
@@ -514,13 +516,15 @@ def read_tfrecord_df(spark, path: str,
     files); malformed wire types raise with the offending field rather
     than silently dropping values.
 
-    Scale shape: files are listed by Spark's binaryFile source and
-    parsed in a ``mapInArrow`` stage — one task per file group, no
-    driver involvement, every record's CRC32C verified in one batched
-    pass per file, and each file's rows built as an Arrow batch against
-    the declared schema (int64 values stay exact; no pandas). TFRecord
-    shards are single-file atomic, so parallelism = file count (the K3
-    writer emits one file per partition, preserving it round-trip).
+    Scale shape: the ``*.tfrecord*`` files under ``path`` (hidden names
+    skipped) are listed through fsio and parsed in one ``mapInArrow``
+    stage (objstore_plane.scan_files), one task per file, each read
+    through the executor file seam (fsio.task_files). Every record's
+    CRC32C is verified in one batched pass per file, and each file's
+    rows are built as an Arrow batch against the declared schema
+    (int64 values stay exact; no pandas). TFRecord shards are
+    single-file atomic, so parallelism = file count (the K3 writer
+    emits one file per partition, preserving it round-trip).
     """
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -537,9 +541,10 @@ def read_tfrecord_df(spark, path: str,
     lsts = set(list_fields)
     masked_crcs = _crc32c_factory()
     k = arrow_kernels()
+    files = fsio.task_files(path)
 
     # Self-contained on executors (same stance as the write kernels).
-    def parse_files(batches):
+    def parse_file(fpath):
         import gzip as _gz
         import struct as _st
 
@@ -689,30 +694,27 @@ def read_tfrecord_df(spark, path: str,
                         out[name] = vals
             return out
 
-        for batch in batches:
-            for fpath, content in zip(batch.column("path").to_pylist(),
-                                      batch.column("content").to_pylist()):
-                if str(fpath).endswith(".gz"):
-                    content = _gz.decompress(content)
-                cols = {name: [] for name in spec}
-                for payload in frames(content, fpath):
-                    ex = decode(payload)
-                    for name, kind in spec.items():
-                        vals = ex.get(name)
-                        if vals is not None and kind == "string":
-                            vals = [v.decode("utf-8", errors="replace")
-                                    if isinstance(v, bytes) else v
-                                    for v in vals]
-                        if name in lsts:
-                            cols[name].append(vals)
-                        else:
-                            cols[name].append(vals[0] if vals else None)
-                yield pa.RecordBatch.from_arrays(
-                    [k.array(cols[f.name], f.type) for f in arrow_schema],
-                    schema=arrow_schema)
+        content = files.read_bytes(fpath)
+        if fpath.endswith(".gz"):
+            content = _gz.decompress(content)
+        cols = {name: [] for name in spec}
+        for payload in frames(content, fpath):
+            ex = decode(payload)
+            for name, kind in spec.items():
+                vals = ex.get(name)
+                if vals is not None and kind == "string":
+                    vals = [v.decode("utf-8", errors="replace")
+                            if isinstance(v, bytes) else v
+                            for v in vals]
+                if name in lsts:
+                    cols[name].append(vals)
+                else:
+                    cols[name].append(vals[0] if vals else None)
+        yield pa.RecordBatch.from_arrays(
+            [k.array(cols[f.name], f.type) for f in arrow_schema],
+            schema=arrow_schema)
 
-    src = spark.read.format("binaryFile") \
-        .option("pathGlobFilter", "*.tfrecord*") \
-        .option("recursiveFileLookup", "true") \
-        .load(path)
-    return src.select("path", "content").mapInArrow(parse_files, out_schema)
+    listed = [f for f in fsio.list_files(path)
+              if ".tfrecord" in f.rsplit("/", 1)[-1]]
+    return scan_files(spark, [(f, None) for f in listed], out_schema,
+                      parse_file)

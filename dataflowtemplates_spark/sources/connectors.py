@@ -51,7 +51,7 @@ _PROVIDER_CLASSES = {
 _SQL_KINDS = {"spanner-sql", "bigquery-sql"}
 #: Spec kinds whose payload is a table name (fall back to the catalog).
 _TABLE_KINDS = {"bigquery-table"}
-#: File formats served by native Spark datasources everywhere.
+#: File formats: native Spark datasources, and avro_io.read_avro for avro.
 _FILE_KINDS = {"parquet", "csv", "json", "avro", "orc", "text"}
 #: JDBC kinds — the one DATABASE connector whose provider ships in
 #: core Spark, so unlike the cloud kinds this path EXECUTES here
@@ -104,6 +104,9 @@ def resolve(spark: SparkSession, spec: SourceSpec) -> dict:
     if kind in _FILE_KINDS:
         if not spec.path:
             raise ValueError(f"{kind} source needs a path")
+        if kind == "avro" and spec.options:
+            raise ValueError("the avro reader takes no options, got "
+                             f"{sorted(spec.options)}")
         return {"backend": "file", "format": kind, "options": spec.options}
     if kind in _SQL_KINDS:
         if not spec.query:
@@ -159,6 +162,9 @@ def read_source(spark: SparkSession, spec: SourceSpec,
     plan = resolve(spark, spec)
     backend = plan["backend"]
     if backend == "file":
+        if plan["format"] == "avro":
+            from dataflowtemplates_spark.operators.avro_io import read_avro
+            return read_avro(spark, spec.path)
         reader = spark.read.format(plan["format"])
         if plan["options"]:
             reader = reader.options(**plan["options"])

@@ -71,17 +71,19 @@ def write_sink(df: DataFrame, path: str, start, suffix: str, fmt: str,
                without_sharding: bool = False) -> WriteResult:
     """The one destination-writing stage every file sink runs.
 
-    Clears ``path``, then runs one ``mapInArrow`` stage over the
-    payload ``columns`` (expressions over ``df``; all of its columns by
-    default). With ``split_field`` the rows are first shuffled by the
-    key (``repartition`` on it, sized by AQE) and sorted within each
-    partition; without it the input partitions are written as they
-    are, or as one partition for ``without_sharding``. Each task slices
-    its Arrow batches into runs of one key, refuses a key that would
-    resolve outside the output root, and opens
-    ``{prefix}-{partition:05d}{suffix}`` (``{prefix}{suffix}`` for
-    ``without_sharding``) under ``<root>/<key>/`` through ``pyarrow.fs``
-    resolved from the path's scheme on the executor.
+    Resolves ``path`` through :func:`fsio.task_files` (which raises if
+    tasks cannot reach it), clears it, then runs one ``mapInArrow``
+    stage over the payload ``columns`` (expressions over ``df``; all of
+    its columns by default). With ``split_field`` the rows are first
+    shuffled by the key (``repartition`` on it, sized by AQE) and
+    sorted within each partition; without it the input partitions are
+    written as they are, or as one partition for ``without_sharding``.
+    Each task slices its Arrow batches into runs of one key, refuses a
+    key that would resolve outside the output root (the path after its
+    scheme), and opens ``{prefix}-{partition:05d}{suffix}``
+    (``{prefix}{suffix}`` for ``without_sharding``) under
+    ``<root>/<key>/`` through the seam; on a task error the open file
+    is abandoned, so no partial object is published.
 
     ``start(stream, schema) -> (write, close)`` is the format's file
     writer (a self-contained closure — it is pickled by value):
@@ -89,6 +91,7 @@ def write_sink(df: DataFrame, path: str, start, suffix: str, fmt: str,
     one key each, ``close()`` finishes the file before the stream is
     closed. Only (file, rows) pairs return to the driver.
     """
+    files = fsio.task_files(path)
     _clear(path)
     payload = list(columns) if columns is not None else ["*"]
     keyed = split_field is not None
@@ -108,16 +111,9 @@ def write_sink(df: DataFrame, path: str, start, suffix: str, fmt: str,
 
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.fs as pafs
         from pyspark import TaskContext
 
-        if "://" in path:
-            fs, base = pafs.FileSystem.from_uri(path)
-            scheme = path.split("://", 1)[0] + "://"
-        else:
-            fs, base = pafs.LocalFileSystem(), path
-            scheme = ""
-        root = posixpath.normpath(base)
+        root = posixpath.normpath(files.root)
         name = (f"{prefix}{suffix}" if without_sharding else
                 f"{prefix}-{TaskContext.get().partitionId():05d}{suffix}")
         written = []  # (file, rows) per finished file
@@ -134,12 +130,11 @@ def write_sink(df: DataFrame, path: str, start, suffix: str, fmt: str,
                 if not where.startswith(root.rstrip("/") + "/"):
                     raise ValueError(
                         f"split value {key!r} escapes output root {path!r}")
-                fs.create_dir(where, recursive=True)
-            target = posixpath.join(where, name)
-            stream = fs.open_output_stream(target, compression=None)
+            target = files.scheme + posixpath.join(where, name)
+            stream = files.open_write(target)
             write, close = start(stream, schema)
             return {"key": key, "stream": stream, "write": write,
-                    "close": close, "file": scheme + target, "rows": 0}
+                    "close": close, "file": target, "rows": 0}
 
         def finish(f):
             f["close"]()
@@ -173,7 +168,7 @@ def write_sink(df: DataFrame, path: str, start, suffix: str, fmt: str,
                 cur = None
         finally:
             if cur is not None:
-                cur["stream"].close()
+                files.abandon(cur["stream"])
         yield pa.RecordBatch.from_arrays(
             [k.array([f for f, _ in written], pa.string()),
              k.array([n for _, n in written], pa.int64())],

@@ -43,6 +43,7 @@ from dataflowtemplates_spark.operators.mutations import (
 )
 from dataflowtemplates_spark.operators.tfrecord import write_tfrecords
 from dataflowtemplates_spark.plans import run_query
+from dataflowtemplates_spark.sources.connectors import SourceSpec, read_source
 from dataflowtemplates_spark.sources.generator import (
     TableSpec,
     generate_table,
@@ -115,8 +116,7 @@ def query_to_jdbc(spark: SparkSession, query: str, url: str, table: str,
     JDBC source) — the same notification semantics as the managed
     branch ``query_to_table``, so the CLI's one-line JSON means the
     same thing on either sink."""
-    from dataflowtemplates_spark.sources.connectors import (
-        SourceSpec, read_source, write_jdbc)
+    from dataflowtemplates_spark.sources.connectors import write_jdbc
     df = run_query(spark, query, timestamp_bound, keyed_tables)
     write_jdbc(df, url, table, mode=mode, options=jdbc_options)
     return read_source(spark, SourceSpec(
@@ -229,22 +229,11 @@ def files_to_keyed_table(spark: SparkSession, path: str, table: KeyedTable,
                          fmt: str = "parquet", op: str = "INSERT_OR_UPDATE",
                          **options) -> MutationResult:
     """AvroToSpanner (reference: templates/AvroToSpanner.java:68-85):
-    file glob -> mutations. 'avro' reads real container files (via the
-    datasource jar when present, else operators/avro_io.read_avro);
-    parquet/json/csv go through the native reader."""
-    df = _read_any(spark, path, fmt, **options)
+    file glob -> mutations, the files read by connectors.read_source
+    ('avro' by operators/avro_io.read_avro)."""
+    df = read_source(spark, SourceSpec(fmt, path=path, options=options))
     table.create(df)
     return table.apply_mutations(df, op)
-
-
-def _read_any(spark: SparkSession, path: str, fmt: str, **options):
-    if fmt == "avro":
-        try:
-            return spark.read.format("avro").options(**options).load(path)
-        except Exception:
-            from dataflowtemplates_spark.operators.avro_io import read_avro
-            return read_avro(spark, path)
-    return spark.read.format(fmt).options(**options).load(path)
 
 
 def files_to_entities(spark: SparkSession, path: str, output: str,
@@ -252,7 +241,7 @@ def files_to_entities(spark: SparkSession, path: str, output: str,
                       exclude_from_indexes: tuple[str, ...] = (),
                       **options) -> int:
     """AvroToDatastore (reference: templates/AvroToDatastore.java:63-81)."""
-    df = _read_any(spark, path, fmt, **options)
+    df = read_source(spark, SourceSpec(fmt, path=path, options=options))
     return write_entities_json(df, output, kind, key_field,
                                exclude_from_indexes)
 

@@ -261,6 +261,10 @@ def test_reader_schema_resolution_across_files(spark, tmp_path):
            "fields": [{"name": "missing", "type": "string"}]}
     with _pytest.raises(Exception, match="declares no default"):
         read_avro(spark, str(tmp_path / "evo"), reader_schema=bad).collect()
+    # without a reader schema a second writer schema is refused, not
+    # read as the first file's columns
+    with _pytest.raises(Exception, match="writer schema differs"):
+        read_avro(spark, str(tmp_path / "evo")).collect()
 
 
 def _jvm_avro(spark):

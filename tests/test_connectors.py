@@ -61,6 +61,24 @@ def test_file_spec_passes_options_verbatim(spark, tmp_path):
     assert {(r["a"], r["b"]) for r in rows} == {("1", "x"), ("2", "y")}
 
 
+def test_avro_spec_reads_through_the_engine_reader(spark, tmp_path):
+    """``kind="avro"`` needs no spark-avro jar: it reads the container
+    files through operators/avro_io.read_avro. That reader takes no
+    options, so an avro spec carrying some is refused, not dropped."""
+    from pyspark.sql import Row
+
+    from dataflowtemplates_spark.operators.avro_io import write_avro
+
+    out = str(tmp_path / "av")
+    write_avro(spark.createDataFrame([Row(id=1, v="a"), Row(id=2, v=None)]),
+               out)
+    got = read_source(spark, SourceSpec(kind="avro", path=out)).collect()
+    assert sorted((r.id, r.v) for r in got) == [(1, "a"), (2, None)]
+    with pytest.raises(ValueError, match="ignoreExtension"):
+        read_source(spark, SourceSpec(kind="avro", path=out,
+                                      options={"ignoreExtension": "true"}))
+
+
 def test_table_fallback_reads_catalog(spark):
     register_tables(spark, SF)
     spec = SourceSpec(kind="bigquery-table", table="region")

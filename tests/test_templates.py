@@ -116,6 +116,19 @@ def test_files_to_keyed_table(spark, tmp_path):
     assert r.applied == 2
 
 
+def test_files_to_keyed_table_from_avro(spark, tmp_path):
+    from dataflowtemplates_spark.operators.avro_io import write_avro
+
+    src = str(tmp_path / "asrc")
+    write_avro(spark.createDataFrame([Row(id=1, v="a"), Row(id=2, v="b")]),
+               src)
+    t = KeyedTable(spark, str(tmp_path / "kt_avro"), ["id"])
+    r = tpl.files_to_keyed_table(spark, src, t, fmt="avro", op="INSERT")
+    assert r.applied == 2
+    assert sorted((x.id, x.v) for x in t.read().collect()) == \
+        [(1, "a"), (2, "b")]
+
+
 def test_files_to_entities(spark, tmp_path):
     src = str(tmp_path / "esrc")
     spark.createDataFrame([Row(id=1, v="a")]).write.json(src)

@@ -306,7 +306,8 @@ def test_write_tfrecords_file_uri_scheme(spark, tmp_path):
     for f in files:
         total += read_tfrecords(f.removeprefix("file://"))
     assert len(total) == 2
-    # the distributed reader takes the URI directly (binaryFile source)
+    # the distributed reader takes the URI directly (fsio listing, read
+    # in tasks through fsio.task_files)
     from dataflowtemplates_spark.operators.tfrecord import read_tfrecord_df
     back = read_tfrecord_df(spark, out, {"s": "string", "i": "int64"})
     assert {(r.s, r.i) for r in back.collect()} == {("x", 1), ("y", 2)}
