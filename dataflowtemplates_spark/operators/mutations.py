@@ -227,12 +227,12 @@ class KeyedTable:
         #: semantics); with it off (default) they are dropped at the
         #: boundary, mirroring the STRUCT/nested-array skip.
         self.schema_evolution = bool(schema_evolution)
-        #: Object-rotation row count for THIS handle's writes through
-        #: the object-store data plane (objstore_plane._FLUSH_ROWS
-        #: when None) — the object-size tuning knob: at scale pick it
-        #: so row_width x flush_rows lands objects in the tens of MB.
-        #: A write-side option (like a parquet block size), not table
-        #: config: readers never consult it.
+        #: Rows per parquet row group of THIS handle's writes through
+        #: the object-store data plane (pyarrow's default when None):
+        #: smaller groups give the plane's statistics pruning finer
+        #: units to refute. A write-side option (like a parquet block
+        #: size), not table config: readers never consult it. Object
+        #: sizes follow n_buckets: one object per bucket per task.
         self._plane_flush_rows = (None if plane_flush_rows is None
                                   else int(plane_flush_rows))
         #: log objects are immutable once written, so parsed entries
@@ -502,6 +502,17 @@ class KeyedTable:
                     f"floor: version {floor})")
         return version
 
+    def _leaf_dirs(self, version: int,
+                   only_buckets: list[int] | None = None) -> list[str]:
+        """The leaf directories holding the table's rows at
+        ``version`` (optionally only the given buckets'), from the
+        ``_owners`` metadata fold."""
+        only = (None if only_buckets is None
+                else {int(b) for b in only_buckets})
+        return [posixpath.join(self.path, "data", d, f"{_BUCKET_COL}={b}")
+                for b, d in sorted(self._owners(version).items())
+                if d is not None and (only is None or b in only)]
+
     def _snapshot(self, version: int,
                   only_buckets: list[int] | None = None,
                   columns: list[str] | None = None,
@@ -513,12 +524,7 @@ class KeyedTable:
         EXACTLY the requested buckets' current leaf directories —
         pruning happens before the file index is even built, and no
         data is scanned to resolve a snapshot."""
-        owners = self._owners(version)
-        only = (None if only_buckets is None
-                else {int(b) for b in only_buckets})
-        leafs = [posixpath.join(self.path, "data", d, f"{_BUCKET_COL}={b}")
-                 for b, d in sorted(owners.items())
-                 if d is not None and (only is None or b in only)]
+        leafs = self._leaf_dirs(version, only_buckets)
         schema = self._schema()
         known = {f.name for f in schema.fields}
         if columns is not None:
@@ -741,11 +747,9 @@ class KeyedTable:
         table state, including NON-idempotent folds like additive
         counters.
 
-        ``collapsed`` is a CALLER CONTRACT (the same device as
-        ``write_partitioned``'s deterministic-order contract) that
-        skips the per-commit annotate-and-checkpoint job for
-        REPLACE / INSERT_OR_UPDATE: a dict
-        ``{"buckets": sorted bucket ids of the batch's keys,
+        ``collapsed`` is a CALLER CONTRACT that skips the per-commit
+        annotate-and-checkpoint job for REPLACE / INSERT_OR_UPDATE: a
+        dict ``{"buckets": sorted bucket ids of the batch's keys,
         "n_rows": exact batch row count, "n_buckets": the bucket
         count those ids were hashed under}`` asserting the batch
         holds EXACTLY ONE row per key and NO null key field — true by
@@ -1324,13 +1328,16 @@ class KeyedTable:
 
     # -- storage ---------------------------------------------------------
     def _apply_clustering(self, staged: DataFrame,
-                          cluster: dict | None,
-                          tiebreak: tuple = ()) -> DataFrame:
-        """Sort the staged slice within each bucket partition by the
-        table's cluster key (from the commit config), so every
-        committed file carries tight parquet min/max stats on the
-        clustered columns — the write-time purchase of read-time file
-        and row-group skipping that q171 measures.
+                          cluster: dict | None) -> DataFrame:
+        """Sort the staged slice within each partition by the bucket
+        column, then by the table's cluster key (from the commit
+        config), so every committed file carries tight parquet min/max
+        stats on the clustered columns — the write-time purchase of
+        read-time file and row-group skipping that q171 measures. The
+        bucket column always leads: both writers need each bucket as
+        one contiguous run (the native ``partitionBy`` writer would
+        otherwise sort by it itself; the object-store plane's sink
+        stage raises on a bucket met twice).
 
         linear: sortWithinPartitions on the columns in order. zorder:
         min/max-normalize the two columns over THIS slice (a broadcast
@@ -1339,25 +1346,12 @@ class KeyedTable:
         map-side only: no exchange is added after the bucket
         repartition, and the helper columns are projected away before
         the write (a projection preserves per-partition sort order).
-        NULL cluster values sort first, deterministically.
-
-        ``tiebreak`` (the orderable key expressions, supplied on the
-        object-store plane path) is appended after the cluster order —
-        keys are unique per row, so the within-partition sequence
-        becomes a TOTAL order, i.e. a pure function of the partition's
-        row multiset rather than of shuffle arrival order. The plane's
-        retry-overwrites-same-bytes idempotence needs exactly that
-        (objstore_plane.write_partitioned's caller contract); the
-        native committer path gets the same guarantee from
-        task-attempt promotion and skips the extra sort."""
+        NULL cluster values sort first, deterministically."""
         if not cluster:
-            if tiebreak:
-                return staged.sortWithinPartitions(
-                    _BUCKET_COL, *tiebreak)
-            return staged
+            return staged.sortWithinPartitions(_BUCKET_COL)
         if cluster["mode"] == "linear":
             return staged.sortWithinPartitions(
-                _BUCKET_COL, *cluster["by"], *tiebreak)
+                _BUCKET_COL, *cluster["by"])
         from dataflowtemplates_spark.functions.zorder import (
             normalized_zorder_spark)
         c1, c2 = cluster["by"]
@@ -1372,7 +1366,7 @@ class KeyedTable:
             e1, e2, "__zlo1", "__zhi1", "__zlo2", "__zhi2")
         return (staged.crossJoin(F.broadcast(bounds))
                 .withColumn("__zval", F.expr(z))
-                .sortWithinPartitions(_BUCKET_COL, "__zval", *tiebreak)
+                .sortWithinPartitions(_BUCKET_COL, "__zval")
                 .drop("__zlo1", "__zhi1", "__zlo2", "__zhi2", "__zval"))
 
     def _commit_buckets(self, new_slice: DataFrame | None,
@@ -1416,30 +1410,16 @@ class KeyedTable:
                           .withColumn(_BUCKET_COL,
                                       self._bucket_expr(n_buckets))
                           .repartition(len(touched), F.col(_BUCKET_COL)))
-                plane = fsio.distributed_backend_for(data_dir)
-                tiebreak: tuple = ()
-                if plane is not None:
-                    # the plane's retry idempotence requires the
-                    # within-partition row sequence to be a pure
-                    # function of the row multiset: total-order by the
-                    # (unique) table keys after any cluster order
-                    types = {f.name: f.dataType
-                             for f in new_slice.schema.fields}
-                    tiebreak = tuple(
-                        _orderable_expr(F.col(k), types[k])
-                        for k in self.keys)
                 staged = self._apply_clustering(staged,
-                                                cfg.get("cluster"),
-                                                tiebreak)
-                if plane is not None:
+                                                cfg.get("cluster"))
+                if fsio.distributed_backend_for(data_dir) is not None:
                     # executor tasks stream parquet straight to the
                     # object store through the pickled backend
                     from dataflowtemplates_spark.operators import (
                         objstore_plane)
-                    kw = ({} if self._plane_flush_rows is None
-                          else {"flush_rows": self._plane_flush_rows})
                     objstore_plane.write_partitioned(
-                        staged, data_dir, _BUCKET_COL, plane, **kw)
+                        staged, data_dir, _BUCKET_COL,
+                        self._plane_flush_rows)
                 else:
                     (staged.write.mode("overwrite")
                      .partitionBy(_BUCKET_COL).parquet(data_dir))

@@ -12,32 +12,22 @@ effect. This sandbox ships neither connector jar, so this module
 provides the pure-Python equivalent — and it is a real distributed
 plane, not a driver shim:
 
-* **Write** (:func:`write_partitioned`): ``mapInArrow`` over the
-  staged slice — each EXECUTOR task serializes its partition's rows
-  to parquet bytes per bucket (pyarrow, snappy) and PUTs them
-  straight to the store through the pickled backend
-  (``S3HttpBackend``/``GcsHttpBackend`` pickle by configuration).
-  Part objects are named ``part-{partition:05d}-{seq:04d}.parquet``
-  and rotate at an exact ROW count (``flush_rows``), sliced
-  independently of arrow batch boundaries — so the seq SET a task
-  writes is a pure function of its partition's (deterministic) row
-  multiset, never of compression ratios. CALLER CONTRACT: the
-  within-partition row ORDER must also be a pure function of that
-  multiset — arrival order out of a shuffle is not deterministic
-  across task attempts, so the caller sorts each partition by a total
-  order first (KeyedTable sorts by bucket, cluster order, then the
-  unique table keys — mutations._apply_clustering). With that, a task
-  retry or speculative attempt overwrites exactly the same object
-  names with the same row sets, leaving no stale higher-seq debris to
-  duplicate rows — the idempotence Spark's own committers get from
-  task-attempt promotion. Backends exposing a streaming sink
-  (S3 multipart upload via ``open_write``) get row groups streamed
-  through BOUNDED memory (one in-flight part, default 8 MB) however
-  large the object; buffer-and-PUT is the fallback for backends
-  without one, bounded by ``flush_rows`` x row width. A multipart
-  retry is still safe: parts stage invisibly under an UploadId and
-  only CompleteMultipartUpload materializes the (deterministically
-  named) object, overwriting like a plain PUT.
+* **Write** (:func:`write_partitioned`): the staged slice runs the
+  engine's one sink stage (``sources/writers.sink_stage``, the stage
+  every export runs): each EXECUTOR task writes one snappy parquet
+  object per bucket it holds, ``kb=B/part-{partition:05d}.parquet``,
+  through the seam's pickled backend (``fsio.task_files``;
+  ``S3HttpBackend``/``GcsHttpBackend`` pickle by configuration), the
+  object-store analogue of Spark's native ``partitionBy`` writer.
+  Objects stream as S3 multipart uploads or GCS resumable sessions in
+  parts of at least 8 MB, so a task holds one part per open object
+  however large it grows; parts stage invisibly and only the complete
+  call materializes the object. A failed task abandons its open
+  upload. Retry idempotence comes from the names alone: every attempt
+  at a partition writes the whole bucket slice under the same object
+  name, so a task retry or speculative attempt replaces whole objects
+  and leaves no debris to duplicate rows, whatever order its rows
+  arrived in.
 * **Read** (:func:`read_parquet`): the driver lists the snapshot's
   leaf directories through the backend (bucket pruning happened
   upstream in the ``_owners`` fold — the file list IS the pruned
@@ -73,17 +63,11 @@ SCALE.md).
 
 from __future__ import annotations
 
-import os
-import posixpath
-
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: rotate part objects at exactly this many rows (see the module
-#: docstring: a ROW-count boundary is deterministic across task
-#: attempts, a byte boundary is not). 256k rows of ~100-500 B keeps
-#: objects in the tens-of-MB range and executor buffers bounded.
-_FLUSH_ROWS = 1 << 18
+from dataflowtemplates_spark.operators import fsio
 
 
 def _arrow_schema(spark_schema: T.StructType):
@@ -93,107 +77,25 @@ def _arrow_schema(spark_schema: T.StructType):
 
 
 def write_partitioned(staged: DataFrame, data_dir: str, bucket_col: str,
-                      backend, flush_rows: int = _FLUSH_ROWS,
-                      part_bytes: int = 8 * 1024 * 1024) -> None:
-    """Write ``staged`` (which carries ``bucket_col``) as
-    ``data_dir/{bucket_col}={b}/part-*.parquet`` objects via
-    ``backend``, from executor tasks. Mirrors
+                      row_group_size: int | None = None):
+    """Write ``staged`` as ``data_dir/{bucket_col}={b}/part-*.parquet``
+    objects from executor tasks, like
     ``df.write.partitionBy(bucket_col).parquet(data_dir)``: the bucket
-    column lives in the directory name, not in the files. Every part
-    object holds EXACTLY ``flush_rows`` rows except a bucket's last —
-    which makes retries overwrite instead of duplicate PROVIDED the
-    caller delivers each partition's rows in a deterministic total
-    order (see the module docstring's caller contract)."""
-    out_schema = T.StructType(
-        [f for f in staged.schema.fields if f.name != bucket_col])
-    arrow_out = _arrow_schema(out_schema)
+    column lives in the directory name, not in the files. CALLER
+    CONTRACT: ``bucket_col`` is the leading sort key of every
+    partition (the sink stage raises on a bucket met twice).
+    ``row_group_size`` caps the rows of a parquet row group. Returns
+    the stage's ``WriteResult``."""
+    from dataflowtemplates_spark.sources import writers
 
-    def task(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        state: dict[int, dict] = {}
-        next_seq: dict[int, int] = {}
-        manifest: list[tuple[int, str, int]] = []
-        # backends exposing a streaming sink (S3 multipart upload) get
-        # rows streamed through bounded memory; others buffer the
-        # whole (rotation-bounded) object and PUT once
-        streaming = hasattr(backend, "open_write")
-
-        def fresh(b, seq):
-            key = posixpath.join(
-                data_dir, f"{bucket_col}={b}",
-                f"part-{pid:05d}-{seq:04d}.parquet")
-            sink = backend.open_write(key, part_bytes=part_bytes) \
-                if streaming else pa.BufferOutputStream()
-            return {"sink": sink, "key": key, "rows": 0, "seq": seq,
-                    "writer": pq.ParquetWriter(sink, arrow_out,
-                                               compression="snappy")}
-
-        def flush(b, st):
-            st["writer"].close()
-            if streaming:
-                st["sink"].close()  # finalize (idempotent if the
-                #                     parquet writer closed it already)
-            else:
-                backend.write_bytes(
-                    st["key"], st["sink"].getvalue().to_pybytes())
-            manifest.append((b, st["key"], st["rows"]))
-
-        try:
-            for batch in batches:
-                tbl = pa.Table.from_batches([batch])
-                kb = tbl.column(bucket_col)
-                for b in pc.unique(kb).to_pylist():
-                    part = (tbl.filter(pc.equal(kb, b))
-                            .drop_columns([bucket_col])
-                            .cast(arrow_out))
-                    # slice at exact flush_rows boundaries, independent
-                    # of arrow batch framing: object row counts (and so
-                    # the seq set) depend only on the partition's row
-                    # multiset
-                    while part.num_rows:
-                        if b not in state:  # lazily, so a flush at an
-                            #   exact boundary never opens an unused
-                            #   sink
-                            state[b] = fresh(b, next_seq.get(b, 0))
-                        st = state[b]
-                        take = min(part.num_rows,
-                                   flush_rows - st["rows"])
-                        st["writer"].write_table(part.slice(0, take))
-                        st["rows"] += take
-                        part = part.slice(take)
-                        if st["rows"] >= flush_rows:
-                            flush(b, st)
-                            del state[b]
-                            next_seq[b] = st["seq"] + 1
-            for b, st in state.items():
-                if st["rows"]:
-                    flush(b, st)
-        except BaseException:
-            if streaming:
-                # abort every staged upload/session this task opened:
-                # incomplete uploads are invisible to LIST, so no
-                # later directory cleanup could find them
-                for st in state.values():
-                    try:
-                        st["sink"].abandon()
-                    except Exception:  # noqa: BLE001 - best-effort
-                        pass
-            raise
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([m[0] for m in manifest], pa.int64()),
-             pa.array([m[1] for m in manifest], pa.string()),
-             pa.array([m[2] for m in manifest], pa.int64())],
-            names=["bucket", "key", "rows"])
-
-    # the collect() is the ACTION that runs the distributed write;
-    # the manifest is O(part files), driver-safe
-    staged.mapInArrow(task, "bucket long, key string, rows long") \
-        .collect()
+    split = F.concat(F.lit(f"{bucket_col}="),
+                     F.col(bucket_col).cast("string"))
+    frame = staged.select(split.alias("_split"), *[
+        F.col(c) for c in staged.columns if c != bucket_col])
+    return writers.sink_stage(
+        frame, fsio.task_files(data_dir),
+        writers._columnar_writer("parquet", "snappy", row_group_size),
+        ".parquet", "parquet", "part")
 
 
 #: snapshots spanning at least this many distinct commit dirs list
@@ -204,15 +106,13 @@ _DIST_LIST_MIN_DIRS = 8
 
 #: Partition packing: target bytes of parquet objects per scan task.
 #: One object per task matches the native source's file-split
-#: granularity when objects are tens of MB (the n_buckets /
-#: flush_rows sizing), but a small-object layout then pays Python
-#: worker spin-up and task scheduling PER TINY OBJECT (guide §4/§6).
-#: Packing bins objects into ~this many bytes per task, floored at
-#: the cluster's default parallelism so a small scan still fills
-#: every core; object sizes ride the snapshot LIST for free.
-#: Env-tunable for deployments with different object economics.
-_PACK_TARGET_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_PLANE_PACK_BYTES", str(32 << 20)))
+#: granularity when objects are tens of MB (the n_buckets sizing), but
+#: a small-object layout then pays Python worker spin-up and task
+#: scheduling PER TINY OBJECT (guide §4/§6). Packing bins objects into
+#: ~this many bytes per task, floored at the cluster's default
+#: parallelism so a small scan still fills every core; object sizes
+#: ride the snapshot LIST for free.
+_PACK_TARGET_BYTES = 32 << 20
 
 
 def _pack_files(sized_files: list, target_bytes: int,
@@ -340,6 +240,30 @@ def _list_leaf_files_distributed(spark: SparkSession,
             for r in rows]
 
 
+def read_object(backend, path: str, arrow_schema, ranged: bool,
+                predicate: list[tuple] | None = None):
+    """One parquet object as an Arrow table conformed to
+    ``arrow_schema`` (missing columns null-fill: the engine's
+    schema-evolution rule), read executor-side through ``backend``.
+    ``ranged`` fetches the footer and the schema's column chunks only,
+    skipping row groups whose footer statistics refute ``predicate``
+    (operators/rangedparquet.py); otherwise the whole object is
+    fetched. Rows are not filtered here."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if ranged:
+        from dataflowtemplates_spark.operators import rangedparquet
+
+        tbl = rangedparquet.fetch_table(backend, path, arrow_schema.names,
+                                        predicate=predicate)
+    else:
+        tbl = pq.read_table(pa.BufferReader(backend.read_bytes(path)))
+    cols = [tbl.column(f.name).cast(f.type) if f.name in tbl.column_names
+            else pa.nulls(tbl.num_rows, f.type) for f in arrow_schema]
+    return pa.table(dict(zip(arrow_schema.names, cols)), schema=arrow_schema)
+
+
 def read_parquet(spark: SparkSession, leaf_dirs: list[str],
                  schema: T.StructType, backend,
                  columns: list[str] | None = None,
@@ -401,30 +325,13 @@ def read_parquet(spark: SparkSession, leaf_dirs: list[str],
     arrow_schema = _arrow_schema(schema)
     ranged = (columns is not None and hasattr(backend, "read_tail")
               and hasattr(backend, "read_range"))
-    names = list(schema.names)
     final_names = list(final_schema.names)
 
     def read_file(path):
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        if ranged:
-            from dataflowtemplates_spark.operators import rangedparquet
-
-            tbl = rangedparquet.fetch_table(
-                backend, path, names, predicate=predicate)
-        else:
-            raw = backend.read_bytes(path)
-            tbl = pq.read_table(pa.BufferReader(raw))
-        cols = []
-        for field in arrow_schema:
-            if field.name in tbl.column_names:
-                cols.append(tbl.column(field.name).cast(field.type))
-            else:
-                cols.append(pa.nulls(tbl.num_rows, field.type))
-        out = pa.table(dict(zip(arrow_schema.names, cols)),
-                       schema=arrow_schema)
+        out = read_object(backend, path, arrow_schema, ranged, predicate)
         if predicate:
             # the EXACT residual filter: statistics pruned groups, not
             # rows (and the non-ranged path never pruned at all) —

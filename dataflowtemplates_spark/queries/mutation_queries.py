@@ -1892,7 +1892,7 @@ def q190_ranged_read_audit(spark: SparkSession,
     the driver-gated probe for this round's column projection +
     row-group predicate skipping (operators/rangedparquet.py): a
     KeyedTable of WIDE rows (a ~4 KB incompressible pad column) is
-    written through the data plane with small object rotation
+    written through the data plane with small row groups
     (``plane_flush_rows``) and key-clustered files, then read three
     ways against the emulator's byte counter:
 
@@ -1901,7 +1901,7 @@ def q190_ranged_read_audit(spark: SparkSession,
       ``predicate=[('c_custkey', '>=', cut)]`` for the top 1/8 key
       range) — footers plus a few narrow chunks;
     * the same predicate PROJECTING the fat column — row-group
-      statistics refute the non-matching objects, so their pad
+      statistics refute the non-matching row groups, so their pad
       chunks are never fetched.
 
     The relational outputs (counts and decimal-exact sums from each
@@ -1943,8 +1943,8 @@ def q190_ranged_read_audit(spark: SparkSession,
     try:
         t = KeyedTable(spark, "s3r://q190/tbl", ["c_custkey"],
                        n_buckets=1, cluster_by=["c_custkey"],
-                       plane_flush_rows=128)  # ~512 KB objects with
-        #   disjoint key ranges: rotation slices the cluster order
+                       plane_flush_rows=128)  # ~512 KB row groups
+        #   with disjoint key ranges: they slice the cluster order
         t.apply_mutations(sample, "INSERT")
 
         emu.object_get_bytes = 0
@@ -2028,12 +2028,12 @@ def q191_datasource_pushdown_audit(spark: SparkSession,
     ``predicate=`` argument anywhere — plans through Catalyst, whose
     comparison filters reach :meth:`KeyedTableReader.pushFilters` and
     become the ranged reader's row-group statistics pruning; refuted
-    objects cost footer bytes only. Every filter is also re-applied
+    row groups cost no chunk bytes. Every filter is also re-applied
     by Spark itself, so the values are the engine's own exact
     semantics (the source only reduces I/O).
 
-    Same data shape as q190 (a ~4 KB incompressible pad, small
-    object rotation, key-clustered files) on an independent customer
+    Same data shape as q190 (a ~4 KB incompressible pad, small row
+    groups, key-clustered files) on an independent customer
     sample (``%4``); the oracle recomputes the relational outputs
     set-relationally and pins two booleans literally TRUE:
 

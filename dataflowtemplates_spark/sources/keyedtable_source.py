@@ -123,47 +123,26 @@ class KeyedTableReader(DataSourceReader):
             return [_FilePartition([])]
         # floor at the harness's core count (the planner process has
         # no SparkContext to ask) so a small scan still fills the
-        # cluster; override per read with the pack_bytes option, or
-        # fleet-wide with SPARK_GRAFT_PACK_FLOOR
-        floor = int(_os.environ.get(
-            "SPARK_GRAFT_PACK_FLOOR",
-            _os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        # cluster; override per read with the pack_bytes option
+        floor = int(_os.environ.get("SPARK_GRAFT_CPUS", "32"))
         bins = _pack_files(self._sized_files,
                            self._pack_bytes or _PACK_TARGET_BYTES,
                            floor)
         return [_FilePartition(b) for b in bins]
 
     def read(self, partition):
-        if not partition.paths:
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from dataflowtemplates_spark.operators import rangedparquet
+        from dataflowtemplates_spark.operators.objstore_plane import (
+            read_object,
+        )
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(self._schema)
-        names = list(self._schema.names)
         backend = self._backend
         ranged = (hasattr(backend, "read_tail")
                   and hasattr(backend, "read_range"))
         for path in partition.paths:
-            if ranged:
-                tbl = rangedparquet.fetch_table(
-                    backend, path, names,
-                    predicate=self._predicate or None)
-            else:
-                raw = backend.read_bytes(path)
-                tbl = pq.read_table(pa.BufferReader(raw))
-            cols = []
-            for field in arrow_schema:
-                if field.name in tbl.column_names:
-                    cols.append(tbl.column(field.name).cast(field.type))
-                else:
-                    cols.append(pa.nulls(tbl.num_rows, field.type))
-            out = pa.table(dict(zip(arrow_schema.names, cols)),
-                           schema=arrow_schema)
-            yield from out.to_batches()
+            yield from read_object(backend, path, arrow_schema, ranged,
+                                   self._predicate or None).to_batches()
 
 
 class KeyedTableDataSource(DataSource):
@@ -267,11 +246,6 @@ class KeyedTableDataSource(DataSource):
         return schema
 
     def reader(self, schema) -> KeyedTableReader:
-        import posixpath
-
-        from dataflowtemplates_spark.operators.mutations import (
-            _BUCKET_COL,
-        )
         from dataflowtemplates_spark.operators.objstore_plane import (
             _list_leaf_files,
         )
@@ -283,10 +257,7 @@ class KeyedTableDataSource(DataSource):
         if version == 0:
             raise FileNotFoundError(
                 f"table not initialized: {self.options.get('path')}")
-        owners = t._owners(version)
-        leafs = [posixpath.join(t.path, "data", d,
-                                f"{_BUCKET_COL}={b}")
-                 for b, d in sorted(owners.items()) if d is not None]
+        leafs = t._leaf_dirs(version)
         sized = sorted(_list_leaf_files(leafs, backend)) if leafs \
             else []
         pack = self.options.get("pack_bytes")

@@ -1,9 +1,11 @@
 """Dynamic-destination file writers + finish transform (reference K1,
 K2, K3, K9).
 
-Every file sink of the engine is ONE destination-writing stage,
-:func:`write_sink`; the formats differ only in the small file writer
-they hand it.
+Every file the engine's executors write goes through ONE
+destination-writing stage, :func:`sink_stage`: the exports through
+:func:`write_sink`, KeyedTable staging on object stores through
+``objstore_plane.write_partitioned``. The formats differ only in the
+small file writer they hand it.
 
 Reference semantics reproduced:
 
@@ -69,27 +71,15 @@ def write_sink(df: DataFrame, path: str, start, suffix: str, fmt: str,
                columns: list[Column] | None = None,
                prefix: str = "output",
                without_sharding: bool = False) -> WriteResult:
-    """The one destination-writing stage every file sink runs.
+    """Every export file sink: prepares ``df`` for :func:`sink_stage`.
 
     Resolves ``path`` through :func:`fsio.task_files` (which raises if
-    tasks cannot reach it), clears it, then runs one ``mapInArrow``
-    stage over the payload ``columns`` (expressions over ``df``; all of
-    its columns by default). With ``split_field`` the rows are first
+    tasks cannot reach it), clears it, then runs :func:`sink_stage`
+    over the payload ``columns`` (expressions over ``df``; all of its
+    columns by default). With ``split_field`` the rows are first
     shuffled by the key (``repartition`` on it, sized by AQE) and
     sorted within each partition; without it the input partitions are
     written as they are, or as one partition for ``without_sharding``.
-    Each task slices its Arrow batches into runs of one key, refuses a
-    key that would resolve outside the output root (the path after its
-    scheme), and opens ``{prefix}-{partition:05d}{suffix}``
-    (``{prefix}{suffix}`` for ``without_sharding``) under
-    ``<root>/<key>/`` through the seam; on a task error the open file
-    is abandoned, so no partial object is published.
-
-    ``start(stream, schema) -> (write, close)`` is the format's file
-    writer (a self-contained closure — it is pickled by value):
-    ``write(batch)`` gets Arrow batches of the payload columns holding
-    one key each, ``close()`` finishes the file before the stream is
-    closed. Only (file, rows) pairs return to the driver.
     """
     files = fsio.task_files(path)
     _clear(path)
@@ -104,6 +94,33 @@ def write_sink(df: DataFrame, path: str, start, suffix: str, fmt: str,
         frame = df.select(*payload)
         if without_sharding:
             frame = frame.coalesce(1)
+    return sink_stage(frame, files, start, suffix, fmt, prefix, keyed,
+                      without_sharding)
+
+
+def sink_stage(frame: DataFrame, files, start, suffix: str, fmt: str,
+               prefix: str, keyed: bool = True,
+               without_sharding: bool = False) -> WriteResult:
+    """Write ``frame`` from its tasks through ``files`` (a resolved
+    :func:`fsio.task_files` seam) in one ``mapInArrow`` stage.
+
+    With ``keyed`` the frame's first column is the split key and every
+    partition holds each key as one contiguous run (a key met twice
+    raises). Each task slices its Arrow batches into runs of one key,
+    refuses a key that would resolve outside the output root (the path
+    after its scheme), and opens ``{prefix}-{partition:05d}{suffix}``
+    (``{prefix}{suffix}`` for ``without_sharding``) under
+    ``<root>/<key>/`` through the seam; on a task error the open file
+    is abandoned, so no partial object is published. Every attempt at a
+    partition writes the same names, so a retried task replaces whole
+    files.
+
+    ``start(stream, schema) -> (write, close)`` is the format's file
+    writer (a self-contained closure — it is pickled by value):
+    ``write(batch)`` gets Arrow batches of the payload columns holding
+    one key each, ``close()`` finishes the file before the stream is
+    closed. Only (file, rows) pairs return to the driver.
+    """
     k = arrow_kernels()
 
     def task(batches):
@@ -129,7 +146,8 @@ def write_sink(df: DataFrame, path: str, start, suffix: str, fmt: str,
                 where = posixpath.normpath(posixpath.join(root, key))
                 if not where.startswith(root.rstrip("/") + "/"):
                     raise ValueError(
-                        f"split value {key!r} escapes output root {path!r}")
+                        f"split value {key!r} escapes output root "
+                        f"{files.scheme + files.root!r}")
             target = files.scheme + posixpath.join(where, name)
             stream = files.open_write(target)
             write, close = start(stream, schema)
@@ -214,8 +232,10 @@ def _text_writer(header: str | None):
     return start
 
 
-def _columnar_writer(fmt: str, compression: str):
-    """File writer for Parquet or ORC through pyarrow's writers."""
+def _columnar_writer(fmt: str, compression: str,
+                     row_group_size: int | None = None):
+    """File writer for Parquet or ORC through pyarrow's writers;
+    ``row_group_size`` caps the rows of a parquet row group."""
 
     def start(out, schema):
         import pyarrow as pa
@@ -224,7 +244,8 @@ def _columnar_writer(fmt: str, compression: str):
             import pyarrow.parquet as pq
 
             w = pq.ParquetWriter(out, schema, compression=compression)
-            return w.write_batch, w.close
+            return (lambda batch: w.write_batch(
+                batch, row_group_size=row_group_size)), w.close
         import pyarrow.orc as orc
 
         w = orc.ORCWriter(out, compression=compression)

@@ -206,3 +206,24 @@ def test_one_file_seam_in_the_package():
             hits += [f"{os.path.relpath(path, root)}: {b}"
                      for b in banned if b in text]
     assert not hits, hits
+
+
+def test_one_write_kernel_in_the_package():
+    """Executors write files through one kernel: outside
+    sources/writers.py the package opens no parquet or ORC writer and
+    no streaming object-store upload of its own."""
+    root = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "dataflowtemplates_spark")
+    banned = ("ParquetWriter(", "ORCWriter(", ".open_write(")
+    hits = []
+    for dirpath, _, names in os.walk(root):
+        for name in names:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or path.endswith(
+                    os.path.join("sources", "writers.py")):
+                continue
+            with open(path, encoding="utf-8") as fh:
+                text = fh.read()
+            hits += [f"{os.path.relpath(path, root)}: {b}"
+                     for b in banned if b in text]
+    assert not hits, hits

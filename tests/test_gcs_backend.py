@@ -294,8 +294,8 @@ def test_streaming_sink_single_upload_below_one_chunk(emu, backend):
 
 
 def test_plane_streams_over_gcs_resumable(spark):
-    """The data plane's streaming sink discovery is backend-generic:
-    with tiny part_bytes the GCS write goes through the resumable
+    """The data plane's streaming sink is backend-generic: an object
+    larger than the seam's 8 MB chunk goes through the GCS resumable
     protocol and reads back exactly."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -308,19 +308,23 @@ def test_plane_streams_over_gcs_resumable(spark):
                        bearer_token="rs-token")
     fsio.register_object_backend("gsrs", b)
     try:
-        df = (spark.range(0, 3000)
-              .select(F.col("id"),
-                      F.sha2(F.col("id").cast("string"), 512).alias("s"))
+        # ~10 MB of incompressible rows, sorted by the bucket column
+        # (write_partitioned's caller contract)
+        wide = F.concat(*[
+            F.sha2(F.concat(F.col("id").cast("string"), F.lit(str(k))),
+                   512) for k in range(8)])
+        df = (spark.range(0, 10000)
+              .select(F.col("id"), wide.alias("s"))
               .withColumn("kb", F.lit(0))
-              .repartition(1, F.col("kb")))
-        op.write_partitioned(df, "gsrs://bkt/mp", "kb", b,
-                             flush_rows=10_000, part_bytes=1)
+              .repartition(1, F.col("kb"))
+              .sortWithinPartitions("kb"))
+        op.write_partitioned(df, "gsrs://bkt/mp", "kb")
         assert emu.resumable_completed >= 1
         schema = T.StructType([T.StructField("id", T.LongType()),
                                T.StructField("s", T.StringType())])
         back = op.read_parquet(spark, ["gsrs://bkt/mp/kb=0"], schema, b)
-        assert back.count() == 3000
-        assert back.agg(F.sum("id")).first()[0] == sum(range(3000))
+        assert back.count() == 10000
+        assert back.agg(F.sum("id")).first()[0] == sum(range(10000))
     finally:
         fsio.unregister_object_backend("gsrs")
         emu.stop()

@@ -45,7 +45,7 @@ def _fmt(spark, emu, path):
             .option("secret_key", SIGV4_CREDS[1]))
 
 
-def _wide_table(spark, path, rows=600):
+def _wide_table(spark, path, rows=600, n_buckets=1):
     pad = F.concat(*[F.sha2(F.concat(F.col("id").cast("string"),
                                      F.lit(str(j))), 512)
                      for j in range(32)])  # ~4 KB incompressible:
@@ -54,7 +54,7 @@ def _wide_table(spark, path, rows=600):
     df = (spark.range(0, rows)
           .select(F.col("id"), (F.col("id") % 13).alias("v"),
                   pad.alias("pad")))
-    t = KeyedTable(spark, path, ["id"], n_buckets=1,
+    t = KeyedTable(spark, path, ["id"], n_buckets=n_buckets,
                    cluster_by=["id"], plane_flush_rows=100)
     t.apply_mutations(df, "INSERT")
     return t
@@ -93,8 +93,8 @@ def test_catalyst_filter_pushdown_prunes_bytes(spark, s3):
            .filter("id >= 500")).collect()
     sel_bytes = emu.object_get_bytes
     assert sorted(r["id"] for r in sel) == list(range(500, 600))
-    # 1 of 6 cluster-disjoint objects survives the statistics
-    # refutation; the rest cost footer bytes only
+    # 1 of 6 cluster-disjoint row groups survives the statistics
+    # refutation; the rest cost no chunk bytes
     assert sel_bytes * 2 < full_bytes, (sel_bytes, full_bytes)
 
     # conjunction + equality still exact (Spark re-applies filters)
@@ -140,7 +140,8 @@ def test_partition_packing_bins_small_objects(spark, s3):
     from dataflowtemplates_spark.operators.objstore_plane import (
         _pack_files)
 
-    _wide_table(spark, "s3ds://bkt/pk")  # 600 rows / 100-row objects
+    # 600 rows over 6 buckets: one object per bucket
+    _wide_table(spark, "s3ds://bkt/pk", n_buckets=6)
     emu, _ = s3
     src = KeyedTableDataSource(
         {"path": "s3ds://bkt/pk", "endpoint": emu.endpoint,

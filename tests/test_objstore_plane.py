@@ -78,88 +78,71 @@ def test_full_data_lifecycle_over_live_s3_http(spark, s3):
     assert got[0] == (0.5, "new")
     assert got[5] == (105.0, None) and got[3] == (3.0, None)
     # nothing but parquet part objects under published data dirs, with
-    # the deterministic per-(partition, seq) names
+    # the deterministic per-partition names
     names = [k.rsplit("/", 1)[-1]
              for k in backend.list_files("s3pl://bkt/tbl/data")]
     assert names and all(n.startswith("part-") and
                          n.endswith(".parquet") for n in names)
 
 
-def test_part_rotation_and_missing_column_nullfill(spark, s3):
-    """flush_rows forcing rotation: the seq-named objects per bucket
-    are a PURE function of the bucket's row count (every object
-    exactly flush_rows rows except the last — the determinism that
-    makes task retries overwrite rather than duplicate), nothing lost
-    on read-back; a file written under an OLDER schema null-fills the
+def test_row_group_cap_and_missing_column_nullfill(spark, s3):
+    """plane_flush_rows caps the rows of every parquet row group the
+    plane stages (one object per bucket per task), nothing is lost on
+    read-back, and a file written under an OLDER schema null-fills the
     new column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
     from dataflowtemplates_spark.operators import objstore_plane as op
 
     _, backend = s3
-    df = (spark.range(0, 2000)
-          .select(F.col("id"),
-                  F.sha2(F.col("id").cast("string"), 256).alias("s"))
-          .withColumn("kb", (F.col("id") % 2).cast("int"))
-          .repartition(2, F.col("kb")))
-    op.write_partitioned(df, "s3pl://bkt/rot", "kb", backend,
-                         flush_rows=300)
-    files = backend.list_files("s3pl://bkt/rot")
-    # 1000 rows per bucket at 300/object = 4 objects per bucket, with
-    # deterministic seq names 0000..0003 whatever the arrival order
-    assert len(files) == 8
-    assert len(set(files)) == len(files)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for kb in (0, 1):
-        leaf = [f for f in files if f"/kb={kb}/" in f]
-        assert sorted(f.rsplit("-", 1)[1] for f in leaf) == \
-            ["0000.parquet", "0001.parquet", "0002.parquet",
-             "0003.parquet"]
-        sizes = sorted(
-            pq.read_table(pa.BufferReader(
-                backend.read_bytes(f))).num_rows for f in leaf)
-        assert sizes == [100, 300, 300, 300]
-    from pyspark.sql import types as T
-
+    t = KeyedTable(spark, "s3pl://bkt/rg", ["id"], n_buckets=2,
+                   plane_flush_rows=300)
+    t.apply_mutations(spark.range(0, 2000).select(
+        F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("s")),
+        "INSERT")
+    files = backend.list_files("s3pl://bkt/rg/data")
+    assert len(files) == 2  # one object per bucket
+    groups = [pq.ParquetFile(pa.BufferReader(backend.read_bytes(f)))
+              .metadata for f in files]
+    sizes = [m.row_group(i).num_rows for m in groups
+             for i in range(m.num_row_groups)]
+    assert sum(sizes) == 2000
+    assert max(sizes) <= 300 and len(sizes) >= 7  # the cap fired
     wide = T.StructType([
         T.StructField("id", T.LongType()),
         T.StructField("s", T.StringType()),
         T.StructField("later", T.DoubleType()),  # not in the files
     ])
-    back = op.read_parquet(spark, ["s3pl://bkt/rot/kb=0",
-                                   "s3pl://bkt/rot/kb=1"], wide, backend)
+    back = op.read_parquet(spark, t._leaf_dirs(t._latest_version()),
+                           wide, backend)
     assert back.count() == 2000
     assert back.filter(F.col("later").isNull()).count() == 2000
     assert back.agg(F.sum("id")).first()[0] == sum(range(2000))
 
 
-def test_part_bytes_are_pure_function_of_row_multiset(spark, s3,
-                                                      monkeypatch):
+def test_object_names_and_rows_are_pure_function_of_row_multiset(
+        spark, s3):
     """Retry-idempotence grounding: the SAME row multiset committed
     from two different input orders (different slicing, shuffled row
-    order) must produce byte-identical part objects under identical
-    relative names. Intra-partition arrival order out of a shuffle is
-    not deterministic across task attempts — the commit path therefore
-    total-orders each partition (bucket, keys) before slicing, making
-    every object's name AND bytes a pure function of the multiset.
-    flush_rows is forced low so the multi-part slicing is exercised,
-    not just whole-bucket objects."""
+    order) yields the same relative object names and the same row
+    multiset per object. Every attempt at a partition writes its whole
+    bucket slices under the same names, so a task retry or speculative
+    attempt replaces whole objects whatever order its rows arrived
+    in."""
     import random
 
-    from dataflowtemplates_spark.operators import objstore_plane as op
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     _, backend = s3
-    orig = op.write_partitioned
-    monkeypatch.setattr(
-        op, "write_partitioned",
-        lambda staged, d, c, b, **kw: orig(staged, d, c, b,
-                                           flush_rows=50))
     rows = [Row(id=i, v=float(i % 17), s=f"s-{i % 7}")
             for i in range(500)]
     shuffled = rows[:]
     random.Random(15).shuffle(shuffled)
 
-    def parts(path, data, slices):
+    def objects(path, data, slices):
         t = KeyedTable(spark, path, ["id"], n_buckets=3)
         df = spark.createDataFrame(data)
         if slices:
@@ -168,15 +151,28 @@ def test_part_bytes_are_pure_function_of_row_multiset(spark, s3,
         out = {}
         for f in backend.list_files(path + "/data"):
             rel = f.split("/data/", 1)[1].split("/", 1)[1]
-            out[rel] = backend.read_bytes(f)
+            tbl = pq.read_table(pa.BufferReader(backend.read_bytes(f)))
+            out[rel] = sorted(tbl.to_pylist(), key=lambda r: r["id"])
         return out
 
-    a = parts("s3pl://bkt/det-a", rows, 0)
-    b = parts("s3pl://bkt/det-b", shuffled, 7)
+    a = objects("s3pl://bkt/det-a", rows, 0)
+    b = objects("s3pl://bkt/det-b", shuffled, 7)
     assert sorted(a) == sorted(b)
-    assert len(a) >= 6  # rotation actually split buckets into parts
+    assert len(a) == 3  # one object per bucket
     for rel in a:
-        assert a[rel] == b[rel], f"part bytes differ for {rel}"
+        assert a[rel] == b[rel], f"rows differ for {rel}"
+
+
+def test_write_partitioned_refuses_unsorted_buckets(spark, s3):
+    """write_partitioned's caller contract: a partition must hold each
+    bucket as one run. Interleaved buckets raise in the sink stage
+    instead of replacing a bucket's object with its second run."""
+    from dataflowtemplates_spark.operators import objstore_plane as op
+
+    df = (spark.range(0, 40, numPartitions=1)
+          .withColumn("kb", (F.col("id") % 2).cast("int")))
+    with pytest.raises(Exception, match="not contiguous"):
+        op.write_partitioned(df, "s3pl://bkt/unsorted", "kb")
 
 
 def test_plane_native_parity_on_wide_types(spark, s3, tmp_path):
@@ -217,8 +213,9 @@ def test_plane_native_parity_on_wide_types(spark, s3, tmp_path):
               F.concat(F.lit("日本語-"),
                        F.col("id")).alias("s"))
           .withColumn("kb", (F.col("id") % 4).cast("int"))
-          .repartition(4, F.col("kb")))
-    op.write_partitioned(df, "s3pl://bkt/wide", "kb", backend)
+          .repartition(4, F.col("kb"))
+          .sortWithinPartitions("kb"))
+    op.write_partitioned(df, "s3pl://bkt/wide", "kb")
     native_dir = str(tmp_path / "wide_native")
     df.write.partitionBy("kb").parquet(native_dir)
     # declared read schema = what the native reader itself infers
@@ -242,28 +239,21 @@ def test_plane_native_parity_on_wide_types(spark, s3, tmp_path):
 
 
 def test_plane_streams_large_objects_via_multipart(spark, s3):
-    """With part_bytes below the object size, the plane streams row
-    groups through S3 multipart uploads (bounded memory per object)
-    and the read-back is exact — the emulator counts the completes."""
+    """An object larger than the seam's 8 MB part streams through an
+    S3 multipart upload (bounded memory per object) and the read-back
+    is exact — the emulator counts the completes."""
     from dataflowtemplates_spark.operators import objstore_plane as op
     from pyspark.sql import types as T
 
     emu, backend = s3
-    # ~16 MB of high-entropy rows: the object crosses S3's REAL 5 MiB
-    # part floor (open_write clamps up to it), so streaming engages
+    # ~16 MB of high-entropy rows: the object crosses the seam's 8 MB
+    # part, above S3's REAL 5 MiB part floor, so streaming engages
     # without opting the emulator's enforcement down
-    wide = F.concat(*[
-        F.sha2(F.concat(F.col("id").cast("string"), F.lit(str(k))), 512)
-        for k in range(8)])
-    df = (spark.range(0, 16000)
-          .select(F.col("id"), wide.alias("s"))
-          .withColumn("kb", F.lit(0))
-          .repartition(1, F.col("kb")))
-    op.write_partitioned(df, "s3pl://bkt/mp", "kb", backend,
-                         flush_rows=100_000)
+    df = _entropy_df(spark, 16000)
+    op.write_partitioned(df, "s3pl://bkt/mp", "kb")
     assert emu.multipart_completed >= 1  # streamed, not buffered
     files = backend.list_files("s3pl://bkt/mp")
-    assert len(files) == 1  # one object: rotation never fired
+    assert len(files) == 1  # one object per bucket per task
     schema = T.StructType([T.StructField("id", T.LongType()),
                            T.StructField("s", T.StringType())])
     back = op.read_parquet(spark, ["s3pl://bkt/mp/kb=0"], schema,
@@ -414,8 +404,9 @@ def test_n_writer_mixed_op_race_with_faults(spark, s3):
 
 
 def _entropy_df(spark, n_rows, width=8):
-    """Deterministic high-entropy rows (incompressible, so objects
-    cross streaming thresholds) carrying the plane's bucket column."""
+    """Deterministic high-entropy rows (incompressible, ~1 KB each, so
+    objects cross streaming thresholds) carrying the plane's bucket
+    column, sorted by it: write_partitioned's caller contract."""
     wide = F.concat(*[
         F.sha2(F.concat(F.col("id").cast("string"), F.lit(str(k))), 512)
         for k in range(width)])
@@ -423,8 +414,7 @@ def _entropy_df(spark, n_rows, width=8):
             .select(F.col("id"), wide.alias("s"))
             .withColumn("kb", F.lit(0))
             .repartition(1, F.col("kb"))
-            .sortWithinPartitions("id"))  # the caller contract:
-    #       deterministic within-partition total order
+            .sortWithinPartitions("kb"))
 
 
 def test_uploadpart_response_loss_is_transport_retried(s3):
@@ -454,33 +444,29 @@ def test_complete_response_loss_s3_task_retry_overwrites(spark, s3):
     aborts its staged uploads on the way out, and a task RETRY —
     rerunning the same write — overwrites the deterministically
     named object: final state exact, no duplicate rows, no orphaned
-    UploadId (the documented recovery at objstore_plane.py:33-40)."""
+    UploadId (the recovery the objstore_plane module docstring
+    describes)."""
     from dataflowtemplates_spark.operators import objstore_plane as op
     from pyspark.sql import types as T
 
     emu, b = s3
-    emu.min_part_bytes = 64 * 1024
-    b.MIN_PART_BYTES = 64 * 1024
-    df = _entropy_df(spark, 2000)
+    df = _entropy_df(spark, 10000)  # ~10 MB: more than one 8 MB part
     emu.drop_response_next_complete = True
     with pytest.raises(Exception, match="CompleteMultipartUpload"):
-        op.write_partitioned(df, "s3pl://bkt/ambc", "kb", b,
-                             flush_rows=1_000_000,
-                             part_bytes=64 * 1024)
+        op.write_partitioned(df, "s3pl://bkt/ambc", "kb")
     # the ambiguity resolved server-side: object live OR absent, but
     # the UploadId is consumed/aborted either way — nothing staged
     assert not emu._uploads
     # the task retry: same input, same deterministic names
-    op.write_partitioned(df, "s3pl://bkt/ambc", "kb", b,
-                         flush_rows=1_000_000, part_bytes=64 * 1024)
+    op.write_partitioned(df, "s3pl://bkt/ambc", "kb")
     assert not emu._uploads
     files = b.list_files("s3pl://bkt/ambc")
     assert len(files) == 1  # overwritten, not duplicated
     schema = T.StructType([T.StructField("id", T.LongType()),
                            T.StructField("s", T.StringType())])
     back = op.read_parquet(spark, ["s3pl://bkt/ambc/kb=0"], schema, b)
-    assert back.count() == 2000
-    assert back.agg(F.sum("id")).first()[0] == sum(range(2000))
+    assert back.count() == 10000
+    assert back.agg(F.sum("id")).first()[0] == sum(range(10000))
 
 
 def test_final_chunk_response_loss_gcs_task_retry_overwrites(spark):
@@ -498,19 +484,15 @@ def test_final_chunk_response_loss_gcs_task_retry_overwrites(spark):
                        bearer_token="tok-amb")
     fsio.register_object_backend("gsamb", b)
     try:
-        df = _entropy_df(spark, 2000)  # ~1 MB: crosses the 256 KiB
-        #                                chunk quantum -> resumable path
+        df = _entropy_df(spark, 10000)  # ~10 MB: more than one 8 MB
+        #                                 chunk -> resumable path
         emu.drop_response_next_final_chunk = True
         with pytest.raises(Exception, match="resumable chunk"):
-            op.write_partitioned(df, "gsamb://bkt/ambg", "kb", b,
-                                 flush_rows=1_000_000,
-                                 part_bytes=256 * 1024)
+            op.write_partitioned(df, "gsamb://bkt/ambg", "kb")
         assert not emu._sessions  # consumed by the applied finalize
         #                           and/or aborted by the error path
         assert emu.resumable_completed == 1  # the fault DID apply
-        op.write_partitioned(df, "gsamb://bkt/ambg", "kb", b,
-                             flush_rows=1_000_000,
-                             part_bytes=256 * 1024)
+        op.write_partitioned(df, "gsamb://bkt/ambg", "kb")
         assert not emu._sessions
         files = b.list_files("gsamb://bkt/ambg")
         assert len(files) == 1
@@ -518,8 +500,8 @@ def test_final_chunk_response_loss_gcs_task_retry_overwrites(spark):
                                T.StructField("s", T.StringType())])
         back = op.read_parquet(spark, ["gsamb://bkt/ambg/kb=0"],
                                schema, b)
-        assert back.count() == 2000
-        assert back.agg(F.sum("id")).first()[0] == sum(range(2000))
+        assert back.count() == 10000
+        assert back.agg(F.sum("id")).first()[0] == sum(range(10000))
     finally:
         fsio.unregister_object_backend("gsamb")
         emu.stop()

@@ -8,8 +8,9 @@ ceiling belongs next to its design claim.
 What is measured (single partition = ONE task, so MB/s is per task;
 signed traffic, the real path):
 
-* write MB/s at two multipart part sizes (8 MiB / 16 MiB) over
-  incompressible data — parquet-encode + SigV4-sign + HTTP PUT parts;
+* write MB/s at the seam's multipart part size (``fsio.task_files``:
+  8 MiB parts) over incompressible data — parquet-encode through the
+  engine's sink stage + SigV4-sign + HTTP PUT parts;
 * whole-object read MB/s — HTTP GET + parquet-decode;
 * ranged projected read (2 of 20 columns): bytes actually served vs
   the whole objects, the column-pruning economics counter.
@@ -87,26 +88,22 @@ def main() -> None:
             return sum(len(backend.read_bytes(f))
                        for f in backend.list_files(prefix))
 
-        # warmup: first task pays Python-worker spinup + arrow/JIT
-        # costs that would bias whichever part size runs first
-        op.write_partitioned(df, "s3probe://bkt/warm", "kb", backend,
-                             flush_rows=1 << 30, part_bytes=8 * MB)
+        # warmup: the first task pays Python-worker spinup + arrow/JIT
+        # costs that would bias the timed write
+        op.write_partitioned(df, "s3probe://bkt/warm", "kb")
         op.read_parquet(spark, ["s3probe://bkt/warm/kb=0"], schema,
                         backend).count()
 
-        for part_mb in (8, 16):
-            dest = f"s3probe://bkt/w{part_mb}"
-            t0 = time.monotonic()
-            op.write_partitioned(df, dest, "kb", backend,
-                                 flush_rows=1 << 30,
-                                 part_bytes=part_mb * MB)
-            dt = time.monotonic() - t0
-            nbytes = object_bytes(dest)
-            results[f"write_{part_mb}MiB_MBps"] = nbytes / MB / dt
-            results.setdefault("object_MB", nbytes / MB)
+        dest = "s3probe://bkt/w"
+        t0 = time.monotonic()
+        op.write_partitioned(df, dest, "kb")
+        dt = time.monotonic() - t0
+        nbytes = object_bytes(dest)
+        results["write_MBps"] = nbytes / MB / dt
+        results["object_MB"] = nbytes / MB
 
         # whole-object read (all columns)
-        leaf = ["s3probe://bkt/w8/kb=0"]
+        leaf = ["s3probe://bkt/w/kb=0"]
         t0 = time.monotonic()
         got = op.read_parquet(spark, leaf, schema, backend).count()
         dt = time.monotonic() - t0
