@@ -98,6 +98,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataflowtemplates_spark.operators import fsio
+from dataflowtemplates_spark.operators.objstore_plane import empty_frame
 
 VALID_OPS = ("INSERT", "UPDATE", "REPLACE", "INSERT_OR_UPDATE", "DELETE")
 
@@ -131,6 +132,17 @@ class MutationResult:
     @property
     def failed(self) -> int:
         return self.quarantine.count()
+
+
+@dataclass
+class _Front:
+    """What ``KeyedTable._front`` hands a mutation op: the storable
+    batch, the version its reads are pinned to, that version's bucket
+    count, and the txn watermark update its commit publishes."""
+    batch: DataFrame
+    base_version: int
+    n_buckets: int
+    txn_update: dict | None
 
 
 def _validate_cluster_spec(cluster_by, cluster_mode: str):
@@ -547,7 +559,7 @@ class KeyedTable:
         if not leafs:
             out_schema = (schema if columns is None
                           else T.StructType([schema[c] for c in columns]))
-            return self.spark.createDataFrame([], out_schema)
+            return empty_frame(self.spark, out_schema)
         plane = fsio.distributed_backend_for(leafs[0])
         if plane is not None:
             # object-store scheme without a native Hadoop connector:
@@ -614,7 +626,7 @@ class KeyedTable:
         schema = self._schema()
         data_cols = [f.name for f in schema.fields]
         if not touched or v0 == v1:
-            return (self.spark.createDataFrame([], schema)
+            return (empty_frame(self.spark, schema)
                     .withColumn("_change_type", F.lit(None).cast("string")))
         old = self._snapshot(v0, touched)
         new = self._snapshot(v1, touched)
@@ -766,10 +778,6 @@ class KeyedTable:
         op = op.upper()
         if op not in VALID_OPS:
             raise ValueError(f"op must be one of {VALID_OPS}, got {op!r}")
-        if (txn_app is None) != (txn_version is None):
-            raise ValueError("txn_app and txn_version go together")
-        if txn_app is not None and int(txn_version) < 0:
-            raise ValueError("txn_version must be >= 0")
         if op == "DELETE":
             return self._delete(batch, txn_app, txn_version)
         return self._write(batch, op, txn_app, txn_version,
@@ -819,18 +827,6 @@ class KeyedTable:
                 last = exc
         raise last
 
-    def _null_key_split(self, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Null in any key field is an error (reference:
-        StructToMutationConverter.java:115-117)."""
-        null_pred = None
-        for k in self.keys:
-            p = F.col(k).isNull()
-            null_pred = p if null_pred is None else (null_pred | p)
-        bad = (batch.filter(null_pred)
-               .withColumn(_ERR_COL, F.lit("NULL_KEY_FIELD")))
-        good = batch.filter(~null_pred)
-        return good, bad
-
     def _unstorable_columns(self, batch: DataFrame) -> list[str]:
         """C4 boundary rule: Spanner cannot store STRUCT columns, and
         ARRAY<ARRAY>/ARRAY<STRUCT> are rejected — the reference's
@@ -846,36 +842,33 @@ class KeyedTable:
                 out.append(f.name)
         return out
 
-    def _touched_buckets(self, keyed: DataFrame, n_buckets: int) -> list[int]:
-        """Distinct buckets a batch's keys hash into — bounded by
-        n_buckets, so the collect is O(bucket count) driver state, never
-        O(rows)."""
-        rows = (keyed.select(self._bucket_expr(n_buckets).alias("b"))
-                .distinct().collect())
-        return sorted(int(r["b"]) for r in rows)
-
-    def _write(self, batch: DataFrame, op: str,
-               txn_app: str | None = None,
-               txn_version: int | None = None,
-               collapsed: dict | None = None) -> MutationResult:
-        """Job economics (the per-commit constant, shaved rounds 10,
-        12 and 16): REPLACE/INSERT_OR_UPDATE run exactly TWO Spark
-        jobs per commit — one annotate-and-checkpoint pass over the
-        batch (which also carries the touched-bucket set and
-        applying-row count as riding Observation metrics, and whose
-        filters yield the quarantine with no further job) plus the
-        staging write — or ONE job (the staging write alone) when the
-        caller supplies the ``collapsed`` contract, which provides
-        exactly what the annotate pass would have computed for a
-        batch that is already one-row-per-key and null-key-free.
-        INSERT/UPDATE add one aggregate job folding applied-count +
-        actually-rewritten-bucket set on ``applies`` and one conflict
-        materialization, then rewrite ONLY the buckets an applying row
-        hashes into — a bucket whose batch rows all quarantined is
-        never rewritten, and an all-conflict batch commits as a
-        data-free log entry with no staging write at all."""
-        from pyspark.sql import Observation
-        skipped = self._unstorable_columns(batch)
+    # The commit path's front, shared by _write, apply_changes and
+    # _delete: _front (driver-side checks, no Spark job), _annotate (ONE
+    # checkpointed pass over the batch), then _publish (the one commit
+    # call; an empty rewrite is the data-free commit).
+    def _front(self, batch: DataFrame, txn_app: str | None,
+               txn_version: int | None, extra: tuple = (),
+               create: bool = True) -> _Front | MutationResult:
+        """The prologue of every mutation op; it runs no Spark job.
+        Checks the txn arguments, drops unstorable columns with a
+        warning (``extra`` names control columns that are not table
+        data), fails fast when the scheme cannot CAS, creates/evolves
+        the table (``create``; DELETE instead requires it to exist),
+        and reads the base version. That version's commit object also
+        carries the config this mutation reads (n_buckets / schema /
+        cluster) — ONE immutable record, so there is no
+        version-vs-layout read-ordering race by construction (a
+        concurrent rebucket bumps the version and this writer's CAS on
+        base+1 simply fails). Returns the replay result when the txn
+        gate says the batch already applied (zero jobs)."""
+        if (txn_app is None) != (txn_version is None):
+            raise ValueError("txn_app and txn_version go together")
+        if txn_app is not None and int(txn_version) < 0:
+            # the gate's watermark default is -1, so a negative version
+            # would silently always-apply
+            raise ValueError("txn_version must be >= 0")
+        skipped = [c for c in self._unstorable_columns(batch)
+                   if c not in extra]
         if skipped:
             import logging
             logging.getLogger(__name__).warning(
@@ -884,14 +877,13 @@ class KeyedTable:
                 skipped)
             batch = batch.drop(*skipped)
         self._require_conditional_put()  # fail BEFORE any Spark job runs
-        self.create(batch)
-        if self.schema_evolution:
-            self._evolve_schema(batch)
-        # base_version's commit object also carries the config this
-        # mutation reads (n_buckets / schema / cluster) — ONE immutable
-        # record, so there is no version-vs-layout read-ordering race
-        # by construction (a concurrent rebucket bumps the version and
-        # this writer's CAS on base+1 simply fails).
+        if create:
+            data = batch.drop(*extra)
+            self.create(data)
+            if self.schema_evolution:
+                self._evolve_schema(data)
+        elif not self.exists():
+            raise FileNotFoundError(f"table not initialized: {self.path}")
         base_version = self._base_version()
         cfg = self._config_at(base_version)
         self._require_matching_keys(cfg)
@@ -899,143 +891,162 @@ class KeyedTable:
         if replay:  # already applied by an earlier commit: zero jobs
             return MutationResult(0, _empty_with_error(batch),
                                   replayed=True)
-        n_buckets = int(cfg["n_buckets"])
-        fast = (collapsed is not None
+        return _Front(batch, base_version, int(cfg["n_buckets"]),
+                      txn_update)
+
+    def _annotate(self, f: _Front, touch, counts: dict,
+                  order: list | None = None, ranked=None):
+        """ONE annotate-and-checkpoint pass over the batch. Adds
+        ``_bad`` (a null key field is an error, reference
+        StructToMutationConverter.java:115-117) and, given ``order``,
+        the per-key rank ``_rn`` under that ordering (``_mid`` is batch
+        order) plus the ``ranked(window)`` columns. The annotated batch
+        is checkpointed once; the buckets of the ``touch`` rows and
+        ``count(when(cond))`` per ``counts`` entry ride that same job
+        as Observation metrics. The checkpoint also freezes the rank:
+        a window over monotonically_increasing_id is nondeterministic
+        under re-evaluation, and it cuts the batch's lineage, which
+        may read this table's own live files. Every quarantine and
+        keep set is then a plain filter over the checkpointed rows.
+        Returns (annotated frame, sorted touched buckets, metrics)."""
+        from pyspark.sql import Window as W
+        bad = None
+        for k in self.keys:
+            p = F.col(k).isNull()
+            bad = p if bad is None else (bad | p)
+        ann = f.batch.withColumn("_bad", bad)
+        if order is not None:
+            # null-key rows sit in their own window partitions and
+            # never affect a real key's rank
+            w = W.partitionBy(*self.keys).orderBy(*order)
+            ann = (ann.withColumn("_mid", F.monotonically_increasing_id())
+                   .withColumn("_rn", F.row_number().over(w)))
+            if ranked is not None:
+                ann = ann.withColumns(ranked(w))
+            ann = ann.drop("_mid")
+        return self._checkpoint(ann, f.n_buckets, touch, counts)
+
+    def _checkpoint(self, frame: DataFrame, n_buckets: int, touch,
+                    counts: dict):
+        """Eager ``localCheckpoint`` of ``frame`` with the buckets of
+        its ``touch`` rows and ``count(when(cond))`` per ``counts``
+        entry riding the same job as one Observation. Returns
+        (checkpointed frame, sorted buckets, metrics)."""
+        from pyspark.sql import Observation
+        obs = Observation()
+        frame = frame.observe(
+            obs,
+            F.collect_set(F.when(touch, self._bucket_expr(n_buckets)))
+            .alias("_bks"),
+            *[F.count(F.when(c, F.lit(1))).alias(n)
+              for n, c in counts.items()])
+        frame = frame.localCheckpoint(eager=True)
+        m = obs.get
+        return frame, sorted(int(b) for b in m["_bks"]), m
+
+    def _publish(self, f: _Front, new_slice: DataFrame | None,
+                 rewrite: list[int]) -> None:
+        """The one commit call of every mutation op. An empty
+        ``rewrite`` is the data-free commit: nothing stages, and the
+        txn watermark, if any, still publishes — the batch WAS
+        processed, its rows just changed nothing."""
+        self._commit_buckets(new_slice if rewrite else None, rewrite,
+                             f.n_buckets, f.base_version,
+                             config_update=f.txn_update)
+
+    def _write(self, batch: DataFrame, op: str,
+               txn_app: str | None = None,
+               txn_version: int | None = None,
+               collapsed: dict | None = None) -> MutationResult:
+        """Job economics (on a 16-bucket local table, counted per op
+        by job group in tests/test_mutations.py): REPLACE and
+        INSERT_OR_UPDATE run the annotate pass (the touched buckets
+        and kept-row count ride it, and its filters yield the
+        quarantine with no further job) and the staging write — or
+        the staging write alone when the caller supplies the
+        ``collapsed`` contract, which provides exactly what the
+        annotate pass would have computed for a batch that is already
+        one-row-per-key and null-key-free. INSERT/UPDATE add ONE
+        classify checkpoint: the kept rows left-joined against the
+        touched slice's keys with a hit flag, the applied
+        count and the rewrite buckets riding it as Observation
+        metrics. Applies and conflicts are filters over it (so the
+        conflicts are materialized before publish), and the staging
+        write rewrites ONLY the buckets an applying row hashes into —
+        a bucket whose batch rows all quarantined is never rewritten,
+        and an all-conflict batch commits as a data-free log entry
+        with no staging write at all."""
+        f = self._front(batch, txn_app, txn_version)
+        if isinstance(f, MutationResult):
+            return f
+        if (collapsed is not None
                 and op in ("REPLACE", "INSERT_OR_UPDATE")
-                and int(collapsed.get("n_buckets", -1)) == n_buckets)
-        if fast:
+                and int(collapsed.get("n_buckets", -1)) == f.n_buckets):
             # The collapsed contract (see apply_mutations) supplies
             # exactly what the annotate job computes for a batch that
             # is one-row-per-key with no null key: every row is kept,
             # nothing quarantines, and the touched buckets + row count
             # rode the CALLER's own aggregate job — so the commit's
-            # only action is the staging write (2 jobs -> 1). A stale
-            # n_buckets (racing rebucket between the caller's probe
-            # and here) fails the equality above and takes the slow
-            # path, which re-derives buckets under the current layout.
+            # only action is the staging write. A stale n_buckets
+            # (racing rebucket between the caller's probe and here)
+            # fails the equality above and takes the annotate path,
+            # which re-derives buckets under the current layout.
             touched = sorted(int(b) for b in collapsed["buckets"])
-            keep_n = int(collapsed["n_rows"])
-            keep = batch
-            quarantine = _empty_with_error(batch)
+            applied = int(collapsed["n_rows"])
+            keep = f.batch
+            quarantine = _empty_with_error(f.batch)
         else:
-            # ONE annotate-and-materialize pass (the r12 per-commit
-            # constant shave): the null-key flag and the within-batch
-            # dedupe rank are computed together and the annotated
-            # batch is checkpointed once; keep / null-quarantine /
-            # dup-quarantine are then plain filters over the
-            # materialized rows — no second pass over the batch and no
-            # separate quarantine checkpoint job. The window over
-            # monotonically_increasing_id is nondeterministic under
-            # re-evaluation, so the checkpoint also freezes the chosen
-            # per-key winners; null-key rows sit in their own window
-            # partitions and never affect a real key's rank. The
-            # touched-bucket set and applying-row count ride the same
-            # job as Observation metrics.
-            from pyspark.sql import Window as W
-            null_pred = None
-            for k in self.keys:
-                p = F.col(k).isNull()
-                null_pred = p if null_pred is None else (null_pred | p)
-            w = W.partitionBy(*self.keys).orderBy("_mid")
-            ann = (batch
-                   .withColumn("_mid", F.monotonically_increasing_id())
-                   .withColumn("_rn", F.row_number().over(w))
-                   .withColumn("_bad", null_pred)
-                   .drop("_mid"))
-            keep_cond = (~F.col("_bad")) & (F.col("_rn") == 1)
-            keep_obs = Observation()
-            ann = ann.observe(
-                keep_obs,
-                F.collect_set(
-                    F.when(keep_cond,
-                           self._bucket_expr(n_buckets))).alias("bks"),
-                F.count(F.when(keep_cond, F.lit(1))).alias("n"))
-            ann = ann.localCheckpoint(eager=True)
-            touched = sorted(int(b) for b in keep_obs.get["bks"])
-            keep_n = int(keep_obs.get["n"])
-            helpers = ["_rn", "_bad"]
-            keep = ann.filter(keep_cond).drop(*helpers)
-            null_q = (ann.filter(F.col("_bad")).drop(*helpers)
-                      .withColumn(_ERR_COL, F.lit("NULL_KEY_FIELD")))
-            dup_q = (ann.filter((~F.col("_bad")) & (F.col("_rn") > 1))
-                     .drop(*helpers)
-                     .withColumn(_ERR_COL,
-                                 F.lit("DUPLICATE_KEY_IN_BATCH")))
+            kept = (~F.col("_bad")) & (F.col("_rn") == 1)
+            ann, touched, m = self._annotate(
+                f, kept, {"n": kept}, order=[F.col("_mid")])
+            applied = int(m["n"])
+            keep = ann.filter(kept).drop("_bad", "_rn")
+            quarantine = (ann.filter(~kept).drop("_rn")
+                          .withColumn(_ERR_COL, F.when(
+                              F.col("_bad"), F.lit("NULL_KEY_FIELD"))
+                              .otherwise(F.lit("DUPLICATE_KEY_IN_BATCH")))
+                          .drop("_bad"))
         # snapshot-isolated: the base version's files are immutable, so
         # this slice cannot shift under the merge even if a rival
         # commits mid-flight (the CAS will catch that at publish time)
-        target = self._snapshot(base_version, touched)
-
+        target = self._snapshot(f.base_version, touched)
         if op in ("INSERT", "UPDATE"):
-            key_cols = [F.col(k) for k in self.keys]
-            existing_keys = target.select(*key_cols).distinct()
-            if op == "INSERT":
-                conflicts = (keep.join(existing_keys, self.keys, "left_semi")
-                             .withColumn(_ERR_COL, F.lit("ALREADY_EXISTS")))
-                applies = keep.join(existing_keys, self.keys, "left_anti")
-            else:
-                conflicts = (keep.join(existing_keys, self.keys, "left_anti")
-                             .withColumn(_ERR_COL, F.lit("NOT_FOUND")))
-                applies = keep.join(existing_keys, self.keys, "left_semi")
-            # one job: applied count + the buckets that actually change
-            row = (applies
-                   .agg(F.count(F.lit(1)).alias("n"),
-                        F.collect_set(self._bucket_expr(n_buckets))
-                        .alias("bks"))
-                   .collect()[0])
-            applied_n = int(row["n"])
-            rewrite = sorted(int(b) for b in row["bks"])
-            # conflict-only buckets are untouched; re-plan the merge
-            # against the pruned slice so their files never rewrite.
-            # keep must be pre-filtered to the rewrite buckets: a
-            # conflict row's key is absent from the PRUNED slice, so
-            # an unfiltered anti-join would wrongly admit it.
-            if rewrite != touched:
-                target = self._snapshot(base_version, rewrite)
-                existing_keys = target.select(*key_cols).distinct()
-                keep_rw = keep.filter(
-                    self._bucket_expr(n_buckets)
-                    .isin([int(b) for b in rewrite]))
-                applies = (keep_rw.join(existing_keys, self.keys,
-                                        "left_anti")
-                           if op == "INSERT" else
-                           keep_rw.join(existing_keys, self.keys,
-                                        "left_semi"))
-            if op == "INSERT":
-                new_slice = target.unionByName(
-                    _conform(applies, target), allowMissingColumns=False)
-            else:
-                new_slice = self._merge(target, applies,
-                                        keep_unspecified=True)
+            # ONE flag join classifies every kept row against the
+            # touched slice. keep holds one row per key and the table
+            # holds a key at most once (every commit merges by key),
+            # so the join never duplicates a row and needs no distinct.
+            # The checkpoint also materializes the conflicts before
+            # publish: callers hold the quarantine past temp-table
+            # teardown, so its lineage must not re-read table files a
+            # later vacuum may reclaim
+            hit = F.col("_hit").isNotNull()
+            applies_if = ~hit if op == "INSERT" else hit
+            existing = (target.select(*self.keys)
+                        .withColumn("_hit", F.lit(True)))
+            cls, rewrite, m = self._checkpoint(
+                keep.join(existing, self.keys, "left"),
+                f.n_buckets, applies_if, {"n": applies_if})
+            applied = int(m["n"])
+            applies = cls.filter(applies_if).drop("_hit")
+            quarantine = quarantine.unionByName(
+                cls.filter(~applies_if).drop("_hit")
+                .withColumn(_ERR_COL, F.lit(
+                    "ALREADY_EXISTS" if op == "INSERT" else "NOT_FOUND")))
+            new_slice = None
+            if rewrite:
+                # conflict-only buckets are untouched: the new slice
+                # reads only the buckets an applying row hashes into
+                target = self._snapshot(f.base_version, rewrite)
+                new_slice = (target.unionByName(_conform(applies, target))
+                             if op == "INSERT" else
+                             self._merge(target, applies,
+                                         keep_unspecified=True))
         else:  # REPLACE / INSERT_OR_UPDATE: every kept row applies
-            conflicts = _empty_with_error(keep)
-            applies = keep
-            applied_n = keep_n
             rewrite = touched
-            new_slice = self._merge(
-                target, applies, keep_unspecified=(op != "REPLACE"))
-
-        # null_q/dup_q are filters over the checkpointed annotated
-        # batch, so their lineage is already cut; INSERT/UPDATE
-        # conflicts additionally join against table files and must be
-        # materialized BEFORE the commit publishes — callers hold the
-        # quarantine past temp-table teardown, and its lineage must not
-        # re-read files a later vacuum may reclaim. (The fast path's
-        # quarantine is the empty frame built above.)
-        if not fast:
-            if op in ("INSERT", "UPDATE"):
-                conflicts = conflicts.localCheckpoint(eager=True)
-            quarantine = null_q.unionByName(dup_q).unionByName(conflicts)
-        if applied_n == 0:
-            # nothing changed: data-free commit, no staging write (the
-            # txn watermark, if any, still publishes — the batch WAS
-            # processed, its rows just all quarantined)
-            self._commit_buckets(None, [], n_buckets, base_version,
-                                 config_update=txn_update)
-        else:
-            self._commit_buckets(new_slice, rewrite, n_buckets,
-                                 base_version, config_update=txn_update)
-        return MutationResult(applied=applied_n, quarantine=quarantine)
+            new_slice = self._merge(target, keep,
+                                    keep_unspecified=(op != "REPLACE"))
+        self._publish(f, new_slice, rewrite)
+        return MutationResult(applied=applied, quarantine=quarantine)
 
     def apply_changes(self, batch: DataFrame, op_col: str = "_op",
                       seq_col: str | None = None,
@@ -1075,60 +1086,32 @@ class KeyedTable:
         ``txn_app``/``txn_version`` ride exactly as in
         :meth:`apply_mutations`.
 
-        Job economics: one annotate-and-checkpoint pass over the batch
-        (winner rank + validity flags + touched buckets and counts as
-        riding Observation metrics), one bounded matched-delete
-        aggregate over the pruned slice (only when the batch contains
-        deletes), and the staging write. The rewrite touches only the
-        buckets the winner keys hash into — O(batch +
-        table/n_buckets × touched), never O(table)."""
-        from pyspark.sql import Observation
-        from pyspark.sql import Window as W
+        Job economics: the shared annotate pass (winner rank +
+        contender flag; the touched buckets and the upsert, delete and
+        contender counts ride it as Observation metrics), one bounded
+        matched-delete aggregate over the pruned slice (only when the
+        batch has deletes and the count cannot ride the write), and
+        the staging write. The rewrite touches only the buckets the
+        winner keys hash into — O(batch + table/n_buckets × touched),
+        never O(table)."""
         if op_col not in batch.columns:
             raise ValueError(f"op_col {op_col!r} not in batch columns")
         if seq_col is not None and seq_col not in batch.columns:
             raise ValueError(f"seq_col {seq_col!r} not in batch columns")
-        if (txn_app is None) != (txn_version is None):
-            raise ValueError("txn_app and txn_version go together")
-        if txn_app is not None and int(txn_version) < 0:
-            # mirror apply_mutations: the gate's watermark default is
-            # -1, so a negative version would silently always-apply
-            raise ValueError("txn_version must be >= 0")
-        extra = [op_col] + ([seq_col] if seq_col else [])
-        data = batch.drop(*extra)
-        skipped = self._unstorable_columns(data)
-        if skipped:
-            batch = batch.drop(*skipped)
-            data = data.drop(*skipped)
-        self._require_conditional_put()  # fail BEFORE any Spark job runs
-        self.create(data)
-        if self.schema_evolution:
-            self._evolve_schema(data)
-        base_version = self._base_version()
-        cfg = self._config_at(base_version)
-        self._require_matching_keys(cfg)
-        replay, txn_update = self._txn_gate(cfg, txn_app, txn_version)
-        if replay:  # already applied by an earlier commit: zero jobs
-            return MutationResult(0, _empty_with_error(batch),
-                                  replayed=True)
-        n_buckets = int(cfg["n_buckets"])
-        null_pred = None
-        for k in self.keys:
-            p = F.col(k).isNull()
-            null_pred = p if null_pred is None else (null_pred | p)
+        extra = (op_col,) + ((seq_col,) if seq_col else ())
+        f = self._front(batch, txn_app, txn_version, extra=extra)
+        if isinstance(f, MutationResult):
+            return f
         op_norm = F.upper(F.col(op_col))
-        valid = (~null_pred) & op_norm.isin("I", "U", "D")
+        # a NULL op is an unknown op, not a row to drop: isin on NULL
+        # is NULL, which every filter below would silently discard
+        valid = (~F.col("_bad")) & F.coalesce(
+            op_norm.isin("I", "U", "D"), F.lit(False))
         # winner rank: valid rows outrank invalid, then seq desc, then
         # batch order desc (LAST wins) — all frozen by the checkpoint
-        order = [F.desc("_ok")]
-        if seq_col is not None:
-            order.append(F.desc(seq_col))
-        order.append(F.desc("_mid"))
-        w = W.partitionBy(*self.keys).orderBy(*order)
-        ann = (batch
-               .withColumn("_mid", F.monotonically_increasing_id())
-               .withColumn("_ok", valid)
-               .withColumn("_rn", F.row_number().over(w)))
+        order = ([valid.desc()]
+                 + ([F.desc(seq_col)] if seq_col is not None else [])
+                 + [F.desc("_mid")])
         # CONTENDER detection: a valid non-rank-1 row that could have
         # won under a different physical layout — it differs from the
         # rank-1 row's full image AND (with a seq) carries the same
@@ -1144,32 +1127,28 @@ class KeyedTable:
         # comparable in Spark, so the image canonicalizes them to
         # key-sorted entry arrays
         row_img = F.struct(*[
-            _orderable_expr(F.col(f.name), f.dataType).alias(f.name)
-            for f in batch.schema.fields])
-        contender = (F.col("_ok") & (F.col("_rn") >= 2)
-                     & ~F.first(row_img).over(w).eqNullSafe(row_img))
-        if seq_col is not None:
-            contender = contender & F.first(
-                F.col(seq_col)).over(w).eqNullSafe(F.col(seq_col))
-        ann = ann.withColumn("_tie", contender).drop("_mid")
-        win = F.col("_ok") & (F.col("_rn") == 1)
+            _orderable_expr(F.col(c.name), c.dataType).alias(c.name)
+            for c in f.batch.schema.fields])
+
+        def contender(w):
+            tie = (valid & (F.col("_rn") >= 2)
+                   & ~F.first(row_img).over(w).eqNullSafe(row_img))
+            if seq_col is not None:
+                tie = tie & F.first(
+                    F.col(seq_col)).over(w).eqNullSafe(F.col(seq_col))
+            return {"_tie": tie}
+
+        win = valid & (F.col("_rn") == 1)
         win_up = win & op_norm.isin("I", "U")
         win_del = win & (op_norm == "D")
-        obs = Observation()
-        ann = ann.observe(
-            obs,
-            F.collect_set(
-                F.when(win, self._bucket_expr(n_buckets))).alias("bks"),
-            F.count(F.when(win_up, F.lit(1))).alias("n_up"),
-            F.count(F.when(win_del, F.lit(1))).alias("n_del"),
-            F.count(F.when(F.col("_tie"), F.lit(1))).alias("n_ties"))
-        ann = ann.localCheckpoint(eager=True)
-        touched = sorted(int(b) for b in obs.get["bks"])
-        n_up, n_del = int(obs.get["n_up"]), int(obs.get["n_del"])
-        if int(obs.get["n_ties"]) > 0:
+        ann, touched, m = self._annotate(
+            f, win, {"n_up": win_up, "n_del": win_del,
+                     "n_ties": F.col("_tie")},
+            order=order, ranked=contender)
+        if int(m["n_ties"]) > 0:
             # nothing has staged or committed yet — fail the batch
             # before a partition-layout-dependent winner can land
-            n = int(obs.get["n_ties"])
+            n = int(m["n_ties"])
             if seq_col is None:
                 raise ValueError(
                     f"{n} distinct valid change event(s) share a key "
@@ -1183,36 +1162,38 @@ class KeyedTable:
                 "winner would depend on the batch's partition layout "
                 "— make the sequence a per-key total order (binlog "
                 "offset, LSN)")
-        helpers = ["_ok", "_rn", "_tie"]
-        quarantine = (ann.filter(~F.col("_ok")).drop(*helpers)
+        n_up, n_del = int(m["n_up"]), int(m["n_del"])
+        quarantine = (ann.filter(~valid).drop("_rn", "_tie")
                       .withColumn(_ERR_COL, F.when(
-                          null_pred, F.lit("NULL_KEY_FIELD"))
-                          .otherwise(F.lit("UNKNOWN_CHANGE_OP"))))
-        if not touched:  # every row quarantined: data-free commit
-            self._commit_buckets(None, [], n_buckets, base_version,
-                                 config_update=txn_update)
-            return MutationResult(applied=0, quarantine=quarantine)
-        upserts = (ann.filter(win_up).drop(*helpers, *extra))
+                          F.col("_bad"), F.lit("NULL_KEY_FIELD"))
+                          .otherwise(F.lit("UNKNOWN_CHANGE_OP")))
+                      .drop("_bad"))
+        upserts = ann.filter(win_up).drop("_bad", "_rn", "_tie", *extra)
         del_keys = ann.filter(win_del).select(*self.keys)
-        target = self._snapshot(base_version, touched)
+        target = self._snapshot(f.base_version, touched) if touched else None
         matched_del = 0
         del_obs = None
-        if n_del:
+        # a slice with no files matches no delete. Skip the join: the
+        # slice plans as an empty LocalRelation, and a fused count
+        # riding a plan over it failed Observation.get (toPyRow
+        # AssertionError) once the optimizer folded the empty side
+        if n_del and self._leaf_dirs(f.base_version, touched):
             # When the batch also carries upserts the staging write is
             # guaranteed to run, so the matched-delete count RIDES it
             # as an Observation on a left-join flag instead of paying
-            # its own left-semi aggregate job (3 jobs/batch -> 2; the
-            # guide's §1.2 pass-count rule). Flag-join ≡ semi/anti
-            # pair: del_keys is one row per key (winner rank), so the
-            # left join never duplicates a target row, count(flag) is
-            # the semi count and filter(flag IS NULL) the anti set.
-            # Fused only when the merge references `target` once (the
-            # upsert image covers every table column — true for
-            # whole-image CDC feeds); a partial-image merge reads
-            # target twice, which would double-count the metric.
+            # its own left-semi aggregate job (the guide's §1.2
+            # pass-count rule). Flag-join ≡ semi/anti pair: del_keys
+            # is one row per key (winner rank), so the left join never
+            # duplicates a target row, count(flag) is the semi count
+            # and filter(flag IS NULL) the anti set. Fused only when
+            # the merge references `target` once (the upsert image
+            # covers every table column — true for whole-image CDC
+            # feeds); a partial-image merge reads target twice, which
+            # would double-count the metric.
             fuse = (n_up > 0 and "_kt_del" not in target.columns
                     and set(upserts.columns) >= set(target.columns))
             if fuse:
+                from pyspark.sql import Observation
                 flagged = target.join(
                     del_keys.withColumn("_kt_del", F.lit(True)),
                     self.keys, "left")
@@ -1230,16 +1211,12 @@ class KeyedTable:
                 matched_del = target.join(
                     del_keys, self.keys, "left_semi").count()
                 target = target.join(del_keys, self.keys, "left_anti")
-        if n_up == 0 and matched_del == 0:
-            # delete-only batch, every key missed: nothing changes —
-            # data-free commit (the txn watermark still publishes)
-            self._commit_buckets(None, [], n_buckets, base_version,
-                                 config_update=txn_update)
-            return MutationResult(applied=0, quarantine=quarantine)
+        # a delete-only batch whose every key missed changes nothing:
+        # the data-free commit (the txn watermark still publishes)
+        rewrite = touched if (n_up or matched_del) else []
         new_slice = (self._merge(target, upserts, keep_unspecified=True)
                      if n_up else target)
-        self._commit_buckets(new_slice, touched, n_buckets,
-                             base_version, config_update=txn_update)
+        self._publish(f, new_slice, rewrite)
         if del_obs is not None:
             # the staging write has run; the riding metric is final
             matched_del = int(del_obs.get["n"])
@@ -1270,61 +1247,47 @@ class KeyedTable:
         """K6: delete by composite key, key fields in the given order
         (reference: templates/SpannerToSpannerDelete.java:78-91).
 
-        One bounded agg job over the (bucket-pruned) touched slice
-        counts matched rows and the buckets that actually lose rows;
-        untouched and miss-only buckets are never rewritten. The
-        applied count deliberately does NOT ride the commit write's
-        Observation — that pattern crashed `Observation.get`
-        (toPyRow AssertionError) on small result sets, the exact
-        shape of the reference template (key-columns-only batch
-        against a few-row table)."""
-        if not self.exists():
-            raise FileNotFoundError(f"table not initialized: {self.path}")
-        self._require_conditional_put()  # fail BEFORE any Spark job runs
-        base_version = self._base_version()
-        cfg = self._config_at(base_version)
-        self._require_matching_keys(cfg)
-        keyed = batch.select(*self.keys)
-        replay, txn_update = self._txn_gate(cfg, txn_app, txn_version)
-        if replay:  # already applied by an earlier commit: zero jobs
-            return MutationResult(0, _empty_with_error(keyed),
-                                  replayed=True)
-        n_buckets = int(cfg["n_buckets"])
-        good, null_q = self._null_key_split(keyed)
-        # hits is bounded by the batch's distinct keys; checkpointing it
-        # eagerly (a) cuts the batch lineage (which may itself read this
-        # table's live files — the template's query does) and (b) lets
-        # one frame feed the touched-bucket probe, the applied-count
-        # agg, and the survivor anti-join without recomputation.
-        hits = good.distinct().localCheckpoint(eager=True)
-        touched = self._touched_buckets(hits, n_buckets)
-        null_q = null_q.localCheckpoint(eager=True)
-        if not touched:  # nothing to delete: data-free commit
-            self._commit_buckets(None, [], n_buckets, base_version,
-                                 config_update=txn_update)
-            return MutationResult(applied=0, quarantine=null_q)
-        target = self._snapshot(base_version, touched)
-        # one job: deleted-row count + the buckets that actually change
-        # (mirrors _write's applies aggregate)
-        row = (target.join(hits, self.keys, "left_semi")
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.collect_set(self._bucket_expr(n_buckets))
-                    .alias("bks"))
-               .collect()[0])
-        applied_n = int(row["n"])
-        rewrite = sorted(int(b) for b in row["bks"])
-        if applied_n == 0:
-            # every key missed: no bucket changes — data-free commit
-            self._commit_buckets(None, [], n_buckets, base_version,
-                                 config_update=txn_update)
-            return MutationResult(applied=0, quarantine=null_q)
-        # join strategy left to AQE: hits is checkpointed with a known
-        # size, so small delete batches broadcast and large ones shuffle
-        survivors = (self._snapshot(base_version, rewrite)
-                     .join(hits, self.keys, "left_anti"))
-        self._commit_buckets(survivors, rewrite, n_buckets, base_version,
-                             config_update=txn_update)
-        return MutationResult(applied=applied_n, quarantine=null_q)
+        Job economics: the shared annotate pass over the key columns
+        (null-key flag; the touched buckets ride it), one bounded agg
+        job over the bucket-pruned touched slice counting matched rows
+        and the buckets that actually lose rows, and the staging write
+        of those buckets only; untouched and miss-only buckets are
+        never rewritten. Duplicate keys fold: the count and the
+        survivor filter are a semi and an anti join, which a repeated
+        key cannot change. The applied count deliberately does NOT
+        ride the commit write's Observation — that pattern crashed
+        `Observation.get` (toPyRow AssertionError) on small result
+        sets, the exact shape of the reference template
+        (key-columns-only batch against a few-row table)."""
+        f = self._front(batch.select(*self.keys), txn_app, txn_version,
+                        create=False)
+        if isinstance(f, MutationResult):
+            return f
+        ok = ~F.col("_bad")
+        ann, touched, _ = self._annotate(f, ok, {})
+        quarantine = (ann.filter(F.col("_bad")).drop("_bad")
+                      .withColumn(_ERR_COL, F.lit("NULL_KEY_FIELD")))
+        hits = ann.filter(ok).drop("_bad")
+        applied, rewrite, survivors = 0, [], None
+        if touched:
+            # one job: deleted-row count + the buckets that actually
+            # change
+            row = (self._snapshot(f.base_version, touched)
+                   .join(hits, self.keys, "left_semi")
+                   .agg(F.count(F.lit(1)).alias("n"),
+                        F.collect_set(self._bucket_expr(f.n_buckets))
+                        .alias("bks"))
+                   .collect()[0])
+            applied = int(row["n"])
+            rewrite = sorted(int(b) for b in row["bks"])
+        if rewrite:
+            # join strategy left to AQE: hits is checkpointed with a
+            # known size, so small delete batches broadcast and large
+            # ones shuffle
+            survivors = (self._snapshot(f.base_version, rewrite)
+                         .join(hits, self.keys, "left_anti"))
+        self._publish(f, survivors, rewrite)
+        return MutationResult(applied=applied, quarantine=quarantine)
 
     # -- storage ---------------------------------------------------------
     def _apply_clustering(self, staged: DataFrame,
@@ -1773,17 +1736,10 @@ def write_failure_count(result: MutationResult, path: str) -> int:
     return n
 
 
-def write_quarantine(result: MutationResult, path: str,
-                     fmt: str = "avro") -> int:
+def write_quarantine(result: MutationResult, path: str) -> int:
     """K8: failed mutations -> Avro files, matching the reference
-    (templates/SpannerToSpanner.java:116-121); other formats remain a
-    seam. The Avro path uses the container writer in
-    operators/avro_io.py, so it works without the spark-avro jar."""
-    q = result.quarantine
-    if fmt == "avro":
-        from dataflowtemplates_spark.operators.avro_io import write_avro
-        return write_avro(q, path).row_count  # count rides the write pass
-    n = q.count()
-    if n:
-        q.write.mode("overwrite").format(fmt).save(path)
-    return n
+    (templates/SpannerToSpanner.java:116-121), through the container
+    writer in operators/avro_io.py (no spark-avro jar needed). Returns
+    the row count, which rides the write pass."""
+    from dataflowtemplates_spark.operators.avro_io import write_avro
+    return write_avro(result.quarantine, path).row_count

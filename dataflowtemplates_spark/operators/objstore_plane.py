@@ -145,6 +145,16 @@ def _pack_files(sized_files: list, target_bytes: int,
     return [sorted(b) for b in bins if b]
 
 
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty frame of ``schema`` built from an empty Arrow table, so
+    it plans as a JVM ``LocalRelation``. ``createDataFrame([], schema)``
+    plans as a Python-RDD ``LogicalRDD`` instead, and every job over it
+    starts a Python stage only to unpickle nothing: a cold anti-join
+    against one took 4.7 s, against the ``LocalRelation`` 0.3 s
+    (4-vCPU host, fresh SparkContext)."""
+    return spark.createDataFrame(_arrow_schema(schema).empty_table(), schema)
+
+
 def scan_files(spark: SparkSession, sized_files: list, schema,
                per_file) -> DataFrame:
     """The executor fan-out of the engine file readers (parquet, Avro,
@@ -156,7 +166,7 @@ def scan_files(spark: SparkSession, sized_files: list, schema,
     ``schema``. Tasks are a JVM range of bin indexes, the bins riding in
     the task closure: no Python stage or shuffle runs before the scan."""
     if not sized_files:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     bins = _pack_files(sized_files, _PACK_TARGET_BYTES,
                        spark.sparkContext.defaultParallelism)
 
@@ -314,12 +324,7 @@ def read_parquet(spark: SparkSession, leaf_dirs: list[str],
                 n for n in dict.fromkeys(n for n, _, _ in predicate)
                 if n not in columns]
         schema = T.StructType([schema[c] for c in columns])
-    if hasattr(backend, "_list") and hasattr(backend, "_split"):
-        sized = _list_leaf_files(leaf_dirs, backend, spark)
-    else:  # minimal-contract backend: per-leaf recursive listing,
-        #    no sizes — packing assumes target-sized objects
-        sized = [(f, None) for d in leaf_dirs
-                 for f in backend.list_files(d, suffix=".parquet")]
+    sized = _list_leaf_files(leaf_dirs, backend, spark)
     final_schema = (T.StructType([schema[c] for c in out_names])
                     if out_names is not None else schema)
     arrow_schema = _arrow_schema(schema)

@@ -1166,3 +1166,117 @@ def test_collapsed_bucket_violation_fails_before_publish(spark, tmp_path):
     assert t._latest_version() == v0
     assert {x.id: x.v for x in t.read().collect()} == {
         i: i for i in range(6)}
+
+
+def test_empty_frames_plan_as_local_relation(spark, tmp_path):
+    """An empty snapshot and an empty ``changes_between`` diff are built
+    from an empty Arrow table, so they plan as a JVM ``LocalRelation``
+    for map, decimal, timestamp and array columns too. A
+    ``createDataFrame([])`` frame plans as a Python-RDD ``LogicalRDD``,
+    and every join against it (the first INSERT into a table joins
+    against its empty snapshot) starts a Python stage."""
+    from datetime import datetime, timezone
+
+    schema = ("id long, m map<string,bigint>, d decimal(18,2), "
+              "ts timestamp, a array<string>")
+    t = KeyedTable(spark, str(tmp_path / "lr"), ["id"], n_buckets=4)
+    t.create(spark.createDataFrame([], schema))
+    bound = datetime.now(timezone.utc).isoformat()
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    snap = t.read()
+    assert snap.schema == spark.createDataFrame([], schema).schema
+    assert "LocalRelation" in plan(snap) and "LogicalRDD" not in plan(snap)
+    assert snap.collect() == []
+    cdf = t.changes_between(bound, bound)
+    assert cdf.columns == ["id", "m", "d", "ts", "a", "_change_type"]
+    assert "LocalRelation" in plan(cdf) and "LogicalRDD" not in plan(cdf)
+    assert cdf.collect() == []
+
+
+def test_apply_changes_warns_on_skipped_columns(spark, tmp_path, caplog):
+    """apply_changes drops STRUCT / nested-ARRAY columns at the boundary
+    like apply_mutations does, and says so: no silent column drop."""
+    import logging
+
+    t = KeyedTable(spark, str(tmp_path / "w"), ["id"])
+    batch = spark.createDataFrame(
+        [(1, "a", (1, "x"), [[1]], "I")],
+        "id long, v string, s struct<x: long, y: string>, "
+        "aa array<array<long>>, _op string")
+    with caplog.at_level(logging.WARNING):
+        r = t.apply_changes(batch)
+    assert r.applied == 1 and r.failed == 0
+    assert t.read().columns == ["id", "v"]
+    warned = [rec.getMessage() for rec in caplog.records
+              if "non-storable" in rec.getMessage()]
+    assert len(warned) == 1 and "'s'" in warned[0] and "'aa'" in warned[0]
+
+
+def test_apply_changes_null_op_quarantines(spark, tmp_path):
+    """A change event whose op is NULL is an unknown op: it quarantines
+    instead of vanishing from both the table and the quarantine."""
+    t = KeyedTable(spark, str(tmp_path / "nop"), ["id"], n_buckets=4)
+    t.apply_mutations(spark.createDataFrame(
+        [(1, "a"), (2, "b")], "id long, v string"), "INSERT")
+    r = t.apply_changes(spark.createDataFrame(
+        [(1, "x", None), (3, "c", "I"), (4, "d", "Q")],
+        "id long, v string, _op string"))
+    assert r.applied == 1
+    assert sorted((q.id, q._error) for q in r.quarantine.collect()) == [
+        (1, "UNKNOWN_CHANGE_OP"), (4, "UNKNOWN_CHANGE_OP")]
+    assert sorted((x.id, x.v) for x in t.read().collect()) == [
+        (1, "a"), (2, "b"), (3, "c")]
+
+
+def test_spark_jobs_per_op(spark, tmp_path):
+    """Spark jobs per mutation op on a 16-bucket local table, each op
+    counted under its own job group. The bounds are the counts of the
+    shared commit front (annotate pass, INSERT/UPDATE classify
+    checkpoint, staging write); a change that adds a job to an op must
+    raise its bound here, visibly."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    t = KeyedTable(spark, str(tmp_path / "jobs"), ["id"], n_buckets=16)
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            "id", (F.col("id") * 2).alias("v"), F.lit("x").alias("s"))
+
+    cdc = rows(20, 40).withColumn(
+        "_op", F.when(F.col("id") < 30, "D").otherwise("U"))
+    steps = [  # (op label, call, max jobs, applied)
+        ("INSERT into an empty table",
+         lambda: t.apply_mutations(rows(0, 200), "INSERT"), 4, 200),
+        ("INSERT with conflicts",
+         lambda: t.apply_mutations(rows(150, 250), "INSERT"), 6, 50),
+        ("UPDATE", lambda: t.apply_mutations(rows(0, 10), "UPDATE"), 6, 10),
+        ("UPDATE of absent keys",
+         lambda: t.apply_mutations(rows(1000, 1010), "UPDATE"), 4, 0),
+        ("REPLACE", lambda: t.apply_mutations(rows(5, 15), "REPLACE"), 4, 10),
+        ("INSERT_OR_UPDATE",
+         lambda: t.apply_mutations(rows(240, 260), "INSERT_OR_UPDATE"),
+         4, 20),
+        ("DELETE", lambda: t.apply_mutations(rows(0, 5).select("id"),
+                                             "DELETE"), 7, 5),
+        ("apply_changes", lambda: t.apply_changes(cdc), 5, 20),
+    ]
+    over = []
+    for label, call, bound, applied in steps:
+        group = f"jobs-per-op-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, label)
+        try:
+            res = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert res.applied == applied, label
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        if n > bound:
+            over.append(f"{label}: {n} jobs > {bound}")
+    assert not over, over
+    assert t.read().count() == 245
