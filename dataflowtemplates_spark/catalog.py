@@ -5,6 +5,21 @@ side-input broadcast, reference: templates/SpannerToBigQuery.java:84-89,
 transforms/StructToAvroTransform.java:95-97): a Spark DataFrame carries
 its schema statically, so registration is just `createOrReplaceTempView`
 and every downstream operator reads `df.schema`.
+
+Loading a table is memoized at two levels:
+
+* process-wide, the raw parquet schema Spark inferred for a path
+  (`_SCHEMA_MEMO`): inference is one Spark job per table, so a new
+  session whose tables are unchanged builds its plans from the memoized
+  schema and runs no job at all. This pays off in any process that
+  builds more than one session (a driver that stops and rebuilds its
+  session, ``spark.newSession()`` per caller, a test suite); a one-shot
+  run with a single session infers every table once, as before;
+* per session, the loaded DataFrame plan and the registered views
+  (`_DF_MEMO`), so the `register_tables` call at every query's entry
+  costs a few stat calls.
+
+Both levels are invalidated by the path's stat signature (`_path_sig`).
 """
 
 from __future__ import annotations
@@ -14,6 +29,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 from dataflowtemplates_spark.session import ensure_engine_confs
 
@@ -43,19 +59,36 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
             if pat.is_timestamp(f.type) and f.type.unit == "ns"]
 
 
-#: Per-session memo of loaded table DataFrames, keyed by (path, stat
-#: signature). A DataFrame is an immutable PLAN over a snapshot of the
-#: path's file listing — pure metadata, no data or results are held —
-#: so reusing it is exactly equivalent to rebuilding it while skipping
-#: the parquet footer reads and the schema-inference Spark job that
-#: `spark.read.parquet` pays on every call (measured 0.2-0.8s per
-#: register_tables invocation, which every query path performs on
-#: entry). The stat signature (mtime_ns, size, file count for dirs)
-#: invalidates the memo whenever the path's contents change, so
-#: regenerated fixture dirs reload; WeakKeyDictionary drops the memo
-#: with its session.
+#: Per-session memo of loaded table DataFrames, keyed by path and
+#: holding (stat signature, DataFrame), plus the session's registered
+#: views under "_views". A DataFrame is an immutable PLAN over a
+#: snapshot of the path's file listing — pure metadata, no data or
+#: results are held — so reusing it is exactly equivalent to rebuilding
+#: it while skipping even the schema-memo lookup and the read's py4j
+#: round trips that every `register_tables` call (each query's entry)
+#: would otherwise repeat. WeakKeyDictionary drops the memo with its
+#: session.
 _DF_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary())
+
+#: The SQL confs that change what parquet schema inference returns.
+_INFER_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+
+#: Process-wide memo of inferred parquet schemas, keyed by (path, values
+#: of `_INFER_CONFS`) and holding (stat signature, TIMESTAMP(NANOS)
+#: column names, the StructType `spark.read.parquet` inferred — under
+#: nanosAsLong when the table has nanos columns). Inference is a pure
+#: function of the files' bytes under those confs, so any session of the
+#: process may read the table with the memoized schema instead of
+#: running the inference job again. A changed signature replaces the
+#: entry, so a path holds one entry per conf tuple.
+_SCHEMA_MEMO: dict[tuple, tuple] = {}
 
 
 def _path_sig(path: str) -> tuple:
@@ -94,28 +127,46 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = memo.get(path)
     if hit is not None and hit[0] == sig:
         return hit[1]
-    df = _load_table_uncached(spark, path)
-    memo[path] = (sig, df)
-    return df
-
-
-def _load_table_uncached(spark: SparkSession, path: str) -> DataFrame:
-    from pyspark.sql.types import LongType
-
-    ns_cols = _nanos_timestamp_cols(path)
-    if not ns_cols:
-        return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    ns_cols, raw, df = raw_schema(spark, path, sig)
+    if df is None:
+        df = spark.read.schema(raw).parquet(path)
     for c in ns_cols:
         # nanosAsLong only applies to files WITHOUT Spark writer
         # metadata (the driver's pyarrow-written tables). Spark reads
         # its OWN nanos files as proper timestamps via the footer
         # schema — only convert when the column actually arrived long.
-        if isinstance(df.schema[c].dataType, LongType):
+        if isinstance(raw[c].dataType, LongType):
             df = df.withColumn(
                 c, F.expr(f"timestamp_micros(CAST({c} DIV 1000 AS LONG))"))
+    memo[path] = (sig, df)
     return df
+
+
+def raw_schema(spark: SparkSession, path: str, sig: tuple | None = None,
+               ) -> tuple[list[str], StructType, DataFrame | None]:
+    """(TIMESTAMP(NANOS) column names, raw inferred schema, inferred
+    DataFrame) of a parquet table.
+
+    The schema comes from `_SCHEMA_MEMO` when the path's signature
+    still matches, with no DataFrame. Otherwise inference runs and its
+    DataFrame comes back too, so the caller need not read again. A
+    table with nanos columns is inferred (and must be read) under
+    ``spark.sql.legacy.parquet.nanosAsLong``, which this sets on the
+    session either way.
+    """
+    if sig is None:
+        sig = _path_sig(path)
+    key = (path, tuple(spark.conf.get(k) for k in _INFER_CONFS))
+    hit = _SCHEMA_MEMO.get(key)
+    fresh = hit is not None and hit[0] == sig
+    ns_cols = hit[1] if fresh else _nanos_timestamp_cols(path)
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if fresh:
+        return ns_cols, hit[2], None
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[key] = (sig, ns_cols, df.schema)
+    return ns_cols, df.schema, df
 
 
 def register_tables(spark: SparkSession, sf_dir: str,

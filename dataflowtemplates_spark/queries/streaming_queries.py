@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dataflowtemplates_spark.catalog import _nanos_timestamp_cols, register_tables
+from dataflowtemplates_spark.catalog import raw_schema, register_tables
 
 #: events schema with ts as raw nanos (the driver parquet is
 #: TIMESTAMP(NANOS), which Spark's reader only accepts as long).
@@ -36,41 +36,6 @@ _EVENTS_NS_SCHEMA = T.StructType([
     T.StructField("value", T.DoubleType()),
     T.StructField("props", T.StringType()),
 ])
-
-
-#: Memo of the per-file nanos probe below, keyed PER SESSION (the
-#: WeakKeyDictionary discipline of catalog._DF_MEMO — the probe's
-#: answer depends on the session's nanosAsLong conf at read time, so
-#: a process-global map could leak one session's answer into another
-#: configured differently) and within a session by (path, mtime, size,
-#: nanosAsLong): a pure function of the file's bytes under that conf,
-#: so re-running the batch-read schema probe — a full
-#: `spark.read.parquet` inference — on every streaming query
-#: invocation bought nothing (guide §1.2 driver-side fixed cost).
-import weakref as _weakref
-
-_TS_LONG_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary())
-
-
-def _ts_reads_long(spark: SparkSession, path: str) -> bool:
-    from pyspark.sql.types import LongType
-
-    st = os.stat(path)
-    nanos_conf = spark.conf.get(
-        "spark.sql.legacy.parquet.nanosAsLong", "false")
-    key = (path, st.st_mtime_ns, st.st_size, nanos_conf)
-    try:
-        memo = _TS_LONG_MEMO.setdefault(spark, {})
-    except TypeError:  # un-weakref-able session stand-in (tests)
-        memo = {}
-    hit = memo.get(key)
-    if hit is None:
-        hit = ("ts" in _nanos_timestamp_cols(path)
-               and isinstance(spark.read.parquet(path)
-                              .schema["ts"].dataType, LongType))
-        memo[key] = hit
-    return hit
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,11 +56,14 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, opts = sf_dir, {"pathGlobFilter": "events.parquet"}
     else:
         src, opts = path, {}
-    ts_reads_long = _ts_reads_long(spark, path)
-    if ts_reads_long:
-        raw = (spark.readStream.schema(_EVENTS_NS_SCHEMA)
-               .options(**opts).parquet(src))
-        return raw.withColumn(
+    # the catalog's process-wide schema memo answers the probe: it is
+    # keyed by path, stat signature and the inference confs, so one
+    # session's answer never reaches a session configured differently
+    ns_cols, raw, _ = raw_schema(spark, path)
+    if "ts" in ns_cols and isinstance(raw["ts"].dataType, T.LongType):
+        stream = (spark.readStream.schema(_EVENTS_NS_SCHEMA)
+                  .options(**opts).parquet(src))
+        return stream.withColumn(
             "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS LONG))"))
     from dataflowtemplates_spark.streaming.pipelines import EVENTS_SCHEMA
     return (spark.readStream.schema(EVENTS_SCHEMA)
