@@ -284,9 +284,12 @@ class KeyedTable:
         return posixpath.join(self._log_dir(), f"{version:020d}.ckpt.json")
 
     def _log_names(self) -> list[str]:
-        if not fsio.is_dir(self._log_dir()):
+        # one LIST: a missing _log lists empty on an object store and
+        # raises FileNotFoundError on a local path
+        try:
+            return fsio.list_dir(self._log_dir())
+        except FileNotFoundError:
             return []
-        return fsio.list_dir(self._log_dir())
 
     def _read_log_json(self, path: str) -> dict:
         hit = self._log_cache.get(path)

@@ -94,7 +94,10 @@ def write_partitioned(staged: DataFrame, data_dir: str, bucket_col: str,
         F.col(c) for c in staged.columns if c != bucket_col])
     return writers.sink_stage(
         frame, fsio.task_files(data_dir),
-        writers._columnar_writer("parquet", "snappy", row_group_size),
+        # no ARROW:schema footer blob (about 400 B of a 125-row object):
+        # read_object conforms every object to the table's schema
+        writers._columnar_writer("parquet", "snappy", row_group_size,
+                                 store_schema=False),
         ".parquet", "parquet", "part")
 
 

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from dataflowtemplates_spark import cds
+
 # UTC everywhere: the reference renders timestamps in Zulu ISO form
 # (reference: util/converter/StructToJsonConverter.java:59) and the
 # DuckDB oracle compares naive-UTC timestamps.
@@ -112,6 +114,22 @@ def build_session(app_name: str = "dataflowtemplates_spark",
     it takes effect only when this call starts the SparkContext, and a
     session built by the driver contract (``ensure_engine_confs``) keeps
     Spark's ``pyspark.daemon``.
+
+    A caller's ``spark.driver.extraJavaOptions`` follows the engine's JVM
+    flags instead of replacing them; HotSpot takes a flag's last value.
+
+    When this call launches the driver JVM for a ``local`` master, the
+    JVM starts from a dynamic class-data archive (``cds.py``) kept in
+    ``${XDG_CACHE_HOME:-~/.cache}/dataflowtemplates_spark/cds/``. The
+    first launch for a JDK, Spark-jar and JVM-flag combination pays
+    for the dump when its JVM exits (about 12 s and a 140-180 MB file),
+    and the Python process waits for it; later launches map the
+    archive. It needs a Spark conf dir that is missing or holds only
+    ``*.template`` files; with anything else the launch skips CDS and
+    says why in one stderr line. ``SPARK_GRAFT_CDS=0`` turns it off.
+    Cluster masters, a JVM that is already running and a process
+    started by ``spark-submit`` are left alone. JVM log output goes to
+    stderr, never stdout, in local mode.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -123,8 +141,13 @@ def build_session(app_name: str = "dataflowtemplates_spark",
     for k, v in _BASE_CONFS.items():
         b = b.config(k, v)
     b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    confs = dict(extra_confs or {})
+    caller_opts = confs.pop("spark.driver.extraJavaOptions", "")
+    engine_opts = ""
+    launch = cds.Launch()
     if master.startswith("local"):
-        b = b.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        confs.setdefault("spark.driver.memory",
+                         os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # A long mixed-query session generates a unique whole-stage-
         # codegen class per stage; once the JVM code cache fills,
         # HotSpot disables the JIT and hot codegen methods (notably the
@@ -137,13 +160,32 @@ def build_session(app_name: str = "dataflowtemplates_spark",
         # reserve scales with the surface. (Driver-only conf works
         # because local mode runs executors in the driver JVM; on a
         # cluster set the executor equivalent.)
-        b = b.config("spark.driver.extraJavaOptions",
-                     "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing")
-    for k, v in (extra_confs or {}).items():
+        engine_opts = ("-XX:ReservedCodeCacheSize=1g "
+                       f"-XX:+UseCodeCacheFlushing {cds.STDERR_LOGGING}")
+        if not _jvm_running():
+            launch = cds.plan({**confs, "spark.driver.extraJavaOptions":
+                               f"{engine_opts} {caller_opts}"})
+    # The engine's JVM flags come first and the caller's after them:
+    # HotSpot takes the last value of a flag, so the caller can override
+    # one without dropping the rest.
+    java_opts = " ".join(
+        filter(None, (engine_opts, launch.flags, caller_opts)))
+    if java_opts:
+        confs["spark.driver.extraJavaOptions"] = java_opts
+    for k, v in confs.items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
+    spark = cds.get_or_create(b, launch)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _jvm_running() -> bool:
+    """True when this process already has a driver JVM: a SparkContext
+    launched one, or ``spark-submit`` started this process."""
+    from pyspark import SparkContext
+
+    return (SparkContext._gateway is not None
+            or "PYSPARK_GATEWAY_PORT" in os.environ)
 
 
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:

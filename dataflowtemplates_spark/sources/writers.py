@@ -233,9 +233,12 @@ def _text_writer(header: str | None):
 
 
 def _columnar_writer(fmt: str, compression: str,
-                     row_group_size: int | None = None):
+                     row_group_size: int | None = None,
+                     store_schema: bool = True):
     """File writer for Parquet or ORC through pyarrow's writers;
-    ``row_group_size`` caps the rows of a parquet row group."""
+    ``row_group_size`` caps the rows of a parquet row group, and
+    ``store_schema=False`` leaves the ``ARROW:schema`` blob out of a
+    parquet footer."""
 
     def start(out, schema):
         import pyarrow as pa
@@ -243,7 +246,8 @@ def _columnar_writer(fmt: str, compression: str,
         if fmt == "parquet":
             import pyarrow.parquet as pq
 
-            w = pq.ParquetWriter(out, schema, compression=compression)
+            w = pq.ParquetWriter(out, schema, compression=compression,
+                                 store_schema=store_schema)
             return (lambda batch: w.write_batch(
                 batch, row_group_size=row_group_size)), w.close
         import pyarrow.orc as orc

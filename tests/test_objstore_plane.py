@@ -25,6 +25,10 @@ from dataflowtemplates_spark.operators.s3http import S3HttpBackend
 from dataflowtemplates_spark.testing.gcs_emulator import GcsEmulator
 from dataflowtemplates_spark.testing.s3_emulator import S3Emulator
 
+#: LIST requests of one fresh-handle read of a 4-bucket table after an
+#: insert and an upsert (test_read_lists_log_without_is_dir_probes)
+LISTS_PER_READ = 10
+
 SIGV4_CREDS = ("AKIDEXAMPLE", "wJalrXUtnFEMI/K7MDENG+bPxRfiCYEXAMPLEKEY")
 
 
@@ -120,6 +124,55 @@ def test_row_group_cap_and_missing_column_nullfill(spark, s3):
     assert back.count() == 2000
     assert back.filter(F.col("later").isNull()).count() == 2000
     assert back.agg(F.sum("id")).first()[0] == sum(range(2000))
+
+
+
+def test_plane_objects_carry_no_arrow_schema_blob(spark, s3):
+    """Plane objects leave pyarrow's ARROW:schema blob out of the
+    parquet footer: the reader conforms every object to the table's
+    schema, so the blob only added bytes to each PUT."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _, backend = s3
+    t = KeyedTable(spark, "s3pl://bkt/nometa", ["id"], n_buckets=2)
+    t.apply_mutations(spark.range(0, 100).select(
+        F.col("id"), F.col("id").cast("string").alias("s")), "INSERT")
+    files = backend.list_files("s3pl://bkt/nometa/data")
+    assert len(files) == 2
+    for f in files:
+        footer = pq.ParquetFile(
+            pa.BufferReader(backend.read_bytes(f))).metadata.metadata
+        assert b"ARROW:schema" not in (footer or {}), f
+    assert sorted(r.id for r in t.read().collect()) == list(range(100))
+
+
+def test_read_lists_log_without_is_dir_probes(spark, s3):
+    """A read of an S3 table issues one LIST per `_log` listing, with no
+    is_dir probe LIST in front of each (14 LIST requests before)."""
+    emu, _ = s3
+    # handlers serve a kept-alive connection for its whole life: count
+    # from the first request, keep the read's
+    lists = []
+    base = emu._server.RequestHandlerClass
+
+    def do_GET(self):
+        if "list-type=" in self.path:
+            lists.append(self.path)
+        return base.do_GET(self)
+
+    emu._server.RequestHandlerClass = type(
+        "ListCounting", (base,), {"do_GET": do_GET})
+    t = KeyedTable(spark, "s3pl://bkt/lists", ["id"], n_buckets=4)
+    t.apply_mutations(spark.range(0, 40).select(
+        F.col("id"), (F.col("id") * 1.5).alias("v")), "INSERT")
+    t.apply_mutations(spark.range(0, 40, 5).select(
+        F.col("id"), F.lit(-1.0).alias("v")), "INSERT_OR_UPDATE")
+    del lists[:]
+    rows = KeyedTable(spark, "s3pl://bkt/lists", ["id"]).read().collect()
+    assert len(rows) == 40
+    assert sum(r.v == -1.0 for r in rows) == 8
+    assert len(lists) <= LISTS_PER_READ, lists
 
 
 def test_object_names_and_rows_are_pure_function_of_row_multiset(
