@@ -35,11 +35,14 @@ per-commit immutable data directories::
     table/
       _log/00000000000000000001.json        # commit objects (the log)
       _log/00000000000000000010.ckpt.json   # folded state, every 10th
-      data/v00002-3fa9c1d2/kb=0/part-*.parquet   # commit 2's files
-      data/v00005-77be01aa/kb=7/part-*.parquet   # commit 5's files
+      data/v00002-3fa9c1d2/kb=0/part.parquet     # commit 2's object
+      data/v00005-77be01aa/kb=7/part-*.parquet   # commit 5's files (local)
 
 Each commit object records {version, time, buckets touched, data dir,
-buckets with data, full table config}. Data directories are IMMUTABLE:
+buckets with data, full table config}, and on an object store the
+``sizes`` {bucket: bytes} of its objects, each named by its bucket
+alone: the log is the manifest (Delta's), so reads and commits list
+``_log`` once and never list data. Data directories are IMMUTABLE:
 a commit stages its rewritten buckets into a fresh uniquely-named
 directory and the log entry — never a rename — is what publishes it.
 Bucket ``k``'s current files live in the data dir of the LAST commit
@@ -134,15 +137,43 @@ class MutationResult:
         return self.quarantine.count()
 
 
+@dataclass(frozen=True)
+class _Log:
+    """One listing of ``_log``: its entry and checkpoint versions,
+    sorted. Each public call lists once and hands this down."""
+    versions: tuple[int, ...] = ()
+    ckpts: tuple[int, ...] = ()
+
+    @property
+    def latest(self) -> int:
+        return self.versions[-1] if self.versions else 0
+
+
+def _parse_log(names) -> _Log:
+    """The one parser of ``_log`` object names: ``{v:020d}.json`` is a
+    commit entry and ``{v:020d}.ckpt.json`` a checkpoint."""
+    versions, ckpts = [], []
+    for n in names:
+        stem, _, kind = n.partition(".")
+        if stem.isdigit() and kind in ("json", "ckpt.json"):
+            (versions if kind == "json" else ckpts).append(int(stem))
+    return _Log(tuple(sorted(versions)), tuple(sorted(ckpts)))
+
+
 @dataclass
 class _Front:
     """What ``KeyedTable._front`` hands a mutation op: the storable
-    batch, the version its reads are pinned to, that version's bucket
-    count, and the txn watermark update its commit publishes."""
+    batch, the log listing its reads are pinned to (whose latest
+    version is the base version), that version's bucket count, and
+    the txn watermark update its commit publishes."""
     batch: DataFrame
-    base_version: int
+    log: _Log
     n_buckets: int
     txn_update: dict | None
+
+    @property
+    def base_version(self) -> int:
+        return self.log.latest
 
 
 def _validate_cluster_spec(cluster_by, cluster_mode: str):
@@ -283,13 +314,13 @@ class KeyedTable:
     def _ckpt_path(self, version: int) -> str:
         return posixpath.join(self._log_dir(), f"{version:020d}.ckpt.json")
 
-    def _log_names(self) -> list[str]:
+    def _log(self) -> _Log:
         # one LIST: a missing _log lists empty on an object store and
         # raises FileNotFoundError on a local path
         try:
-            return fsio.list_dir(self._log_dir())
+            return _parse_log(fsio.list_dir(self._log_dir()))
         except FileNotFoundError:
-            return []
+            return _Log()
 
     def _read_log_json(self, path: str) -> dict:
         hit = self._log_cache.get(path)
@@ -299,19 +330,14 @@ class KeyedTable:
         return hit
 
     def _latest_version(self) -> int:
-        versions = [int(n.split(".", 1)[0]) for n in self._log_names()
-                    if n.endswith(".json") and not n.endswith(".ckpt.json")]
-        return max(versions, default=0)
+        return self._log().latest
 
-    def _commits(self) -> list[dict]:
-        """All commit entries, oldest first. Entries are immutable and
-        tiny; they cache per instance, so repeated calls re-list the
-        log directory but re-read nothing."""
-        names = sorted(n for n in self._log_names()
-                       if n.endswith(".json")
-                       and not n.endswith(".ckpt.json"))
-        return [self._read_log_json(posixpath.join(self._log_dir(), n))
-                for n in names]
+    def _commits(self, log: _Log | None = None) -> list[dict]:
+        """The commit entries ``log`` (default: a fresh listing) names,
+        oldest first. Entries are immutable and cache per instance."""
+        log = self._log() if log is None else log
+        return [self._read_log_json(self._entry_path(v))
+                for v in log.versions]
 
     def _config_at(self, version: int) -> dict:
         """Table config (n_buckets / keys / schema / cluster /
@@ -320,11 +346,11 @@ class KeyedTable:
         construction."""
         return self._read_log_json(self._entry_path(version))["config"]
 
-    def _meta(self) -> dict:
-        """Current table config (latest commit object's). Kept under
-        the historical name: callers treat it as the live metadata
-        record."""
-        v = self._latest_version()
+    def _meta(self, log: _Log | None = None) -> dict:
+        """Current table config (``log``'s latest commit object's).
+        Kept under the historical name: callers treat it as the live
+        metadata record."""
+        v = (self._log() if log is None else log).latest
         if v < 1:
             raise FileNotFoundError(f"table not initialized: {self.path}")
         cfg = dict(self._config_at(v))
@@ -332,8 +358,8 @@ class KeyedTable:
             cfg.pop("cluster", None)
         return cfg
 
-    def _schema(self) -> T.StructType:
-        return T.StructType.fromJson(json.loads(self._meta()["schema"]))
+    def _schema(self, log: _Log | None = None) -> T.StructType:
+        return T.StructType.fromJson(json.loads(self._meta(log)["schema"]))
 
     def _bucket_expr(self, n_buckets: int):
         # one py4j round trip (F.expr) instead of ~6 column-op calls:
@@ -344,35 +370,46 @@ class KeyedTable:
         return F.expr(
             f"CAST(pmod(xxhash64({cols}), {int(n_buckets)}) AS INT)")
 
-    def _owners(self, version: int) -> dict[int, str | None]:
+    def _owners(self, version: int,
+                log: _Log | None = None) -> dict[int, str | None]:
         """bucket id -> data dir name whose files hold that bucket's
-        rows at ``version`` (None: bucket currently empty). A pure
-        metadata fold: start from the latest checkpoint object at or
-        below ``version`` and apply the commit entries after it —
+        rows at ``version`` (None: bucket currently empty)."""
+        return self._fold(version, log)[0]
+
+    def _fold(self, version: int, log: _Log | None = None):
+        """``(owners, sizes)`` at ``version``: ``_owners``' map, and
+        bucket id -> object bytes (None: the owning entry records none).
+        A pure metadata fold: start from ``log``'s latest checkpoint at
+        or below ``version`` and apply the commit entries after it —
         O(_CKPT_EVERY) object reads regardless of table age."""
-        ckpts = sorted(
-            int(n.split(".", 1)[0]) for n in self._log_names()
-            if n.endswith(".ckpt.json")
-            and int(n.split(".", 1)[0]) <= version)
+        log = self._log() if log is None else log
+        ckpts = [c for c in log.ckpts if c <= version]
         owners: dict[int, str | None] = {}
+        sizes: dict[int, int | None] = {}
         start = 0
         if ckpts:
             ck = self._read_log_json(self._ckpt_path(ckpts[-1]))
             owners = {int(b): d for b, d in ck["owners"].items()}
+            sizes = {int(b): n for b, n in ck.get("sizes", {}).items()}
             start = int(ck["version"])
         for v in range(start + 1, version + 1):
             e = self._read_log_json(self._entry_path(v))
             present = set(int(b) for b in e.get("present", []))
-            for b in e.get("buckets", []):
-                owners[int(b)] = e["dir"] if int(b) in present else None
-        return owners
+            recorded = e.get("sizes", {})
+            for b in map(int, e.get("buckets", [])):
+                owners[b] = e["dir"] if b in present else None
+                sizes[b] = recorded.get(str(b))
+        return owners, sizes
 
     def _commit_entry(self, version: int, buckets: list[int],
                       dirname: str | None, present: list[int],
-                      config: dict) -> None:
+                      config: dict, sizes: dict[int, int] | None = None,
+                      log: _Log | None = None) -> None:
         """Publish a commit: conditional-put the version's log object.
         The put failing means another writer already holds this
         version — the CAS loss, surfaced as ConcurrentWriteError.
+        ``sizes`` (bucket -> object bytes) rides the entry; a
+        checkpoint folds from ``log``, the base version's listing.
 
         Commit times are the read_at contract's key: two commits
         landing in the same microsecond would make both bounds resolve
@@ -394,6 +431,9 @@ class KeyedTable:
             "present": sorted(int(b) for b in present),
             "config": config,
         }
+        if sizes:
+            entry["sizes"] = {str(b): int(n)
+                              for b, n in sorted(sizes.items())}
         if not fsio.create_exclusive(self._entry_path(version),
                                      json.dumps(entry).encode()):
             raise ConcurrentWriteError(
@@ -405,10 +445,13 @@ class KeyedTable:
             # only the version's winner reaches this, so the object is
             # written once; content is a pure function of the immutable
             # log prefix
+            owners, folded = self._fold(version, log)
             ck = {"version": int(version),
-                  "owners": {str(b): d
-                             for b, d in self._owners(version).items()},
+                  "owners": {str(b): d for b, d in owners.items()},
                   "config": config}
+            folded = {str(b): n for b, n in folded.items() if n is not None}
+            if folded:
+                ck["sizes"] = folded
             fsio.create_exclusive(self._ckpt_path(version),
                                   json.dumps(ck).encode())
 
@@ -475,21 +518,24 @@ class KeyedTable:
         data plane it prunes row groups via footer statistics before
         their chunk bytes are fetched, with the exact residual filter
         applied executor-side — same result either way."""
-        if not self.exists():
+        log = self._log()
+        if not log.latest:
             raise FileNotFoundError(f"table not initialized: {self.path}")
-        return self._snapshot(self._latest_version(), columns=columns,
-                              predicate=predicate)
+        return self._snapshot(log.latest, columns=columns,
+                              predicate=predicate, log=log)
 
     def _read_buckets(self, buckets: list[int]) -> DataFrame:
         """Current state of the given buckets only — the path-pruned
         slice a mutation batch joins against."""
-        return self._snapshot(self._latest_version(), buckets)
+        log = self._log()
+        return self._snapshot(log.latest, buckets, log=log)
 
-    def _resolve_version(self, timestamp_bound: str) -> int:
+    def _resolve_version(self, timestamp_bound: str,
+                         log: _Log | None = None) -> int:
         """Timestamp bound -> version id (last commit at or before the
         bound), with the first-commit and vacuum-floor guards."""
         ts = _parse_bound(timestamp_bound)
-        commits = self._commits()
+        commits = self._commits(log)
         if not commits:
             raise FileNotFoundError(f"table not initialized: {self.path}")
         visible = [c for c in commits if _parse_bound(c["time"]) <= ts]
@@ -517,64 +563,42 @@ class KeyedTable:
                     f"floor: version {floor})")
         return version
 
-    def _leaf_dirs(self, version: int,
-                   only_buckets: list[int] | None = None) -> list[str]:
-        """The leaf directories holding the table's rows at
-        ``version`` (optionally only the given buckets'), from the
-        ``_owners`` metadata fold."""
-        only = (None if only_buckets is None
-                else {int(b) for b in only_buckets})
-        return [posixpath.join(self.path, "data", d, f"{_BUCKET_COL}={b}")
-                for b, d in sorted(self._owners(version).items())
-                if d is not None and (only is None or b in only)]
-
     def _snapshot(self, version: int,
                   only_buckets: list[int] | None = None,
                   columns: list[str] | None = None,
-                  predicate: list[tuple] | None = None) -> DataFrame:
+                  predicate: list[tuple] | None = None,
+                  log: _Log | None = None) -> DataFrame:
         """The table state at ``version``, optionally restricted to a
         bucket subset, projected to ``columns``, and/or filtered by a
-        conjunctive ``predicate``. Resolution is commit-log metadata
-        only (the `_owners` fold); the scan's path list contains
-        EXACTLY the requested buckets' current leaf directories —
-        pruning happens before the file index is even built, and no
-        data is scanned to resolve a snapshot."""
-        leafs = self._leaf_dirs(version, only_buckets)
-        schema = self._schema()
-        known = {f.name for f in schema.fields}
-        if columns is not None:
-            bad = [c for c in columns if c not in known]
-            if bad:
-                raise ValueError(f"unknown columns {bad}; "
-                                 f"have {sorted(known)}")
-        if predicate is not None:
-            from dataflowtemplates_spark.operators.rangedparquet import (
-                PREDICATE_OPS,
-            )
-            for name, op, _ in predicate:
-                if name not in known:
-                    raise ValueError(
-                        f"unknown predicate column {name!r}")
-                if op not in PREDICATE_OPS:
-                    raise ValueError(
-                        f"unsupported predicate op {op!r}; "
-                        f"have {PREDICATE_OPS}")
-        if not leafs:
-            out_schema = (schema if columns is None
-                          else T.StructType([schema[c] for c in columns]))
+        conjunctive ``predicate``, in ``log``'s latest schema.
+        Resolution is commit-log metadata only (the `_fold`); the scan
+        reads EXACTLY the requested buckets' current files — no data
+        is scanned or listed to resolve a snapshot."""
+        log = self._log() if log is None else log
+        schema = self._schema(log)
+        out_schema = _projection(schema, columns, predicate)
+        owners, sizes = self._fold(version, log)
+        only = (None if only_buckets is None
+                else {int(b) for b in only_buckets})
+        held = [(b, d) for b, d in sorted(owners.items())
+                if d is not None and (only is None or b in only)]
+        if not held:
             return empty_frame(self.spark, out_schema)
-        plane = fsio.distributed_backend_for(leafs[0])
+        plane = fsio.distributed_backend_for(self.path)
         if plane is not None:
             # object-store scheme without a native Hadoop connector:
-            # executor-side parquet fetch through the backend (file
-            # list = the pruned buckets' leaves, computed above); an
-            # explicit projection prunes to ranged column-chunk GETs,
-            # and a predicate skips statistics-refuted row groups
+            # executor-side parquet fetch through the backend of the
+            # objects the log names; an explicit projection prunes to
+            # ranged column-chunk GETs, and a predicate skips
+            # statistics-refuted row groups
             from dataflowtemplates_spark.operators.objstore_plane import (
                 read_parquet)
-            return read_parquet(self.spark, leafs, schema, plane,
-                                columns=columns, predicate=predicate)
-        out = self.spark.read.schema(schema).parquet(*leafs)
+            return read_parquet(self.spark,
+                                self._objects(dict(held), sizes), schema,
+                                plane, columns=columns, predicate=predicate)
+        out = self.spark.read.schema(schema).parquet(*[
+            posixpath.join(self.path, "data", d, f"{_BUCKET_COL}={b}")
+            for b, d in held])
         if predicate is not None:
             import operator as _op
             fns = {"==": _op.eq, "<=": _op.le, ">=": _op.ge,
@@ -587,6 +611,20 @@ class KeyedTable:
             out = out.select(*columns)  # Catalyst prunes into the scan
         return out
 
+    def _objects(self, owners: dict[int, str | None],
+                 sizes: dict[int, int | None]) -> list[tuple[str, int]]:
+        """``(object, bytes)`` of each bucket ``owners`` (a `_fold`)
+        holds data for, from the log alone: no size, no read."""
+        held = [(b, d) for b, d in sorted(owners.items()) if d is not None]
+        for b, d in held:
+            if sizes.get(b) is None:  # dirs are named v{version:05d}-...
+                raise ValueError(
+                    f"commit version {int(d[1:].split('-', 1)[0])} of "
+                    f"{self.path} records no object size for bucket {b}")
+        return [(posixpath.join(self.path, "data", d, f"{_BUCKET_COL}={b}",
+                                "part.parquet"), sizes[b])
+                for b, d in held]
+
     def read_at(self, timestamp_bound: str,
                 columns: list[str] | None = None,
                 predicate: list[tuple] | None = None) -> DataFrame:
@@ -597,8 +635,10 @@ class KeyedTable:
         ``columns`` projects and ``predicate`` filters the scan (see
         :meth:`read`).
         """
-        return self._snapshot(self._resolve_version(timestamp_bound),
-                              columns=columns, predicate=predicate)
+        log = self._log()
+        return self._snapshot(self._resolve_version(timestamp_bound, log),
+                              columns=columns, predicate=predicate,
+                              log=log)
 
     def changes_between(self, bound_from: str, bound_to: str) -> DataFrame:
         """Change-data-feed between two timestamp bounds: every row
@@ -616,23 +656,24 @@ class KeyedTable:
         skew); the four change classes are selects over that single
         join (Catalyst reuses the exchange across the union branches).
         """
-        v0 = self._resolve_version(bound_from)
-        v1 = self._resolve_version(bound_to)
+        log = self._log()
+        v0 = self._resolve_version(bound_from, log)
+        v1 = self._resolve_version(bound_to, log)
         if v1 < v0:
             raise ValueError(
                 f"bound_to resolves to version {v1}, before bound_from "
                 f"(version {v0})")
         touched = sorted({int(b)
-                          for c in self._commits()
+                          for c in self._commits(log)
                           if v0 < c["version"] <= v1
                           for b in c.get("buckets", [])})
-        schema = self._schema()
+        schema = self._schema(log)
         data_cols = [f.name for f in schema.fields]
         if not touched or v0 == v1:
             return (empty_frame(self.spark, schema)
                     .withColumn("_change_type", F.lit(None).cast("string")))
-        old = self._snapshot(v0, touched)
-        new = self._snapshot(v1, touched)
+        old = self._snapshot(v0, touched, log=log)
+        new = self._snapshot(v1, touched, log=log)
         o = old.select(*[F.col(c).alias(f"_o_{c}") for c in data_cols])
         n = new.select(*[F.col(c).alias(f"_n_{c}") for c in data_cols])
         cond = None
@@ -707,7 +748,7 @@ class KeyedTable:
         except ConcurrentWriteError:
             pass  # IF NOT EXISTS: the racing creator's table stands
 
-    def _evolve_schema(self, batch: DataFrame) -> None:
+    def _evolve_schema(self, batch: DataFrame, log: _Log) -> _Log:
         """Extend the stored schema with storable batch columns it
         lacks (schema_evolution=True). Metadata-only: no data files are
         rewritten — existing files simply read NULL for the new columns
@@ -718,28 +759,26 @@ class KeyedTable:
         other: two concurrent writers evolving DIFFERENT columns each
         union against the entry they read, and the loser retries
         against the winner's already-extended schema — every evolution
-        is additive over the latest state, never a lost column."""
-        # cheap pre-check: the common no-new-columns case must not pay
-        # a commit per mutation
-        have = {f.name for f in self._schema().fields}
-        if all(f.name in have for f in batch.schema.fields):
-            return
-        for _ in range(5):
-            v = self._latest_version()
+        is additive over the latest state, never a lost column.
+        Returns the listing the caller goes on from."""
+        for attempt in range(5):
+            if attempt:
+                log = self._log()  # a rival commit landed: re-list
+            v = log.latest
             cfg = self._config_at(v)
             stored = T.StructType.fromJson(json.loads(cfg["schema"]))
             names = {f.name for f in stored.fields}
             new = [f for f in batch.schema.fields if f.name not in names]
             if not new:
-                return
+                return log
             evolved = dict(cfg)
             evolved["schema"] = T.StructType(
                 list(stored.fields) + new).json()
             try:
-                self._commit_entry(v + 1, [], None, [], evolved)
-                return
+                self._commit_entry(v + 1, [], None, [], evolved, log=log)
+                return _Log(log.versions + (v + 1,), log.ckpts)
             except ConcurrentWriteError:
-                continue  # a rival commit landed: re-read and retry
+                continue
         raise ConcurrentWriteError(
             f"schema evolution at {self.path} lost the commit CAS 5 "
             "times in a row; retry under less write contention")
@@ -880,22 +919,23 @@ class KeyedTable:
                 skipped)
             batch = batch.drop(*skipped)
         self._require_conditional_put()  # fail BEFORE any Spark job runs
+        log = self._log()  # the op's one listing on an existing table
         if create:
             data = batch.drop(*extra)
-            self.create(data)
+            if not log.latest:
+                self.create(data)
+                log = self._log()
             if self.schema_evolution:
-                self._evolve_schema(data)
-        elif not self.exists():
+                log = self._evolve_schema(data, log)
+        elif not log.latest:
             raise FileNotFoundError(f"table not initialized: {self.path}")
-        base_version = self._base_version()
-        cfg = self._config_at(base_version)
+        cfg = self._config_at(log.latest)
         self._require_matching_keys(cfg)
         replay, txn_update = self._txn_gate(cfg, txn_app, txn_version)
         if replay:  # already applied by an earlier commit: zero jobs
             return MutationResult(0, _empty_with_error(batch),
                                   replayed=True)
-        return _Front(batch, base_version, int(cfg["n_buckets"]),
-                      txn_update)
+        return _Front(batch, log, int(cfg["n_buckets"]), txn_update)
 
     def _annotate(self, f: _Front, touch, counts: dict,
                   order: list | None = None, ranked=None):
@@ -955,7 +995,7 @@ class KeyedTable:
         processed, its rows just changed nothing."""
         self._commit_buckets(new_slice if rewrite else None, rewrite,
                              f.n_buckets, f.base_version,
-                             config_update=f.txn_update)
+                             config_update=f.txn_update, log=f.log)
 
     def _write(self, batch: DataFrame, op: str,
                txn_app: str | None = None,
@@ -1012,7 +1052,7 @@ class KeyedTable:
         # snapshot-isolated: the base version's files are immutable, so
         # this slice cannot shift under the merge even if a rival
         # commits mid-flight (the CAS will catch that at publish time)
-        target = self._snapshot(f.base_version, touched)
+        target = self._snapshot(f.base_version, touched, log=f.log)
         if op in ("INSERT", "UPDATE"):
             # ONE flag join classifies every kept row against the
             # touched slice. keep holds one row per key and the table
@@ -1039,7 +1079,8 @@ class KeyedTable:
             if rewrite:
                 # conflict-only buckets are untouched: the new slice
                 # reads only the buckets an applying row hashes into
-                target = self._snapshot(f.base_version, rewrite)
+                target = self._snapshot(f.base_version, rewrite,
+                                        log=f.log)
                 new_slice = (target.unionByName(_conform(applies, target))
                              if op == "INSERT" else
                              self._merge(target, applies,
@@ -1173,14 +1214,16 @@ class KeyedTable:
                       .drop("_bad"))
         upserts = ann.filter(win_up).drop("_bad", "_rn", "_tie", *extra)
         del_keys = ann.filter(win_del).select(*self.keys)
-        target = self._snapshot(f.base_version, touched) if touched else None
+        target = (self._snapshot(f.base_version, touched, log=f.log)
+                  if touched else None)
         matched_del = 0
         del_obs = None
         # a slice with no files matches no delete. Skip the join: the
         # slice plans as an empty LocalRelation, and a fused count
         # riding a plan over it failed Observation.get (toPyRow
         # AssertionError) once the optimizer folded the empty side
-        if n_del and self._leaf_dirs(f.base_version, touched):
+        if n_del and any(self._owners(f.base_version, f.log).get(b)
+                         for b in touched):
             # When the batch also carries upserts the staging write is
             # guaranteed to run, so the matched-delete count RIDES it
             # as an Observation on a left-join flag instead of paying
@@ -1275,7 +1318,7 @@ class KeyedTable:
         if touched:
             # one job: deleted-row count + the buckets that actually
             # change
-            row = (self._snapshot(f.base_version, touched)
+            row = (self._snapshot(f.base_version, touched, log=f.log)
                    .join(hits, self.keys, "left_semi")
                    .agg(F.count(F.lit(1)).alias("n"),
                         F.collect_set(self._bucket_expr(f.n_buckets))
@@ -1287,7 +1330,7 @@ class KeyedTable:
             # join strategy left to AQE: hits is checkpointed with a
             # known size, so small delete batches broadcast and large
             # ones shuffle
-            survivors = (self._snapshot(f.base_version, rewrite)
+            survivors = (self._snapshot(f.base_version, rewrite, log=f.log)
                          .join(hits, self.keys, "left_anti"))
         self._publish(f, survivors, rewrite)
         return MutationResult(applied=applied, quarantine=quarantine)
@@ -1338,7 +1381,8 @@ class KeyedTable:
     def _commit_buckets(self, new_slice: DataFrame | None,
                         touched: list[int], n_buckets: int,
                         expected_version: int,
-                        config_update: dict | None = None) -> None:
+                        config_update: dict | None = None,
+                        log: _Log | None = None) -> None:
         """Commit the rewritten slice: stage the touched buckets' new
         files into a fresh immutable data directory (the expensive
         Spark job — it runs against immutable inputs and touches only
@@ -1355,7 +1399,8 @@ class KeyedTable:
         layout change and its version advance are one atomic publish.
         Without an update, ``n_buckets`` must match the base version's
         config — a direct caller staging against a stale layout is
-        rejected before anything is published."""
+        rejected before anything is published. ``log`` is the listing
+        ``expected_version`` came from."""
         base_cfg = self._config_at(expected_version)
         if ("n_buckets" not in (config_update or {})
                 and int(base_cfg["n_buckets"]) != n_buckets):
@@ -1368,6 +1413,7 @@ class KeyedTable:
             cfg.update(config_update)
         dirname = None
         present: list[int] = []
+        sizes: dict[int, int] = {}
         if touched:
             dirname = f"v{expected_version + 1:05d}-{uuid.uuid4().hex[:8]}"
             data_dir = posixpath.join(self.path, "data", dirname)
@@ -1383,38 +1429,43 @@ class KeyedTable:
                     # object store through the pickled backend
                     from dataflowtemplates_spark.operators import (
                         objstore_plane)
-                    objstore_plane.write_partitioned(
+                    res = objstore_plane.write_partitioned(
                         staged, data_dir, _BUCKET_COL,
                         self._plane_flush_rows)
+                    # no LIST: the result names .../kb=B/part.parquet
+                    present = [int(f.rsplit("/", 2)[1].split("=", 1)[1])
+                               for f in res.files]
+                    sizes = {b: res.sizes[f]
+                             for b, f in zip(present, res.files)}
                 else:
                     (staged.write.mode("overwrite")
                      .partitionBy(_BUCKET_COL).parquet(data_dir))
-                present = [int(fn.split("=", 1)[1])
-                           for fn in fsio.list_dir(data_dir)
-                           if fn.startswith(f"{_BUCKET_COL}=")]
-                # a staged bucket OUTSIDE the declared touched set
-                # would be invisible to the owner fold (readers only
-                # advance owners for entry["buckets"]) — silent row
+                    present = [int(fn.split("=", 1)[1])
+                               for fn in fsio.list_dir(data_dir)
+                               if fn.startswith(f"{_BUCKET_COL}=")]
+                # a bucket staged by two tasks (one object overwrote
+                # the other's rows) or OUTSIDE the declared touched
+                # set (invisible to the owner fold, which advances
+                # owners for entry["buckets"] only) is silent row
                 # loss. Unreachable through the annotate path (touched
                 # is derived from the same bucket expression); this
                 # guards the collapsed caller contract and any future
                 # direct caller.
-                stray = sorted(set(present) - set(int(b)
-                                                  for b in touched))
-                if stray:
+                if (len(set(present)) < len(present)
+                        or not set(present) <= set(map(int, touched))):
                     raise RuntimeError(
-                        f"staged data landed in buckets {stray} "
-                        f"outside the declared touched set for "
-                        f"{self.path}: the batch violated its "
-                        "collapsed/touched contract; nothing was "
-                        "published")
+                        f"staged buckets {sorted(present)} of "
+                        f"{self.path} repeat a bucket or leave the "
+                        f"declared touched set {sorted(touched)}: the "
+                        "batch violated its collapsed/touched contract; "
+                        "nothing was published")
             except Exception:
                 if fsio.exists(data_dir):
                     fsio.delete_dir(data_dir)
                 raise
         try:
             self._commit_entry(expected_version + 1, touched, dirname,
-                               present, cfg)
+                               present, cfg, sizes=sizes, log=log)
         except ConcurrentWriteError:
             # CAS lost: the staged directory was never published —
             # delete it and surface the retry contract
@@ -1441,15 +1492,16 @@ class KeyedTable:
         bit-exact), and a pure layout change contributes no
         ``changes_between`` rows (values are untouched)."""
         new_cluster = _validate_cluster_spec(cluster_by, cluster_mode)
+        log = self._log()
         if new_cluster:
-            _validate_cluster_columns(new_cluster, self._schema())
+            _validate_cluster_columns(new_cluster, self._schema(log))
         self._require_conditional_put()  # fail BEFORE the O(table) rewrite
-        base_version = self._base_version()
-        n_buckets = int(self._config_at(base_version)["n_buckets"])
+        n_buckets = int(self._config_at(log.latest)["n_buckets"])
         touched = sorted(range(n_buckets))
-        self._commit_buckets(self._snapshot(base_version), touched,
-                             n_buckets, base_version,
-                             config_update={"cluster": new_cluster})
+        self._commit_buckets(self._snapshot(log.latest, log=log), touched,
+                             n_buckets, log.latest,
+                             config_update={"cluster": new_cluster},
+                             log=log)
 
     def rebucket(self, n_buckets_new: int) -> None:
         """Change the hash-bucket layout — the grow path for a table
@@ -1478,14 +1530,15 @@ class KeyedTable:
         if n_buckets_new < 1:
             raise ValueError("n_buckets must be >= 1")
         self._require_conditional_put()  # fail BEFORE the O(table) rewrite
-        base_version = self._base_version()
-        old_n = int(self._config_at(base_version)["n_buckets"])
+        log = self._log()
+        old_n = int(self._config_at(log.latest)["n_buckets"])
         if n_buckets_new == old_n:
             return
         touched = sorted(set(range(old_n)) | set(range(n_buckets_new)))
         self._commit_buckets(
-            self._snapshot(base_version), touched, n_buckets_new,
-            base_version, config_update={"n_buckets": int(n_buckets_new)})
+            self._snapshot(log.latest, log=log), touched, n_buckets_new,
+            log.latest, config_update={"n_buckets": int(n_buckets_new)},
+            log=log)
 
     def vacuum(self, keep_last: int = 1,
                truncate_log: bool = False) -> int:
@@ -1522,20 +1575,21 @@ class KeyedTable:
         :meth:`reclaim_orphans`' job."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        if not self.exists():
+        log = self._log()
+        if not log.latest:
             raise FileNotFoundError(f"table not initialized: {self.path}")
         self._require_conditional_put()
-        latest = self._latest_version()
+        latest = log.latest
         cfg = self._config_at(latest)
         floor = max(int(cfg.get("min_retained_version", 1)),
                     latest - keep_last + 1)
         self._commit_buckets(
             None, [], int(cfg["n_buckets"]), latest,
-            config_update={"min_retained_version": int(floor)})
+            config_update={"min_retained_version": int(floor)}, log=log)
         # deletion decisions read the log prefix <= floor, which the
         # published floor has frozen semantically: entries are immutable
-        # and the floor only rises
-        entries = self._commits()
+        # and the floor only rises (the CAS proved ``log`` complete)
+        entries = self._commits(log)
         touches: dict[int, list[int]] = {}
         for e in entries:
             for b in e.get("buckets", []):
@@ -1560,10 +1614,7 @@ class KeyedTable:
             # checkpoint is their fold) — safe to delete. Every
             # retained version v >= floor still folds from that
             # checkpoint plus the retained entries (ck, v].
-            cks = sorted(
-                int(n.split(".", 1)[0]) for n in self._log_names()
-                if n.endswith(".ckpt.json")
-                and int(n.split(".", 1)[0]) <= floor)
+            cks = [c for c in log.ckpts if c <= floor]
             if cks:
                 ck = cks[-1]
                 for e in entries:
@@ -1622,17 +1673,11 @@ class KeyedTable:
         listed = list(fsio.list_dir(data_root))
 
         def _referenced() -> set[str]:
-            refs: set[str] = set()
-            for n in self._log_names():
-                if not n.endswith(".json"):
-                    continue
-                obj = self._read_log_json(
-                    posixpath.join(self._log_dir(), n))
-                if n.endswith(".ckpt.json"):
-                    refs.update(
-                        d for d in obj.get("owners", {}).values() if d)
-                elif obj.get("dir"):
-                    refs.add(obj["dir"])
+            log = self._log()
+            refs = {e["dir"] for e in self._commits(log) if e.get("dir")}
+            for c in log.ckpts:
+                refs.update(d for d in self._read_log_json(
+                    self._ckpt_path(c))["owners"].values() if d)
             return refs
 
         referenced = _referenced()
@@ -1699,6 +1744,32 @@ def _orderable_expr(expr, dt):
             _orderable_expr(expr[f.name], f.dataType).alias(f.name)
             for f in dt.fields])
     return expr
+
+
+def _projection(schema: T.StructType, columns: list[str] | None,
+                predicate: list[tuple] | None) -> T.StructType:
+    """The schema a read of ``columns`` (every column when None)
+    returns. The one check of a read's arguments, made before anything
+    is fetched: every named column must be in ``schema``, and every
+    predicate op in ``rangedparquet.PREDICATE_OPS``."""
+    from dataflowtemplates_spark.operators.rangedparquet import (
+        PREDICATE_OPS,
+    )
+    known = set(schema.names)
+    if columns is not None:
+        bad = [c for c in columns if c not in known]
+        if bad:
+            raise ValueError(f"unknown columns {bad}; "
+                             f"have {sorted(known)}")
+    for name, op, _ in predicate or ():
+        if name not in known:
+            raise ValueError(f"unknown predicate column {name!r}")
+        if op not in PREDICATE_OPS:
+            raise ValueError(f"unsupported predicate op {op!r}; "
+                             f"have {PREDICATE_OPS}")
+    if columns is None:
+        return schema
+    return T.StructType([schema[c] for c in columns])
 
 
 def _parse_bound(s: str):

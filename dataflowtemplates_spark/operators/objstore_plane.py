@@ -15,10 +15,11 @@ plane, not a driver shim:
 * **Write** (:func:`write_partitioned`): the staged slice runs the
   engine's one sink stage (``sources/writers.sink_stage``, the stage
   every export runs): each EXECUTOR task writes one snappy parquet
-  object per bucket it holds, ``kb=B/part-{partition:05d}.parquet``,
+  object per bucket it holds, named by the bucket, ``kb=B/part.parquet``,
   through the seam's pickled backend (``fsio.task_files``;
   ``S3HttpBackend``/``GcsHttpBackend`` pickle by configuration), the
-  object-store analogue of Spark's native ``partitionBy`` writer.
+  object-store analogue of Spark's native ``partitionBy`` writer, and
+  returns each object's bytes for the commit entry to record.
   Objects stream as S3 multipart uploads or GCS resumable sessions in
   parts of at least 8 MB, so a task holds one part per open object
   however large it grows; parts stage invisibly and only the complete
@@ -28,22 +29,18 @@ plane, not a driver shim:
   name, so a task retry or speculative attempt replaces whole objects
   and leaves no debris to duplicate rows, whatever order its rows
   arrived in.
-* **Read** (:func:`read_parquet`): the driver lists the snapshot's
-  leaf directories through the backend (bucket pruning happened
-  upstream in the ``_owners`` fold — the file list IS the pruned
-  scan), then one ``mapInArrow`` task per packed bin of objects
-  (:func:`scan_files`) fetches and decodes each object executor-side,
-  conforming to the table schema (missing columns null-fill: the
-  engine's schema-evolution rule, same as parquet's missing-column
+* **Read** (:func:`read_parquet`): the caller hands in the snapshot's
+  ``(object, bytes)`` pairs, which the commit log's ``_owners`` fold
+  names (bucket pruning happened there — the object list IS the
+  pruned scan; no data directory is ever LISTed), then one
+  ``mapInArrow`` task per packed bin of objects (:func:`scan_files`)
+  fetches and decodes each object executor-side, conforming to the
+  table schema (missing columns null-fill: the engine's
+  schema-evolution rule, same as parquet's missing-column
   semantics).
 
-Scale notes: both directions are map-only (no shuffle, no
-driver-side data movement; the driver handles O(files) strings).
-Snapshot listing issues one paginated LIST per commit dir — from the
-driver for small snapshots, from EXECUTOR tasks (one per commit dir,
-``_DIST_LIST_MIN_DIRS`` threshold) when a long-lived table's snapshot
-spans many commit dirs, so the round trips parallelize instead of
-serializing on the driver.
+Both directions are map-only (no shuffle, no driver-side data
+movement; the driver handles O(objects) strings).
 Column pruning pushes into this plane through the EXPLICIT
 ``columns=`` projection (``KeyedTable.read(columns=...)`` plumbs it):
 the task then fetches only the parquet footer plus the projected
@@ -78,14 +75,17 @@ def _arrow_schema(spark_schema: T.StructType):
 
 def write_partitioned(staged: DataFrame, data_dir: str, bucket_col: str,
                       row_group_size: int | None = None):
-    """Write ``staged`` as ``data_dir/{bucket_col}={b}/part-*.parquet``
+    """Write ``staged`` as ``data_dir/{bucket_col}={b}/part.parquet``
     objects from executor tasks, like
     ``df.write.partitionBy(bucket_col).parquet(data_dir)``: the bucket
     column lives in the directory name, not in the files. CALLER
     CONTRACT: ``bucket_col`` is the leading sort key of every
-    partition (the sink stage raises on a bucket met twice).
+    partition (the sink stage raises on a bucket met twice) and each
+    bucket lives in one partition (two tasks holding one bucket would
+    write the same object; the result then names it twice).
     ``row_group_size`` caps the rows of a parquet row group. Returns
-    the stage's ``WriteResult``."""
+    the stage's ``WriteResult``, whose ``sizes`` give each object's
+    bytes."""
     from dataflowtemplates_spark.sources import writers
 
     split = F.concat(F.lit(f"{bucket_col}="),
@@ -98,14 +98,8 @@ def write_partitioned(staged: DataFrame, data_dir: str, bucket_col: str,
         # read_object conforms every object to the table's schema
         writers._columnar_writer("parquet", "snappy", row_group_size,
                                  store_schema=False),
-        ".parquet", "parquet", "part")
+        ".parquet", "parquet", "part", without_sharding=True)
 
-
-#: snapshots spanning at least this many distinct commit dirs list
-#: them from EXECUTORS (one task per commit dir) instead of
-#: serializing the paginated LIST round trips on the driver; below
-#: it, a Spark job costs more than the listing saves
-_DIST_LIST_MIN_DIRS = 8
 
 #: Partition packing: target bytes of parquet objects per scan task.
 #: One object per task matches the native source's file-split
@@ -114,7 +108,7 @@ _DIST_LIST_MIN_DIRS = 8
 #: scheduling PER TINY OBJECT (guide §4/§6). Packing bins objects into
 #: ~this many bytes per task, floored at the cluster's default
 #: parallelism so a small scan still fills every core; object sizes
-#: ride the snapshot LIST for free.
+#: come from the commit log.
 _PACK_TARGET_BYTES = 32 << 20
 
 
@@ -161,13 +155,13 @@ def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
 def scan_files(spark: SparkSession, sized_files: list, schema,
                per_file) -> DataFrame:
     """The executor fan-out of the engine file readers (parquet, Avro,
-    TFRecord) and the distributed snapshot listing: ``(path, size)``
-    pairs packed into bins of ~``_PACK_TARGET_BYTES`` by
-    :func:`_pack_files` (amortizing per-task worker cost over small
-    files; unknown sizes get a bin each), one ``mapInArrow`` task per
-    bin, ``per_file(path)`` yielding the file's Arrow batches in
-    ``schema``. Tasks are a JVM range of bin indexes, the bins riding in
-    the task closure: no Python stage or shuffle runs before the scan."""
+    TFRecord): ``(path, size)`` pairs packed into bins of
+    ~``_PACK_TARGET_BYTES`` by :func:`_pack_files` (amortizing per-task
+    worker cost over small files; unknown sizes get a bin each), one
+    ``mapInArrow`` task per bin, ``per_file(path)`` yielding the file's
+    Arrow batches in ``schema``. Tasks are a JVM range of bin indexes,
+    the bins riding in the task closure: no Python stage or shuffle runs
+    before the scan."""
     if not sized_files:
         return empty_frame(spark, schema)
     bins = _pack_files(sized_files, _PACK_TARGET_BYTES,
@@ -181,76 +175,6 @@ def scan_files(spark: SparkSession, sized_files: list, schema,
 
     return spark.range(len(bins), numPartitions=len(bins)) \
         .mapInArrow(task, schema)
-
-
-def _group_leaf_dirs(leaf_dirs: list[str]) -> dict[str, set[str]]:
-    """Leaves group under their commit directory
-    (``.../data/vNNNNN-x/kb=B``) -> {commit_dir: {leaf names}}."""
-    from collections import defaultdict
-
-    by_parent: dict[str, set[str]] = defaultdict(set)
-    for d in leaf_dirs:
-        parent, _, leaf = d.rstrip("/").rpartition("/")
-        by_parent[parent].add(leaf)
-    return by_parent
-
-
-def _list_commit_dir(backend, parent: str, leaves) -> list[tuple]:
-    """ONE paginated listing of a commit dir, filtered to the wanted
-    bucket leaves — O(1) round trips per commit dir, not O(buckets)
-    HEAD+LIST pairs. Returns ``(path, size_bytes)`` pairs (size rides
-    the same listing for free — S3 <Size> / GCS size — and feeds the
-    partition PACKING that amortizes per-task overhead over small
-    objects; None when a server omits it)."""
-    scheme = parent.split("://", 1)[0]
-    bucket, key = backend._split(parent)
-    # bucket-root parent (leaf dirs one level under the bucket) lists
-    # with an empty prefix, not "/"
-    p = key.rstrip("/") + "/" if key else ""
-    return [(f"{scheme}://{bucket}/{item}", size)
-            for kind, item, _, size in backend._list(bucket, p, None)
-            if kind == "key" and item.endswith(".parquet")
-            and item[len(p):].split("/", 1)[0] in leaves]
-
-
-def _list_leaf_files(leaf_dirs: list[str], backend,
-                     spark: SparkSession | None = None) -> list[tuple]:
-    """``(path, size)`` listing for the snapshot's leaf dirs. Small
-    snapshots list from the driver (no job-scheduling latency); a
-    snapshot spanning many commit dirs — a long-lived 100 TB table
-    between rebuckets — distributes the per-commit-dir LISTs to
-    executors so the round trips parallelize instead of serializing
-    on the driver (same ``mapInArrow`` trick as the data path; the
-    driver still only ever holds O(files) strings)."""
-    by_parent = _group_leaf_dirs(leaf_dirs)
-    if (spark is not None and getattr(backend, "distributed", False)
-            and len(by_parent) >= _DIST_LIST_MIN_DIRS):
-        return _list_leaf_files_distributed(spark, by_parent, backend)
-    return [f for parent, leaves in by_parent.items()
-            for f in _list_commit_dir(backend, parent, leaves)]
-
-
-def _list_leaf_files_distributed(spark: SparkSession,
-                                 by_parent: dict[str, set[str]],
-                                 backend) -> list[tuple]:
-    """One executor task per commit dir (:func:`scan_files`) issues that
-    dir's paginated LIST through the pickled backend; the collected
-    result is the same O(files) ``(path, size)`` manifest the driver
-    path produces."""
-    def list_dir(parent):
-        import pyarrow as pa
-
-        out = _list_commit_dir(backend, parent, by_parent[parent])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([f for f, _ in out], pa.string()),
-             pa.array([(-1 if s is None else s) for _, s in out],
-                      pa.int64())],
-            names=["file", "size"])
-
-    rows = scan_files(spark, [(p, None) for p in by_parent],
-                      "file string, size long", list_dir).collect()
-    return [(r["file"], (None if r["size"] < 0 else int(r["size"])))
-            for r in rows]
 
 
 def read_object(backend, path: str, arrow_schema, ranged: bool,
@@ -277,13 +201,16 @@ def read_object(backend, path: str, arrow_schema, ranged: bool,
     return pa.table(dict(zip(arrow_schema.names, cols)), schema=arrow_schema)
 
 
-def read_parquet(spark: SparkSession, leaf_dirs: list[str],
+def read_parquet(spark: SparkSession, sized_files: list,
                  schema: T.StructType, backend,
                  columns: list[str] | None = None,
                  predicate: list[tuple] | None = None) -> DataFrame:
-    """Distributed read of the given leaf directories' parquet objects
-    through ``backend``, conformed to ``schema`` (missing columns
-    null-fill — the engine's schema-evolution rule).
+    """Distributed read of the ``(path, bytes)`` parquet objects in
+    ``sized_files`` through ``backend``, conformed to ``schema``
+    (missing columns null-fill — the engine's schema-evolution rule).
+    The caller has checked ``columns`` and ``predicate`` against
+    ``schema`` (``mutations._projection``, the one check every
+    KeyedTable read passes).
 
     ``columns`` projects the read down to the named top-level columns
     (result column order = request order). On backends exposing
@@ -302,23 +229,8 @@ def read_parquet(spark: SparkSession, leaf_dirs: list[str],
     fetched, the native reader's row-group predicate pruning. A
     predicate column absent from an evolved file null-fills, so no
     row of that file matches."""
-    known = {f.name for f in schema.fields}
-    if predicate is not None:
-        from dataflowtemplates_spark.operators.rangedparquet import (
-            PREDICATE_OPS,
-        )
-        for name, op, _ in predicate:
-            if name not in known:
-                raise ValueError(f"unknown predicate column {name!r}")
-            if op not in PREDICATE_OPS:
-                raise ValueError(f"unsupported predicate op {op!r}; "
-                                 f"have {PREDICATE_OPS}")
     out_names = list(columns) if columns is not None else None
     if columns is not None:
-        bad = [c for c in columns if c not in known]
-        if bad:
-            raise ValueError(f"unknown columns {bad}; "
-                             f"have {sorted(known)}")
         if predicate is not None:
             # the residual filter evaluates executor-side on the
             # fetched table: predicate columns ride the fetch and are
@@ -327,7 +239,6 @@ def read_parquet(spark: SparkSession, leaf_dirs: list[str],
                 n for n in dict.fromkeys(n for n, _, _ in predicate)
                 if n not in columns]
         schema = T.StructType([schema[c] for c in columns])
-    sized = _list_leaf_files(leaf_dirs, backend, spark)
     final_schema = (T.StructType([schema[c] for c in out_names])
                     if out_names is not None else schema)
     arrow_schema = _arrow_schema(schema)
@@ -356,4 +267,4 @@ def read_parquet(spark: SparkSession, leaf_dirs: list[str],
             out = out.select(final_names)
         yield from out.to_batches()
 
-    return scan_files(spark, sized, final_schema, read_file)
+    return scan_files(spark, sized_files, final_schema, read_file)

@@ -23,15 +23,15 @@ own, never a reimplementation. Column pruning has no DataSource API
 hook yet; the explicit ``columns`` option projects the fetch the same
 way ``KeyedTable.read(columns=...)`` does.
 
-Read path: one :class:`InputPartition` per ~pack-target bytes of
-data objects (small objects bin together so Python-worker spin-up
-and per-task overhead amortize instead of repeating per tiny object;
-sizes ride the snapshot LIST for free — the plane's ``_pack_files``
-discipline), the snapshot's file list computed driver-side from the
-commit log's ``_owners`` fold — so the partition list IS the pruned
-scan. ``read()`` runs in the Python
-worker with the PICKLED backend (no fsio registry exists there) and
-yields Arrow record batches conformed to the table schema
+Read path: one :class:`InputPartition` per ~pack-target bytes of data
+objects (small objects bin together so Python-worker spin-up and
+per-task overhead amortize instead of repeating per tiny object — the
+plane's ``_pack_files`` discipline), the snapshot's objects and their
+sizes named driver-side by the commit log's fold — so the partition
+list IS the pruned scan, and planning lists ``_log`` once per planner
+call (``schema`` and ``reader``) and never lists data. ``read()`` runs
+in the Python worker with the PICKLED backend (no fsio registry exists
+there) and yields Arrow record batches conformed to the table schema
 (missing-column null-fill, the engine's schema-evolution rule).
 
 Scope: object-store-backed tables (a registered DISTRIBUTED fsio
@@ -230,36 +230,25 @@ class KeyedTableDataSource(DataSource):
         return t, backend
 
     def schema(self):
-        from pyspark.sql import types as T
-
-        t, _ = self._handle()
-        schema = t._schema()
-        cols = self.options.get("columns")
-        if cols:
-            wanted = [c.strip() for c in cols.split(",") if c.strip()]
-            known = {f.name for f in schema.fields}
-            bad = [c for c in wanted if c not in known]
-            if bad:
-                raise ValueError(f"unknown columns {bad}; "
-                                 f"have {sorted(known)}")
-            schema = T.StructType([schema[c] for c in wanted])
-        return schema
-
-    def reader(self, schema) -> KeyedTableReader:
-        from dataflowtemplates_spark.operators.objstore_plane import (
-            _list_leaf_files,
+        from dataflowtemplates_spark.operators.mutations import (
+            _projection,
         )
 
+        t, _ = self._handle()
+        cols = self.options.get("columns")
+        wanted = ([c.strip() for c in cols.split(",") if c.strip()]
+                  if cols else None)
+        return _projection(t._schema(), wanted, None)
+
+    def reader(self, schema) -> KeyedTableReader:
         t, backend = self._handle()
+        log = t._log()
         bound = self.options.get("timestamp_bound")
-        version = (t._resolve_version(bound) if bound
-                   else t._latest_version())
+        version = t._resolve_version(bound, log) if bound else log.latest
         if version == 0:
             raise FileNotFoundError(
                 f"table not initialized: {self.options.get('path')}")
-        leafs = t._leaf_dirs(version)
-        sized = sorted(_list_leaf_files(leafs, backend)) if leafs \
-            else []
+        sized = t._objects(*t._fold(version, log))
         pack = self.options.get("pack_bytes")
         return KeyedTableReader(schema, sized, backend,
                                 pack_bytes=int(pack) if pack else None)

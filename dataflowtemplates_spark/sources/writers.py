@@ -34,10 +34,10 @@ Shards are numbered by the Spark partition that wrote them, so the
 numbers within one directory need not be consecutive.
 
 Scale note: every write is one Spark job over the input (plus the split
-shuffle); only (file, rows) pairs return to the driver. The deliberately
-non-scalable path is `without_sharding` (`coalesce(1)`), which exists
-for byte-parity with the reference's fixed-filename mode and should
-only be used for small exports — the reference's own caveat.
+shuffle); only (file, rows, bytes) triples return to the driver. The
+deliberately non-scalable path is `without_sharding` (`coalesce(1)`),
+which exists for byte-parity with the reference's fixed-filename mode
+and should only be used for small exports — the reference's own caveat.
 """
 
 from __future__ import annotations
@@ -56,10 +56,12 @@ _SPLIT_COL = "_split"
 
 @dataclass
 class WriteResult:
-    """What a dynamic write produced (the reference's WriteFilesResult)."""
+    """What a dynamic write produced (the reference's WriteFilesResult).
+    ``sizes`` maps each written file to its length in bytes."""
     files: list[str] = field(default_factory=list)
     row_count: int = 0
     format: str = "text"
+    sizes: dict[str, int] = field(default_factory=dict)
 
     @property
     def empty(self) -> bool:
@@ -119,7 +121,9 @@ def sink_stage(frame: DataFrame, files, start, suffix: str, fmt: str,
     writer (a self-contained closure — it is pickled by value):
     ``write(batch)`` gets Arrow batches of the payload columns holding
     one key each, ``close()`` finishes the file before the stream is
-    closed. Only (file, rows) pairs return to the driver.
+    closed. Only (file, rows, bytes) triples return to the driver; a
+    file's bytes are the stream's position once the format writer has
+    finished it.
     """
     k = arrow_kernels()
 
@@ -133,7 +137,7 @@ def sink_stage(frame: DataFrame, files, start, suffix: str, fmt: str,
         root = posixpath.normpath(files.root)
         name = (f"{prefix}{suffix}" if without_sharding else
                 f"{prefix}-{TaskContext.get().partitionId():05d}{suffix}")
-        written = []  # (file, rows) per finished file
+        written = []  # (file, rows, bytes) per finished file
         done = set()  # keys whose file is open or finished
         cur = None  # the open file: its key, stream, writer and row count
 
@@ -156,8 +160,9 @@ def sink_stage(frame: DataFrame, files, start, suffix: str, fmt: str,
 
         def finish(f):
             f["close"]()
+            size = f["stream"].tell()
             f["stream"].close()
-            written.append((f["file"], f["rows"]))
+            written.append((f["file"], f["rows"], size))
 
         try:
             for batch in batches:
@@ -188,13 +193,16 @@ def sink_stage(frame: DataFrame, files, start, suffix: str, fmt: str,
             if cur is not None:
                 files.abandon(cur["stream"])
         yield pa.RecordBatch.from_arrays(
-            [k.array([f for f, _ in written], pa.string()),
-             k.array([n for _, n in written], pa.int64())],
-            names=["file", "rows"])
+            [k.array([f for f, _, _ in written], pa.string()),
+             k.array([n for _, n, _ in written], pa.int64()),
+             k.array([b for _, _, b in written], pa.int64())],
+            names=["file", "rows", "bytes"])
 
-    stats = frame.mapInArrow(task, "file string, rows long").collect()
+    stats = frame.mapInArrow(
+        task, "file string, rows long, bytes long").collect()
     return WriteResult(files=sorted(r.file for r in stats),
-                       row_count=sum(r.rows for r in stats), format=fmt)
+                       row_count=sum(r.rows for r in stats), format=fmt,
+                       sizes={r.file: r.bytes for r in stats})
 
 
 def _clear(path: str) -> None:

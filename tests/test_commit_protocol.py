@@ -293,15 +293,13 @@ def test_apply_mutations_with_retry_wins_after_contention(spark, tmp_path):
     class Contended(KeyedTable):
         fire = 2  # rival commits ahead of our first TWO attempts
 
-        def _commit_entry(self, version, buckets, dirname, present,
-                          config):
+        def _commit_entry(self, *a, **k):
             if self.fire:
                 self.fire -= 1
                 rival.apply_mutations(
                     spark.createDataFrame([Row(id=100 + self.fire, v=-1)]),
                     "INSERT_OR_UPDATE")
-            super()._commit_entry(version, buckets, dirname, present,
-                                  config)
+            super()._commit_entry(*a, **k)
 
     t = Contended(spark, path, ["id"])
     with pytest.raises(ConcurrentWriteError):

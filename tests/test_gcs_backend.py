@@ -318,11 +318,12 @@ def test_plane_streams_over_gcs_resumable(spark):
               .withColumn("kb", F.lit(0))
               .repartition(1, F.col("kb"))
               .sortWithinPartitions("kb"))
-        op.write_partitioned(df, "gsrs://bkt/mp", "kb")
+        res = op.write_partitioned(df, "gsrs://bkt/mp", "kb")
         assert emu.resumable_completed >= 1
         schema = T.StructType([T.StructField("id", T.LongType()),
                                T.StructField("s", T.StringType())])
-        back = op.read_parquet(spark, ["gsrs://bkt/mp/kb=0"], schema, b)
+        back = op.read_parquet(spark, list(res.sizes.items()), schema,
+                               b)
         assert back.count() == 10000
         assert back.agg(F.sum("id")).first()[0] == sum(range(10000))
     finally:

@@ -22,8 +22,8 @@ example starts either from an empty created table or from no table at
 all, so the first op always meets an empty table. After every step
 ``read()``, the applied and quarantine counts, and ``read_at`` at every
 retained version equal the model. The same machine runs on a local
-table and, with fewer steps, on the S3 emulator, where every data file
-goes through the object-store plane.
+table and, with fewer steps, on the S3 and GCS emulators, where every
+data file goes through the object-store plane.
 """
 
 import random
@@ -261,4 +261,18 @@ def test_keyedtable_matches_model_on_s3_emulator(spark):
         _run(_machine(spark, "s3model://bkt"), examples=2, steps=4, at=1)
     finally:
         fsio.unregister_object_backend("s3model")
+        emu.stop()
+
+
+def test_keyedtable_matches_model_on_gcs_emulator(spark):
+    from dataflowtemplates_spark.operators.gcshttp import GcsHttpBackend
+    from dataflowtemplates_spark.testing.gcs_emulator import GcsEmulator
+
+    emu = GcsEmulator().start()
+    fsio.register_object_backend(
+        "gsmodel", GcsHttpBackend(emu.endpoint, timeout_s=5.0))
+    try:
+        _run(_machine(spark, "gsmodel://bkt"), examples=2, steps=4, at=2)
+    finally:
+        fsio.unregister_object_backend("gsmodel")
         emu.stop()

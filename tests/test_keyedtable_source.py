@@ -175,3 +175,21 @@ def test_partition_packing_bins_small_objects(spark, s3):
     assert len(_pack_files(sized, 1 << 20, 4)) == 8  # one per file
     assert len(_pack_files([("a", None), ("b", None)],
                            32 << 20, 1)) == 2  # unknown -> own bin
+
+
+def test_scan_lists_log_at_most_twice_and_no_data(spark, s3):
+    """Planning a format scan lists `_log` once per planner call
+    (`schema` and `reader`) and lists no data: the log names every
+    object and its size."""
+    from tests.test_objstore_plane import _count_lists
+
+    emu, _ = s3
+    lists = _count_lists(emu)
+    t = _wide_table(spark, "s3ds://bkt/lc", rows=60, n_buckets=4)
+    t.apply_mutations(spark.range(0, 60, 7).select(
+        F.col("id"), F.lit(-1).alias("v")), "INSERT_OR_UPDATE")
+    del lists[:]
+    got = _fmt(spark, emu, "s3ds://bkt/lc").load()
+    assert sorted(r["id"] for r in got.collect()) == list(range(60))
+    assert lists and all("prefix=lc/_log/" in p for p in lists), lists
+    assert sum("continuation-token" not in p for p in lists) <= 2

@@ -10,6 +10,7 @@ storage-engine invariant (dense log, owner folds, orphan reclaim)
 must hold verbatim when the bytes live behind live HTTP."""
 
 import threading
+from urllib.parse import unquote
 
 import pytest
 from pyspark.sql import Row
@@ -26,10 +27,29 @@ from dataflowtemplates_spark.testing.gcs_emulator import GcsEmulator
 from dataflowtemplates_spark.testing.s3_emulator import S3Emulator
 
 #: LIST requests of one fresh-handle read of a 4-bucket table after an
-#: insert and an upsert (test_read_lists_log_without_is_dir_probes)
-LISTS_PER_READ = 10
+#: insert and an upsert (test_read_lists_log_without_is_dir_probes):
+#: ONE listing of its three log entries, in two of the emulator's
+#: 2-key pages, and no listing of data
+LISTS_PER_READ = 2
 
 SIGV4_CREDS = ("AKIDEXAMPLE", "wJalrXUtnFEMI/K7MDENG+bPxRfiCYEXAMPLEKEY")
+
+
+def _count_lists(emu) -> list[str]:
+    """The decoded path of every LIST request ``emu`` serves from now
+    on. Handlers serve a kept-alive connection for its whole life, so
+    call this before the test's first request."""
+    lists = []
+    base = emu._server.RequestHandlerClass
+
+    def do_GET(self):
+        if "list-type=" in self.path:
+            lists.append(unquote(self.path))
+        return base.do_GET(self)
+
+    emu._server.RequestHandlerClass = type(
+        "ListCounting", (base,), {"do_GET": do_GET})
+    return lists
 
 
 @pytest.fixture()
@@ -81,12 +101,12 @@ def test_full_data_lifecycle_over_live_s3_http(spark, s3):
     assert got[77] == (77.0, None)
     assert got[0] == (0.5, "new")
     assert got[5] == (105.0, None) and got[3] == (3.0, None)
-    # nothing but parquet part objects under published data dirs, with
-    # the deterministic per-partition names
-    names = [k.rsplit("/", 1)[-1]
+    # nothing but one parquet object per bucket under published data
+    # dirs, named by its bucket alone
+    names = [k.split("/data/", 1)[1].split("/", 1)[1]
              for k in backend.list_files("s3pl://bkt/tbl/data")]
-    assert names and all(n.startswith("part-") and
-                         n.endswith(".parquet") for n in names)
+    assert names and all(n.startswith("kb=") and
+                         n.endswith("/part.parquet") for n in names)
 
 
 def test_row_group_cap_and_missing_column_nullfill(spark, s3):
@@ -119,8 +139,8 @@ def test_row_group_cap_and_missing_column_nullfill(spark, s3):
         T.StructField("s", T.StringType()),
         T.StructField("later", T.DoubleType()),  # not in the files
     ])
-    back = op.read_parquet(spark, t._leaf_dirs(t._latest_version()),
-                           wide, backend)
+    back = op.read_parquet(spark, [(f, None) for f in files], wide,
+                           backend)
     assert back.count() == 2000
     assert back.filter(F.col("later").isNull()).count() == 2000
     assert back.agg(F.sum("id")).first()[0] == sum(range(2000))
@@ -147,32 +167,94 @@ def test_plane_objects_carry_no_arrow_schema_blob(spark, s3):
     assert sorted(r.id for r in t.read().collect()) == list(range(100))
 
 
-def test_read_lists_log_without_is_dir_probes(spark, s3):
-    """A read of an S3 table issues one LIST per `_log` listing, with no
-    is_dir probe LIST in front of each (14 LIST requests before)."""
-    emu, _ = s3
-    # handlers serve a kept-alive connection for its whole life: count
-    # from the first request, keep the read's
-    lists = []
-    base = emu._server.RequestHandlerClass
-
-    def do_GET(self):
-        if "list-type=" in self.path:
-            lists.append(self.path)
-        return base.do_GET(self)
-
-    emu._server.RequestHandlerClass = type(
-        "ListCounting", (base,), {"do_GET": do_GET})
+def _lists_table(spark, emu):
+    """A 4-bucket S3 table after an insert and an upsert (three log
+    entries), with every LIST from its creation on counted."""
+    lists = _count_lists(emu)
     t = KeyedTable(spark, "s3pl://bkt/lists", ["id"], n_buckets=4)
     t.apply_mutations(spark.range(0, 40).select(
         F.col("id"), (F.col("id") * 1.5).alias("v")), "INSERT")
     t.apply_mutations(spark.range(0, 40, 5).select(
         F.col("id"), F.lit(-1.0).alias("v")), "INSERT_OR_UPDATE")
+    return t, lists
+
+
+def _log_only(lists) -> bool:
+    return all("prefix=lists/_log/" in p for p in lists)
+
+
+def test_read_lists_log_without_is_dir_probes(spark, s3):
+    """A fresh-handle read or read_at of an S3 table lists `_log` once,
+    with no is_dir probe in front, and lists no data: the log names
+    every object and its size."""
+    emu, _ = s3
+    t, lists = _lists_table(spark, emu)
+    bound = t._commits()[-1]["time"]
     del lists[:]
     rows = KeyedTable(spark, "s3pl://bkt/lists", ["id"]).read().collect()
     assert len(rows) == 40
     assert sum(r.v == -1.0 for r in rows) == 8
-    assert len(lists) <= LISTS_PER_READ, lists
+    assert len(lists) == LISTS_PER_READ and _log_only(lists), lists
+    del lists[:]
+    fresh = KeyedTable(spark, "s3pl://bkt/lists", ["id"])
+    assert fresh.read_at(bound).count() == 40
+    assert len(lists) == LISTS_PER_READ and _log_only(lists), lists
+
+
+def test_upsert_commit_lists_log_once(spark, s3):
+    """A fresh-handle upsert commit lists `_log` once (its base version,
+    config and owner fold all come from that listing) and takes the
+    buckets it staged from the write's result, not from a data
+    LIST."""
+    emu, _ = s3
+    _, lists = _lists_table(spark, emu)
+    del lists[:]
+    KeyedTable(spark, "s3pl://bkt/lists", ["id"]).apply_mutations(
+        spark.range(0, 40, 3).select(
+            F.col("id"), F.lit(-2.0).alias("v")), "INSERT_OR_UPDATE")
+    assert len(lists) == LISTS_PER_READ and _log_only(lists), lists
+    rows = KeyedTable(spark, "s3pl://bkt/lists", ["id"]).read().collect()
+    assert sum(r.v == -2.0 for r in rows) == 14
+
+
+def test_plane_entry_sizes_match_objects(spark, s3):
+    """A plane commit records each staged object's length under
+    `sizes`, and checkpoints fold them beside `owners`: both equal
+    the stored objects' byte lengths."""
+    _, backend = s3
+    path = "s3pl://bkt/sizes"
+    t = KeyedTable(spark, path, ["id"], n_buckets=4)
+    for c in range(9):  # versions 2..10: version 10 checkpoints
+        t.apply_mutations(spark.range(c * 50, c * 50 + 50).select(
+            F.col("id"), F.col("id").cast("string").alias("s")), "INSERT")
+    e = t._commits()[-1]
+    assert sorted(e["present"]) == [0, 1, 2, 3]
+    for b in e["present"]:
+        obj = f"{path}/data/{e['dir']}/kb={b}/part.parquet"
+        assert e["sizes"][str(b)] == len(backend.read_bytes(obj)) > 0
+    ck = t._read_log_json(t._ckpt_path(10))
+    assert ck["sizes"] == e["sizes"]
+    assert ck["owners"] == {str(b): e["dir"] for b in range(4)}
+
+
+def test_sizeless_plane_entry_raises(spark, s3):
+    """The log is the manifest: an object-store entry that names a
+    bucket's object without its size makes the read raise, naming the
+    version, instead of falling back to listing the data."""
+    _, backend = s3
+    path = "s3pl://bkt/nosize"
+    t = KeyedTable(spark, path, ["id"], n_buckets=2)
+    t.apply_mutations(spark.range(0, 10).select(
+        F.col("id"), F.col("id").cast("string").alias("s")), "INSERT")
+    e = t._commits()[-1]
+    v = t._latest_version() + 1
+    dirname = f"v{v:05d}-nosize"
+    backend.write_bytes(
+        f"{path}/data/{dirname}/kb=0/part.parquet",
+        backend.read_bytes(f"{path}/data/{e['dir']}/kb=0/part.parquet"))
+    t._commit_entry(v, [0], dirname, [0], t._config_at(v - 1))
+    with pytest.raises(ValueError, match=f"version {v} "):
+        KeyedTable(spark, path, ["id"]).read()
 
 
 def test_object_names_and_rows_are_pure_function_of_row_multiset(
@@ -268,7 +350,7 @@ def test_plane_native_parity_on_wide_types(spark, s3, tmp_path):
           .withColumn("kb", (F.col("id") % 4).cast("int"))
           .repartition(4, F.col("kb"))
           .sortWithinPartitions("kb"))
-    op.write_partitioned(df, "s3pl://bkt/wide", "kb")
+    res = op.write_partitioned(df, "s3pl://bkt/wide", "kb")
     native_dir = str(tmp_path / "wide_native")
     df.write.partitionBy("kb").parquet(native_dir)
     # declared read schema = what the native reader itself infers
@@ -278,9 +360,8 @@ def test_plane_native_parity_on_wide_types(spark, s3, tmp_path):
         f for f in spark.read.parquet(f"{native_dir}/kb=0").schema.fields
         if f.name != "kb"])
 
-    plane_back = op.read_parquet(
-        spark, [f"s3pl://bkt/wide/kb={i}" for i in range(4)],
-        schema, backend)
+    plane_back = op.read_parquet(spark, list(res.sizes.items()), schema,
+                                 backend)
     native_back = spark.read.schema(schema).parquet(
         *[f"{native_dir}/kb={i}" for i in range(4)])
     assert plane_back.schema == native_back.schema == schema
@@ -303,13 +384,13 @@ def test_plane_streams_large_objects_via_multipart(spark, s3):
     # part, above S3's REAL 5 MiB part floor, so streaming engages
     # without opting the emulator's enforcement down
     df = _entropy_df(spark, 16000)
-    op.write_partitioned(df, "s3pl://bkt/mp", "kb")
+    res = op.write_partitioned(df, "s3pl://bkt/mp", "kb")
     assert emu.multipart_completed >= 1  # streamed, not buffered
     files = backend.list_files("s3pl://bkt/mp")
     assert len(files) == 1  # one object per bucket per task
     schema = T.StructType([T.StructField("id", T.LongType()),
                            T.StructField("s", T.StringType())])
-    back = op.read_parquet(spark, ["s3pl://bkt/mp/kb=0"], schema,
+    back = op.read_parquet(spark, list(res.sizes.items()), schema,
                            backend)
     assert back.count() == 16000
     assert back.agg(F.sum("id")).first()[0] == sum(range(16000))
@@ -511,13 +592,13 @@ def test_complete_response_loss_s3_task_retry_overwrites(spark, s3):
     # the UploadId is consumed/aborted either way — nothing staged
     assert not emu._uploads
     # the task retry: same input, same deterministic names
-    op.write_partitioned(df, "s3pl://bkt/ambc", "kb")
+    res = op.write_partitioned(df, "s3pl://bkt/ambc", "kb")
     assert not emu._uploads
     files = b.list_files("s3pl://bkt/ambc")
     assert len(files) == 1  # overwritten, not duplicated
     schema = T.StructType([T.StructField("id", T.LongType()),
                            T.StructField("s", T.StringType())])
-    back = op.read_parquet(spark, ["s3pl://bkt/ambc/kb=0"], schema, b)
+    back = op.read_parquet(spark, list(res.sizes.items()), schema, b)
     assert back.count() == 10000
     assert back.agg(F.sum("id")).first()[0] == sum(range(10000))
 
@@ -545,13 +626,13 @@ def test_final_chunk_response_loss_gcs_task_retry_overwrites(spark):
         assert not emu._sessions  # consumed by the applied finalize
         #                           and/or aborted by the error path
         assert emu.resumable_completed == 1  # the fault DID apply
-        op.write_partitioned(df, "gsamb://bkt/ambg", "kb")
+        res = op.write_partitioned(df, "gsamb://bkt/ambg", "kb")
         assert not emu._sessions
         files = b.list_files("gsamb://bkt/ambg")
         assert len(files) == 1
         schema = T.StructType([T.StructField("id", T.LongType()),
                                T.StructField("s", T.StringType())])
-        back = op.read_parquet(spark, ["gsamb://bkt/ambg/kb=0"],
+        back = op.read_parquet(spark, list(res.sizes.items()),
                                schema, b)
         assert back.count() == 10000
         assert back.agg(F.sum("id")).first()[0] == sum(range(10000))
@@ -560,36 +641,25 @@ def test_final_chunk_response_loss_gcs_task_retry_overwrites(spark):
         emu.stop()
 
 
-def test_distributed_snapshot_listing_parity(spark, s3, monkeypatch):
-    """A snapshot spanning many commit dirs lists from executor tasks
-    (one per commit dir) instead of serializing the LIST round trips
-    on the driver; the distributed manifest must equal the
-    driver-path manifest exactly, and the read over it must be
-    exact. Threshold forced to 1 so BOTH paths run on the same
-    snapshot; the default read (threshold 8, 10 commit dirs here)
-    takes the distributed path organically too."""
-    from dataflowtemplates_spark.operators import objstore_plane as op
-
-    _, backend = s3
-    t = KeyedTable(spark, "s3pl://bkt/many", ["id"], n_buckets=3)
-    # 10 commits -> 10 live commit dirs (no compaction in between)
-    for c in range(10):
+def test_read_exact_over_many_commit_dirs(spark, s3):
+    """A snapshot whose buckets were last written by many different
+    commits (one commit dir each) reads exactly, from one `_log`
+    listing and no data LIST, across a checkpoint."""
+    emu, _ = s3
+    lists = _count_lists(emu)
+    path = "s3pl://bkt/many"
+    t = KeyedTable(spark, path, ["id"], n_buckets=16)
+    # 12 single-row commits: each rewrites the one bucket its key
+    # hashes into, so the buckets' owners spread over many commits
+    for c in range(12):
         t.apply_mutations(spark.createDataFrame(
-            [Row(id=c * 100 + i, v=float(c)) for i in range(30)]),
-            "INSERT")
-    # leaf dirs straight from the owner fold: the read path's input
-    leaf_dirs = sorted({f.rsplit("/", 1)[0].replace("s3pl://", "")
-                        for f in backend.list_files(
-                            "s3pl://bkt/many/data")})
-    leaf_dirs = [f"s3pl://{d}" for d in leaf_dirs]
-    assert len({d.rsplit("/", 2)[1] for d in leaf_dirs}) == 10
-    driver_files = sorted(op._list_leaf_files(leaf_dirs, backend))
-    monkeypatch.setattr(op, "_DIST_LIST_MIN_DIRS", 1)
-    dist_files = sorted(op._list_leaf_files(leaf_dirs, backend,
-                                            spark))
-    assert dist_files == driver_files and len(dist_files) >= 10
-    # and the full read (which now routes through the distributed
-    # listing) stays exact
-    got = {r["id"]: r["v"] for r in t.read().collect()}
-    assert len(got) == 300
-    assert got[0] == 0.0 and got[905] == 9.0
+            [Row(id=c * 100, v=float(c))]), "INSERT")
+    owners = t._owners(t._latest_version())
+    assert len({d for d in owners.values() if d}) >= 6, owners
+    assert 10 in t._log().ckpts
+    del lists[:]
+    got = {r["id"]: r["v"]
+           for r in KeyedTable(spark, path, ["id"]).read().collect()}
+    assert got == {c * 100: float(c) for c in range(12)}
+    assert lists and all("prefix=many/_log/" in p for p in lists), lists
+    assert sum("continuation-token" not in p for p in lists) == 1

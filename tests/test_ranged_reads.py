@@ -296,6 +296,7 @@ def test_plane_predicate_exact_filter_and_pruning(spark, s3):
     emu, backend = s3
     raw, cols = _wide_parquet_bytes()
     backend.write_bytes("s3rr://b/t/data.parquet", raw)
+    obj = [("s3rr://b/t/data.parquet", len(raw))]
     schema = T.StructType(
         [T.StructField("id", T.LongType()),
          T.StructField("small", T.LongType()),
@@ -304,7 +305,7 @@ def test_plane_predicate_exact_filter_and_pruning(spark, s3):
            for c in range(18)])
 
     emu.object_get_bytes = 0
-    got = op.read_parquet(spark, ["s3rr://b/t"], schema, backend,
+    got = op.read_parquet(spark, obj, schema, backend,
                           columns=["small", "fat00"],
                           predicate=[("id", ">=", 3000),
                                      ("small", "==", 3)]).collect()
@@ -317,23 +318,19 @@ def test_plane_predicate_exact_filter_and_pruning(spark, s3):
     #                                           but is dropped
 
     emu.object_get_bytes = 0
-    op.read_parquet(spark, ["s3rr://b/t"], schema, backend,
+    op.read_parquet(spark, obj, schema, backend,
                     columns=["small", "fat00", "id"]).collect()
     assert pred_bytes * 2 < emu.object_get_bytes  # pruning saved bytes
 
     # evolved column: absent -> null -> matches nothing
-    assert op.read_parquet(spark, ["s3rr://b/t"], schema, backend,
+    assert op.read_parquet(spark, obj, schema, backend,
                            columns=["id"],
                            predicate=[("later", ">=", 0)]).count() == 0
 
     # non-ranged path (columns=None): exact filter, full bytes
-    got2 = op.read_parquet(spark, ["s3rr://b/t"], schema, backend,
+    got2 = op.read_parquet(spark, obj, schema, backend,
                            predicate=[("id", "<", 5)]).collect()
     assert sorted(r["id"] for r in got2) == [0, 1, 2, 3, 4]
-
-    with pytest.raises(ValueError, match="unknown predicate column"):
-        op.read_parquet(spark, ["s3rr://b/t"], schema, backend,
-                        columns=["id"], predicate=[("nope", "==", 1)])
 
 
 def test_keyedtable_predicate_native_vs_plane_parity(spark, s3,
@@ -363,8 +360,12 @@ def test_keyedtable_predicate_native_vs_plane_parity(spark, s3,
     # projection shape: predicate column v is NOT in the output
     got = plane.read(columns=["id", "s"], predicate=pred).columns
     assert got == ["id", "s"]
-    with pytest.raises(ValueError, match="unknown predicate column"):
-        native.read(predicate=[("nope", "==", 1)])
+    # one check of a read's arguments, before any fetch, on both paths
+    for t in (native, plane):
+        with pytest.raises(ValueError, match="unknown predicate column"):
+            t.read(predicate=[("nope", "==", 1)])
+        with pytest.raises(ValueError, match="unsupported predicate op"):
+            t.read(columns=["id"], predicate=[("v", "!=", 1.0)])
 
 
 def test_range_ignoring_server_degrades_to_correct_slices(s3):

@@ -84,28 +84,24 @@ def main() -> None:
             + [T.StructField(f"c{k}", T.StringType())
                for k in range(n_cols)])
 
-        def object_bytes(prefix):
-            return sum(len(backend.read_bytes(f))
-                       for f in backend.list_files(prefix))
-
         # warmup: the first task pays Python-worker spinup + arrow/JIT
         # costs that would bias the timed write
-        op.write_partitioned(df, "s3probe://bkt/warm", "kb")
-        op.read_parquet(spark, ["s3probe://bkt/warm/kb=0"], schema,
+        warm = op.write_partitioned(df, "s3probe://bkt/warm", "kb")
+        op.read_parquet(spark, list(warm.sizes.items()), schema,
                         backend).count()
 
-        dest = "s3probe://bkt/w"
         t0 = time.monotonic()
-        op.write_partitioned(df, dest, "kb")
+        res = op.write_partitioned(df, "s3probe://bkt/w", "kb")
         dt = time.monotonic() - t0
-        nbytes = object_bytes(dest)
+        # the (object, bytes) pairs a commit entry would record
+        objects = list(res.sizes.items())
+        nbytes = sum(n for _, n in objects)
         results["write_MBps"] = nbytes / MB / dt
         results["object_MB"] = nbytes / MB
 
         # whole-object read (all columns)
-        leaf = ["s3probe://bkt/w/kb=0"]
         t0 = time.monotonic()
-        got = op.read_parquet(spark, leaf, schema, backend).count()
+        got = op.read_parquet(spark, objects, schema, backend).count()
         dt = time.monotonic() - t0
         assert got == rows
         results["read_full_MBps"] = results["object_MB"] / dt
@@ -113,7 +109,7 @@ def main() -> None:
         # ranged projected read: 2 of 20 columns
         emu.object_get_bytes = 0
         t0 = time.monotonic()
-        got = op.read_parquet(spark, leaf, schema, backend,
+        got = op.read_parquet(spark, objects, schema, backend,
                               columns=["id", "c3"]).count()
         dt = time.monotonic() - t0
         assert got == rows
